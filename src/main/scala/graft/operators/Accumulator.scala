@@ -253,6 +253,11 @@ final case class AccBatchStatus(
   * takes (lib.ts:699-716) — snapshot and stranded adds both retained,
   * status back to accumulating. The default store keeps the
   * in-memory-only behavior.
+  *
+  * Every public method is `synchronized`, so concurrent callers see
+  * the serializable transitions the reference's mutations give them
+  * (an add is never lost to a racing one); `process` runs under that
+  * lock.
   */
 final class BatchAccumulator[T](
     threshold: Long,
@@ -261,97 +266,100 @@ final class BatchAccumulator[T](
     clock: () => Long = () => System.currentTimeMillis(),
     store: AccStore[T] = AccStore.none[T]) {
 
-  private case class State(seq: Long, buffers: Vector[Dataset[T]], count: Long,
-    lastError: Option[String], openedAt: Long = 0L,
-    status: String = "accumulating",
-    // in-flight snapshot while status == "flushing": the items the
-    // running flush will process; `buffers`/`count` then hold only
-    // the stranded adds that arrived after the flush started
-    inFlight: Vector[Dataset[T]] = Vector.empty, inFlightCount: Long = 0L,
-    // store handles parallel to buffers/inFlight (empty when the
-    // store is in-memory)
-    handles: Vector[String] = Vector.empty,
-    inFlightHandles: Vector[String] = Vector.empty)
-  private val state = mutable.Map.empty[String, State]
+  // The persisted rows ARE the state. While a batch is `flushing`,
+  // `inFlightHandles`/`inFlightCount` hold the snapshot the running
+  // flush processes and `bufferHandles`/`count` the stranded adds.
+  private val batches = mutable.Map.empty[String, AccBatchRow]
+  /** The frame behind each buffered handle: what `writeChunk` returned
+    * or what load-on-construct read back. */
+  private val frames = mutable.Map.empty[String, Dataset[T]]
   private val completed = mutable.ArrayBuffer.empty[AccBatchStatus]
   private val history = mutable.ArrayBuffer.empty[FlushRecord]
-  private val nextChunk = new java.util.concurrent.atomic.AtomicLong(0L)
+  private var nextChunk = 0L
 
   // load-on-construct: rebuild buffers from persisted chunks. A batch
   // persisted as `flushing` was interrupted mid-flush — recover via
   // the failed-flush revert (snapshot + stranded adds retained).
   store.load().foreach { snap =>
-    nextChunk.set(snap.nextChunk)
+    nextChunk = snap.nextChunk
     snap.batches.foreach { b =>
-      val bufs = b.bufferHandles.toVector.map(store.readChunk)
-      val inf = b.inFlightHandles.toVector.map(store.readChunk)
-      state(b.batchId) =
-        if (b.status == "flushing")
-          State(b.seq, inf ++ bufs, b.inFlightCount + b.count,
-            Some("recovered: interrupted flush"), b.openedAt, "accumulating",
-            handles = b.inFlightHandles.toVector ++ b.bufferHandles.toVector)
-        else State(b.seq, bufs, b.count, b.lastError, b.openedAt, b.status,
-          handles = b.bufferHandles.toVector)
+      (b.inFlightHandles ++ b.bufferHandles).foreach(h => frames(h) = store.readChunk(h))
+      batches(b.batchId) =
+        if (b.status == "flushing") revert(b, Some("recovered: interrupted flush")) else b
     }
     completed ++= snap.completed
     history ++= snap.history
   }
 
+  /** The failed-flush revert (lib.ts:699-716): back to `accumulating`
+    * with the snapshot ahead of the stranded adds. */
+  private def revert(b: AccBatchRow, err: Option[String]): AccBatchRow =
+    b.copy(status = "accumulating", lastError = err,
+      count = b.inFlightCount + b.count, inFlightCount = 0L,
+      bufferHandles = b.inFlightHandles ++ b.bufferHandles, inFlightHandles = Nil)
+
   private def checkpoint(): Unit =
-    store.save(AccSnapshot(
-      state.toSeq.sortBy(_._1).map { case (id, st) =>
-        AccBatchRow(id, st.seq, st.status, st.count, st.openedAt, st.lastError,
-          st.inFlightCount, st.handles, st.inFlightHandles)
-      },
-      completed.toSeq, history.toSeq, nextChunk.get()))
+    store.save(AccSnapshot(batches.values.toSeq.sortBy(_.batchId),
+      completed.toSeq, history.toSeq, nextChunk))
+
+  private def dropChunks(handles: Seq[String]): Unit = {
+    frames --= handles
+    store.deleteChunks(handles)
+  }
 
   /** Adds items to the batchId's open batch. During a flush the add is
     * stranded: it lands in the buffer that becomes sequence+1 when the
     * flush completes (lib.ts:635-664). Threshold-triggered flushes
     * never fire mid-flush (doFlushTransition's not_accumulating guard,
     * lib.ts:494-498). */
-  def addItems(batchId: String, items: Dataset[T]): AccBatchStatus = {
-    val n = items.count()
-    val st = state.getOrElse(batchId, State(0, Vector.empty, 0, None, clock()))
-    val opened = if (st.count == 0) clock() else st.openedAt
-    // persist the chunk (no-op for the in-memory store) and buffer
-    // the READ-BACK frame, so live and recovered runs see identical
-    // data by construction
-    val handle = s"chunk-${nextChunk.getAndIncrement()}"
+  def addItems(batchId: String, items: Dataset[T]): AccBatchStatus = synchronized {
+    // persist the chunk (no-op for the in-memory store) and buffer and
+    // count the READ-BACK frame, so live and recovered runs see
+    // identical data by construction and the caller's lineage runs once
+    val handle = s"chunk-$nextChunk"
+    nextChunk += 1
     val persisted = store.writeChunk(handle, items)
-    state(batchId) = st.copy(buffers = st.buffers :+ persisted, count = st.count + n,
-      openedAt = opened, handles = st.handles :+ handle)
+    val n = persisted.count()
+    frames(handle) = persisted
+    val b = batches.getOrElse(batchId,
+      AccBatchRow(batchId, 0, "accumulating", 0, 0L, None, 0, Nil, Nil))
+    batches(batchId) = b.copy(count = b.count + n,
+      openedAt = if (b.count == 0) clock() else b.openedAt,
+      bufferHandles = b.bufferHandles :+ handle)
     checkpoint()
-    if (st.status == "accumulating" && state(batchId).count >= threshold) flush(batchId)
+    if (b.status == "accumulating" && b.count + n >= threshold) flush(batchId)
     getBatchStatus(batchId).get
   }
 
   /** Interval-timer trigger (reference flushIntervalMs, lib.ts:76-83):
     * flushes every batch whose open batch is older than the interval.
     * Call from the host's scheduler tick; returns flushed batchIds. */
-  def tick(): Seq[String] = flushIntervalMs match {
-    case None => Seq.empty
-    case Some(interval) =>
-      val now = clock()
-      state.toSeq.collect {
-        case (id, st) if st.status == "accumulating" && st.count > 0 &&
-          now - st.openedAt >= interval && flush(id) => id
-      }
+  def tick(): Seq[String] = synchronized {
+    flushIntervalMs match {
+      case None => Seq.empty
+      case Some(interval) =>
+        val now = clock()
+        batches.values.toSeq.collect {
+          case b if b.status == "accumulating" && b.count > 0 &&
+            now - b.openedAt >= interval && flush(b.batchId) => b.batchId
+        }
+    }
   }
 
   /** `accumulating → flushing` (doFlushTransition, lib.ts:458-545):
     * snapshots the open items for the in-flight flush and leaves the
     * open buffer empty for stranded adds. False if the batch is empty
     * or a flush is already in flight (not_accumulating). */
-  def beginFlush(batchId: String): Boolean = state.get(batchId) match {
-    case Some(st) if st.status == "accumulating" && st.count > 0 =>
-      state(batchId) = st.copy(status = "flushing",
-        inFlight = st.buffers, inFlightCount = st.count,
-        buffers = Vector.empty, count = 0L,
-        inFlightHandles = st.handles, handles = Vector.empty)
-      checkpoint()
-      true
-    case _ => false
+  def beginFlush(batchId: String): Boolean = synchronized {
+    batches.get(batchId) match {
+      case Some(b) if b.status == "accumulating" && b.count > 0 =>
+        batches(batchId) = b.copy(status = "flushing",
+          inFlightCount = b.count, inFlightHandles = b.bufferHandles,
+          count = 0L, bufferHandles = Nil)
+        checkpoint()
+        true
+      case _ => false
+    }
   }
 
   /** `flushing → completed | accumulating` (executeFlush +
@@ -360,78 +368,77 @@ final class BatchAccumulator[T](
     * once if they already crossed the threshold, lib.ts:648-651); on
     * failure the batch reverts to `accumulating` with the snapshot and
     * the stranded adds both retained. */
-  def completeFlush(batchId: String): Boolean = state.get(batchId) match {
-    case Some(st) if st.status == "flushing" =>
-      val ds = st.inFlight.reduce(_ unionByName _)
-      val t0 = clock()
-      val err =
-        try { process(ds); None }
-        catch { case e: Exception => Some(e.getMessage) }
-      val t1 = clock()
-      history += FlushRecord(batchId, st.seq, st.inFlightCount, t1, t1 - t0, err.isEmpty)
-      if (err.isEmpty) {
-        completed += AccBatchStatus(batchId, st.seq, "completed", st.inFlightCount)
-        state(batchId) = State(st.seq + 1, st.buffers, st.count, None, t1,
-          handles = st.handles)
-        // Persist the reference-free snapshot BEFORE deleting the chunk
-        // files: a crash between the two then only orphans chunks (the
-        // documented safe outcome) — the reverse order could persist a
-        // snapshot whose handles point at already-deleted files, which
-        // load-on-construct cannot recover from.
-        checkpoint()
-        store.deleteChunks(st.inFlightHandles)
-        if (st.count >= threshold) flush(batchId)
-      } else {
-        state(batchId) = st.copy(status = "accumulating",
-          buffers = st.inFlight ++ st.buffers, count = st.inFlightCount + st.count,
-          inFlight = Vector.empty, inFlightCount = 0L,
-          handles = st.inFlightHandles ++ st.handles, inFlightHandles = Vector.empty,
-          lastError = err)
-        checkpoint()
-      }
-      err.isEmpty
-    case _ => false
+  def completeFlush(batchId: String): Boolean = synchronized {
+    batches.get(batchId) match {
+      case Some(b) if b.status == "flushing" =>
+        val ds = b.inFlightHandles.map(frames).reduce(_ unionByName _)
+        val t0 = clock()
+        val err =
+          try { process(ds); None }
+          catch { case e: Exception => Some(e.getMessage) }
+        val t1 = clock()
+        history += FlushRecord(batchId, b.seq, b.inFlightCount, t1, t1 - t0, err.isEmpty)
+        if (err.isEmpty) {
+          completed += AccBatchStatus(batchId, b.seq, "completed", b.inFlightCount)
+          batches(batchId) = AccBatchRow(batchId, b.seq + 1, "accumulating", b.count, t1,
+            None, 0L, b.bufferHandles, Nil)
+          // Persist the reference-free snapshot BEFORE deleting the chunk
+          // files: a crash between the two then only orphans chunks (the
+          // documented safe outcome) — the reverse order could persist a
+          // snapshot whose handles point at already-deleted files, which
+          // load-on-construct cannot recover from.
+          checkpoint()
+          dropChunks(b.inFlightHandles)
+          if (b.count >= threshold) flush(batchId)
+        } else {
+          batches(batchId) = revert(b, err)
+          checkpoint()
+        }
+        err.isEmpty
+      case _ => false
+    }
   }
 
   /** Manual flush (lib.ts:246-279). Returns true iff items were
     * processed successfully; on failure items are retained. */
-  def flush(batchId: String): Boolean =
+  def flush(batchId: String): Boolean = synchronized {
     beginFlush(batchId) && completeFlush(batchId)
+  }
 
   /** The open (or in-flight) batch if any, else the latest completed
     * one. A `flushing` status reports the in-flight item count
     * (getBatchStatus, lib.ts:181-244). */
-  def getBatchStatus(batchId: String): Option[AccBatchStatus] =
-    state.get(batchId).map { st =>
-      if (st.status == "flushing")
-        AccBatchStatus(batchId, st.seq, "flushing", st.inFlightCount)
-      else AccBatchStatus(batchId, st.seq, "accumulating", st.count)
+  def getBatchStatus(batchId: String): Option[AccBatchStatus] = synchronized {
+    batches.get(batchId).map { b =>
+      if (b.status == "flushing") AccBatchStatus(batchId, b.seq, "flushing", b.inFlightCount)
+      else AccBatchStatus(batchId, b.seq, "accumulating", b.count)
     }.orElse(completed.filter(_.batchId == batchId).lastOption)
+  }
 
   /** Every sequence: completed flushes, the in-flight/open batch, and
     * — mid-flush — the stranded adds as the upcoming sequence+1
     * accumulating batch (getAllBatchesForBaseId, lib.ts:246-279). */
-  def getAllBatchesForBaseId(batchId: String): Seq[AccBatchStatus] =
-    (completed.filter(_.batchId == batchId) ++
-      state.get(batchId).flatMap { st =>
-        if (st.status == "flushing")
-          Some(AccBatchStatus(batchId, st.seq, "flushing", st.inFlightCount))
-        else if (st.count > 0)
-          Some(AccBatchStatus(batchId, st.seq, "accumulating", st.count))
-        else None
-      } ++
-      state.get(batchId).filter(st => st.status == "flushing" && st.count > 0)
-        .map(st => AccBatchStatus(batchId, st.seq + 1, "accumulating", st.count))).toSeq
+  def getAllBatchesForBaseId(batchId: String): Seq[AccBatchStatus] = synchronized {
+    completed.filter(_.batchId == batchId).toSeq ++ batches.get(batchId).toSeq.flatMap { b =>
+      if (b.status == "flushing")
+        AccBatchStatus(batchId, b.seq, "flushing", b.inFlightCount) +:
+          Option.when(b.count > 0)(AccBatchStatus(batchId, b.seq + 1, "accumulating", b.count)).toSeq
+      else Option.when(b.count > 0)(AccBatchStatus(batchId, b.seq, "accumulating", b.count)).toSeq
+    }
+  }
 
-  def getFlushHistory(batchId: String): Seq[FlushRecord] =
+  def getFlushHistory(batchId: String): Seq[FlushRecord] = synchronized {
     history.filter(_.batchId == batchId).toSeq
+  }
 
-  /** Drops the accumulating batch and its history (lib.ts:321-360). */
-  def deleteBatch(batchId: String): Unit = {
-    state.get(batchId).foreach(st => store.deleteChunks(st.handles ++ st.inFlightHandles))
-    state -= batchId
+  /** Drops the accumulating batch and its history (lib.ts:321-360).
+    * Checkpoints before deleting the chunk files, as [[completeFlush]]
+    * does: a crash in between only orphans chunks. */
+  def deleteBatch(batchId: String): Unit = synchronized {
+    val dropped = batches.remove(batchId)
     completed.filterInPlace(_.batchId != batchId)
     history.filterInPlace(_.batchId != batchId)
     checkpoint()
+    dropped.foreach(b => dropChunks(b.bufferHandles ++ b.inFlightHandles))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.util.Try
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** Durable driver control-plane state — parity with the reference's
@@ -16,29 +17,61 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * reference parks items in tables too) to parquet on every
   * checkpoint-able transition, with load-on-construct.
   *
+  * Layout: each store's control rows are write-once generations,
+  * `<dir>/gen-<n>` (the iterator's job rows; the accumulator's one
+  * [[AccSnapshot]] row under `<dir>/control/`). A save writes the whole
+  * row set as one parquet write into `gen-<n>.tmp` and renames it to
+  * `gen-<n>`: the rename is the commit point, as one Convex mutation
+  * commits atomically. A driver that dies inside a save leaves the
+  * previous generation loadable; load reads the highest committed
+  * generation and ignores `.tmp` leftovers, which the next save sweeps
+  * along with the superseded generations.
+  *
   * The writes are tiny (control rows; item chunks are whatever the
   * caller buffered) and happen at batch boundaries — the same cadence
   * the reference commits its mutations at. A cluster deploy points
-  * `dir` at durable shared storage; the default [[IterStateStore.none]]
-  * / [[AccStore.none]] keep the previous in-memory-only behavior. */
+  * `dir` at durable shared storage whose directory rename is atomic
+  * (HDFS, local disk); the default [[IterStateStore.none]] /
+  * [[AccStore.none]] keep the in-memory-only behavior. */
 
-/** Persistable iterator-job row ([[TableIterator]] internal state;
-  * mirrors the reference iteratorJobs table, schema.ts:34-55). */
+/** Persistable iterator-job row ([[TableIterator]] state; mirrors the
+  * reference iteratorJobs table, schema.ts:34-55). */
 final case class IterJobRow(
   jobId: String, status: String, processedCount: Long, cursor: Option[Long],
   batchesDone: Long, retries: Long, lastRunAt: Long, boundaries: Seq[Long])
 
-/** Path-existence probe shared by the parquet stores (Hadoop FS, so
-  * it answers for whatever durable storage `dir` points at). */
-private[operators] object ControlPlaneFs {
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+/** Write-once generations of one row set under `dir` (layout above). */
+private[operators] final class Snapshots[A: Encoder](spark: SparkSession, dir: String) {
+  private val root = new Path(dir)
+  private def fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val Committed = """gen-(\d+)""".r
+
+  private def entries: Seq[String] =
+    if (!fs.exists(root)) Nil else fs.listStatus(root).toSeq.map(_.getPath.getName)
+  private def generations: Seq[Long] = entries.collect { case Committed(n) => n.toLong }
+
+  def save(rows: Seq[A]): Unit = {
+    val n = generations.maxOption.fold(0L)(_ + 1)
+    val tmp = new Path(root, s"gen-$n.tmp")
+    fs.delete(tmp, true) // a leftover of an interrupted save
+    spark.createDataset(rows).coalesce(1).write.parquet(tmp.toString)
+    if (!fs.rename(tmp, new Path(root, s"gen-$n")))
+      throw new java.io.IOException(s"could not commit $tmp")
+    entries.filter(e => e != s"gen-$n" && e.startsWith("gen-"))
+      .foreach(e => fs.delete(new Path(root, e), true))
+  }
+
+  // No generation = fresh run → None. An UNREADABLE generation must
+  // propagate: swallowing it would silently restart every multi-hour
+  // job from cursor 0, re-running all process() side effects — the
+  // worst possible answer to a corrupt checkpoint.
+  def load(): Option[Seq[A]] = generations.maxOption.map { n =>
+    spark.read.parquet(s"$dir/gen-$n").as[A].collect().toSeq
   }
 }
 
 trait IterStateStore {
-  /** Overwrite the full job snapshot (O(#jobs × #chunks) longs). */
+  /** Replace the full job snapshot (O(#jobs × #chunks) longs). */
   def save(rows: Seq[IterJobRow]): Unit
   /** The persisted snapshot, if any (None on first run). */
   def load(): Option[Seq[IterJobRow]]
@@ -52,20 +85,13 @@ object IterStateStore {
   }
 
   /** Parquet-backed job state at `dir` (a durable shared path on a
-    * cluster). Each save overwrites the snapshot — last committed
+    * cluster). Each save commits a new generation — last committed
     * transition wins, exactly the reference's row-update semantics. */
   def parquet(spark: SparkSession, dir: String): IterStateStore = new IterStateStore {
     import spark.implicits._
-    private val path = s"$dir/iter_jobs"
-    def save(rows: Seq[IterJobRow]): Unit =
-      spark.createDataset(rows).coalesce(1).write.mode("overwrite").parquet(path)
-    // Absent snapshot = fresh run → None. An UNREADABLE snapshot must
-    // propagate: swallowing it would silently restart every
-    // multi-hour job from cursor 0, re-running all process() side
-    // effects — the worst possible answer to a corrupt checkpoint.
-    def load(): Option[Seq[IterJobRow]] =
-      if (!ControlPlaneFs.exists(spark, path)) None
-      else Some(spark.read.parquet(path).as[IterJobRow].collect().toSeq)
+    private val snaps = new Snapshots[IterJobRow](spark, dir)
+    def save(rows: Seq[IterJobRow]): Unit = snaps.save(rows)
+    def load(): Option[Seq[IterJobRow]] = snaps.load()
   }
 }
 
@@ -103,14 +129,17 @@ object AccStore {
     def load(): Option[AccSnapshot] = None
   }
 
-  /** Parquet-backed accumulator state at `dir`: control rows under
+  /** Parquet-backed accumulator state at `dir`: the snapshot row under
     * `control/`, item chunks under `chunks/<handle>`. Items are
     * persisted because durability REQUIRES it — a lazy Dataset's
     * lineage dies with the driver; the reference stores items in its
-    * batches table for the same reason (lib.ts:24-109). */
+    * batches table for the same reason (lib.ts:24-109). Chunk writes
+    * overwrite: after a crash, a recovered `nextChunk` may reuse the
+    * handle of an orphaned chunk that no snapshot references. */
   def parquet[T](spark: SparkSession, dir: String)(implicit enc: Encoder[T]): AccStore[T] =
     new AccStore[T] {
       import spark.implicits._
+      private val snaps = new Snapshots[AccSnapshot](spark, s"$dir/control")
       private def chunkPath(h: String) = s"$dir/chunks/$h"
       def writeChunk(handle: String, items: Dataset[T]): Dataset[T] = {
         items.write.mode("overwrite").parquet(chunkPath(handle))
@@ -121,45 +150,11 @@ object AccStore {
       def deleteChunks(handles: Seq[String]): Unit = {
         val conf = spark.sparkContext.hadoopConfiguration
         handles.foreach { h =>
-          val p = new org.apache.hadoop.fs.Path(chunkPath(h))
+          val p = new Path(chunkPath(h))
           Try(p.getFileSystem(conf).delete(p, true))
         }
       }
-      def save(snap: AccSnapshot): Unit = {
-        // next_chunk FIRST: it only ever increases, and it is the
-        // chunk-handle allocator. A crash between the writes then
-        // leaves a recovered nextChunk ≥ the true one — fresh handles
-        // are SKIPPED, never reused, so a torn snapshot can orphan a
-        // chunk but can never overwrite one a persisted batch row
-        // still references (writing it last inverted that: stale-low
-        // nextChunk + newer batches = silent chunk clobbering inside
-        // the crash-recovery feature itself).
-        spark.createDataset(Seq(snap.nextChunk)).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/control/next_chunk")
-        spark.createDataset(snap.batches).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/control/batches")
-        spark.createDataset(snap.completed).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/control/completed")
-        spark.createDataset(snap.history).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/control/history")
-      }
-      // Absent control dir = fresh run. Unreadable state PROPAGATES
-      // (see IterStateStore.load — a corrupt checkpoint must fail
-      // loudly, not masquerade as a first run); an absent subtable
-      // with next_chunk present is the documented torn-save window
-      // and rolls back to the previous committed rows.
-      def load(): Option[AccSnapshot] =
-        if (!ControlPlaneFs.exists(spark, s"$dir/control/next_chunk")) None
-        else {
-          val next = spark.read.parquet(s"$dir/control/next_chunk").as[Long].head()
-          def tbl[A: Encoder](p: String): Seq[A] = {
-            val full = s"$dir/control/$p"
-            if (!ControlPlaneFs.exists(spark, full)) Seq.empty
-            else spark.read.parquet(full).as[A].collect().toSeq
-          }
-          Some(AccSnapshot(
-            tbl[AccBatchRow]("batches"), tbl[AccBatchStatus]("completed"),
-            tbl[FlushRecord]("history"), next))
-        }
+      def save(snap: AccSnapshot): Unit = snaps.save(Seq(snap))
+      def load(): Option[AccSnapshot] = snaps.load().map(_.head)
     }
 }

@@ -1230,14 +1230,10 @@ object Dedup {
       // materializing job (an eager checkpoint + separate count was
       // two)
       val next = jumped.localCheckpoint(false)
-      val t0 = System.nanoTime()
       val nextSig = sig(next)
       changed = nextSig.compareTo(prevSig) != 0
       prevSig = nextSig
       labels = next
-      if (sys.env.contains("GRAFT_LOOP_DEBUG"))
-        System.err.println(f"[clusters] round ${rounds + 1} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.3f s changed=$changed")
       // Dataset.unpersist is a no-op for localCheckpoint blocks —
       // free the RDD-level storage behind the superseded snapshot
       org.apache.spark.sql.classic.GraftPlans.unpersistLocalCheckpoint(prev)

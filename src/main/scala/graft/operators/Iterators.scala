@@ -162,7 +162,8 @@ final case class IterJobStatus(
   * persisted cursor — parity with the reference's iteratorJobs table
   * (schema.ts:34-55; updateJobProgress lib.ts:1073-1087 commits at
   * the same batch-boundary cadence). The default store keeps the
-  * in-memory-only behavior.
+  * in-memory-only behavior. Every public method that reads or moves a
+  * job is `synchronized`, as in [[BatchAccumulator]].
   */
 final class TableIterator(
     df: DataFrame,
@@ -176,23 +177,14 @@ final class TableIterator(
     clock: () => Long = () => System.currentTimeMillis(),
     store: IterStateStore = IterStateStore.none) {
 
-  private case class Job(
-    var status: String, var processedCount: Long, var cursor: Option[Long],
-    var batchesDone: Long, var retries: Long, var lastRunAt: Long,
-    boundaries: Array[Long])
-  private val jobs = mutable.LinkedHashMap.empty[String, Job]
+  private val jobs = mutable.LinkedHashMap.empty[String, IterJobRow]
 
   // load-on-construct: resume persisted jobs (cursor, counts, status)
-  store.load().foreach(_.foreach { r =>
-    jobs(r.jobId) = Job(r.status, r.processedCount, r.cursor,
-      r.batchesDone, r.retries, r.lastRunAt, r.boundaries.toArray)
-  })
+  store.load().foreach(_.foreach(r => jobs(r.jobId) = r))
 
-  private def checkpoint(): Unit =
-    store.save(jobs.toSeq.map { case (id, j) =>
-      IterJobRow(id, j.status, j.processedCount, j.cursor,
-        j.batchesDone, j.retries, j.lastRunAt, j.boundaries.toSeq)
-    })
+  private def put(j: IterJobRow): IterJobRow = { jobs(j.jobId) = j; j }
+  private def checkpoint(): Unit = store.save(jobs.values.toSeq)
+  private def save(j: IterJobRow): Unit = { put(j); checkpoint() }
 
   /** Backoff for the nth retry: 1s, 2s, 4s, … capped at 30s
     * (lib.ts:1018-1029). */
@@ -202,7 +194,7 @@ final class TableIterator(
     * job; O(#chunks) driver memory). The job starts `pending`
     * (reference JobStatus, client/index.ts:9, validator lib.ts:893) —
     * the first [[step]] transitions it to `running`. */
-  def start(jobId: String): IterJobStatus = {
+  def start(jobId: String): IterJobStatus = synchronized {
     // boundary keys: every batchSize-th key, ascending; the final
     // (partial) chunk is open-ended.
     val bRows = Ranks.globalRowNumber(df.select(col(keyCol)), col(keyCol),
@@ -211,12 +203,11 @@ final class TableIterator(
       .select(col(keyCol).cast("long"))
       .orderBy(col(keyCol))
       .collect().map(_.getLong(0))
-    jobs(jobId) = Job("pending", 0, None, 0, 0, clock(), bRows)
-    checkpoint()
+    save(IterJobRow(jobId, "pending", 0, None, 0, 0, clock(), bRows.toSeq))
     status(jobId).get
   }
 
-  private def chunkFilter(j: Job): Option[Column] = {
+  private def chunkFilter(j: IterJobRow): Option[Column] = {
     val done = j.batchesDone.toInt
     val lo = j.cursor
     if (done < j.boundaries.length) {
@@ -233,76 +224,81 @@ final class TableIterator(
   /** Processes one batch with retry/backoff. Returns false when the
     * job cannot advance (done, paused, cancelled, failed). A `pending`
     * job transitions to `running` on its first step. */
-  def step(jobId: String): Boolean = jobs.get(jobId) match {
-    case Some(j) if j.status == "pending" || j.status == "running" =>
-      j.status = "running"
-      chunkFilter(j) match {
-        case None => complete(jobId, j); false
-        case Some(f) =>
-          val chunk = df.filter(f)
-          val n = chunk.count()
-          if (n == 0) { complete(jobId, j); false }
-          else {
-            var attempt = 0
-            var ok = false
-            while (!ok && attempt <= maxRetries) {
-              try { process(chunk); ok = true }
-              catch { case _: Exception =>
-                if (attempt == maxRetries) {
-                  j.status = "failed"; j.lastRunAt = clock(); checkpoint(); return false
+  def step(jobId: String): Boolean = synchronized {
+    jobs.get(jobId) match {
+      case Some(j0) if j0.status == "pending" || j0.status == "running" =>
+        var j = put(j0.copy(status = "running"))
+        chunkFilter(j) match {
+          case None => complete(j); false
+          case Some(f) =>
+            val chunk = df.filter(f)
+            // count and cursor in one job, before process: the chunk is
+            // an immutable key range, so both equal their post-process
+            // values
+            val r = chunk.agg(count(lit(1)), max(col(keyCol)).cast("long")).head
+            val n = r.getLong(0)
+            if (n == 0) { complete(j); false }
+            else {
+              var attempt = 0
+              var ok = false
+              while (!ok && attempt <= maxRetries) {
+                try { process(chunk); ok = true }
+                catch { case _: Exception =>
+                  if (attempt < maxRetries) {
+                    sleeper(backoffMs(attempt)); j = put(j.copy(retries = j.retries + 1))
+                  }
+                  attempt += 1
                 }
-                sleeper(backoffMs(attempt)); attempt += 1; j.retries += 1
               }
+              if (!ok) save(j.copy(status = "failed", lastRunAt = clock()))
+              else {
+                save(j.copy(processedCount = j.processedCount + n, cursor = Some(r.getLong(1)),
+                  batchesDone = j.batchesDone + 1, lastRunAt = clock()))
+                // throttle between batches (reference delayBetweenBatchesMs,
+                // lib.ts — rate-limits the downstream consumer)
+                if (delayBetweenBatchesMs > 0) sleeper(delayBetweenBatchesMs)
+              }
+              ok
             }
-            val cursor = chunk.agg(max(col(keyCol)).cast("long")).head.getLong(0)
-            j.processedCount += n; j.cursor = Some(cursor)
-            j.batchesDone += 1; j.lastRunAt = clock()
-            checkpoint()
-            // throttle between batches (reference delayBetweenBatchesMs,
-            // lib.ts — rate-limits the downstream consumer)
-            if (delayBetweenBatchesMs > 0) sleeper(delayBetweenBatchesMs)
-            true
-          }
-      }
-    case _ => false
+        }
+      case _ => false
+    }
   }
 
-  private def complete(jobId: String, j: Job): Unit = {
-    j.status = "completed"; j.lastRunAt = clock(); checkpoint(); onComplete(jobId)
+  private def complete(j: IterJobRow): Unit = {
+    save(j.copy(status = "completed", lastRunAt = clock())); onComplete(j.jobId)
   }
 
   /** Runs until completion, pause, cancel, or failure. */
-  def runAll(jobId: String): IterJobStatus = {
+  def runAll(jobId: String): IterJobStatus = synchronized {
     while (step(jobId)) {}
     status(jobId).get
   }
 
-  def pause(jobId: String): Unit =
-    jobs.get(jobId).filter(_.status == "running").foreach { j =>
-      j.status = "paused"; checkpoint()
-    }
+  private def transition(jobId: String, from: Set[String], to: String): Unit =
+    jobs.get(jobId).filter(j => from(j.status)).foreach(j => save(j.copy(status = to)))
 
-  def resume(jobId: String): Unit =
-    jobs.get(jobId).filter(_.status == "paused").foreach { j =>
-      j.status = "running"; checkpoint()
-    }
+  def pause(jobId: String): Unit = synchronized { transition(jobId, Set("running"), "paused") }
 
-  def cancel(jobId: String): Unit =
-    jobs.get(jobId)
-      .filter(j => j.status == "pending" || j.status == "running" || j.status == "paused")
-      .foreach { j => j.status = "cancelled"; checkpoint() }
+  def resume(jobId: String): Unit = synchronized { transition(jobId, Set("paused"), "running") }
 
-  def status(jobId: String): Option[IterJobStatus] = jobs.get(jobId).map(j =>
-    IterJobStatus(jobId, j.status, j.processedCount, j.cursor,
+  def cancel(jobId: String): Unit = synchronized {
+    transition(jobId, Set("pending", "running", "paused"), "cancelled")
+  }
+
+  def status(jobId: String): Option[IterJobStatus] = synchronized {
+    jobs.get(jobId).map(j => IterJobStatus(jobId, j.status, j.processedCount, j.cursor,
       j.batchesDone, j.retries, j.lastRunAt))
+  }
 
   /** listIteratorJobs (lib.ts:889-924): optionally filtered by
     * status, optionally limited. */
-  def list(statusFilter: Option[String] = None, limit: Option[Int] = None): Seq[IterJobStatus] = {
-    val all = jobs.keys.toSeq.flatMap(status)
-    val filtered = statusFilter.fold(all)(f => all.filter(_.status == f))
-    limit.fold(filtered)(filtered.take)
-  }
+  def list(statusFilter: Option[String] = None, limit: Option[Int] = None): Seq[IterJobStatus] =
+    synchronized {
+      val all = jobs.keys.toSeq.flatMap(status)
+      val filtered = statusFilter.fold(all)(f => all.filter(_.status == f))
+      limit.fold(filtered)(filtered.take)
+    }
 
-  def delete(jobId: String): Unit = { jobs -= jobId; checkpoint() }
+  def delete(jobId: String): Unit = synchronized { jobs -= jobId; checkpoint() }
 }

@@ -148,16 +148,109 @@ class DurableControlPlaneSpec extends SparkSpec {
       extends AccStore[java.lang.Long] {
     var dieOnDelete = false
     var dieOnSave = false
+    /** Throw instead of making the store call with this index. */
+    var dieAt = -1
+    /** The API method in progress, recorded with each store call. */
+    var api = ""
+    val calls = collection.mutable.Buffer.empty[(String, String)]
+    private def call[A](name: String, die: Boolean)(body: => A): A = {
+      calls += ((api, name))
+      if (die || calls.size - 1 == dieAt) throw new RuntimeException(s"died before $name")
+      body
+    }
     def writeChunk(h: String, items: Dataset[java.lang.Long]): Dataset[java.lang.Long] =
-      real.writeChunk(h, items)
+      call("writeChunk", die = false)(real.writeChunk(h, items))
     def readChunk(h: String): Dataset[java.lang.Long] = real.readChunk(h)
-    def deleteChunks(hs: Seq[String]): Unit =
-      if (dieOnDelete) throw new RuntimeException("died before chunk GC")
-      else real.deleteChunks(hs)
-    def save(s: graft.operators.AccSnapshot): Unit =
-      if (dieOnSave) throw new RuntimeException("died before checkpoint")
-      else real.save(s)
+    def deleteChunks(hs: Seq[String]): Unit = call("deleteChunks", dieOnDelete)(real.deleteChunks(hs))
+    def save(s: graft.operators.AccSnapshot): Unit = call("save", dieOnSave)(real.save(s))
     def load(): Option[graft.operators.AccSnapshot] = real.load()
+  }
+
+  test("a crash at any store call of an add, a flush or a deleteBatch loses no item and buffers none twice") {
+    // One script reaches every store call addItems, beginFlush,
+    // completeFlush and deleteBatch make: a manual flush of `a` with a
+    // stranded add, a threshold flush of `a` inside addItems, and the
+    // deletion of `b`. Each case dies at one call, then restarts. Every
+    // item of an add that returned must come back processed or
+    // buffered (at-least-once), unless its batch was being deleted.
+    /** Runs the script dying at store call `dieAt` (-1: never), restarts,
+      * and returns the store calls made and what the restart got wrong. */
+    def crashAt(dieAt: Int): (Seq[(String, String)], Option[String]) = {
+      val dir = tmp("graft-acc-crashpoint")
+      val processed, buffered, acked = collection.mutable.Buffer.empty[Long]
+      val store = new CrashableStore(accStore(dir))
+      store.dieAt = dieAt
+      val a = new BatchAccumulator[java.lang.Long](threshold = 20,
+        process = ds => processed ++= ds.collect().map(Long.unbox),
+        clock = () => 7L, store = store)
+      def op(name: String)(body: => Any): Unit = { store.api = name; body }
+      def add(id: String, lo: Long, hi: Long): Unit =
+        op("addItems") { a.addItems(id, items(lo, hi)); acked ++= (lo until hi) }
+      val died = scala.util.Try {
+        add("a", 0, 10)
+        add("b", 10, 14)
+        op("beginFlush")(a.beginFlush("a"))
+        add("a", 14, 20)
+        op("completeFlush")(a.completeFlush("a"))
+        add("a", 20, 40)
+        op("deleteBatch")(a.deleteBatch("b"))
+      }.isFailure
+      val deleted = if (store.api == "deleteBatch") (10L until 14L).toSet else Set.empty[Long]
+      val problem = scala.util.Try {
+        val b = new BatchAccumulator[java.lang.Long](threshold = 1000,
+          process = ds => buffered ++= ds.collect().map(Long.unbox),
+          clock = () => 7L, store = accStore(dir))
+        val counted = Seq("a", "b").flatMap(b.getBatchStatus)
+          .filter(_.status == "accumulating").map(_.itemCount).sum
+        Seq("a", "b").foreach(b.flush)
+        counted
+      } match {
+        case scala.util.Failure(e) => Some(s"restart threw $e")
+        case scala.util.Success(counted) =>
+          val missing = acked.toSet -- deleted -- processed -- buffered
+          if (died != (dieAt >= 0)) Some(s"died=$died")
+          else if (missing.nonEmpty) Some(s"lost ${missing.toSeq.sorted}")
+          else if (buffered.distinct.size != buffered.size) Some(s"buffered twice: ${buffered.sorted}")
+          else if (counted != buffered.size) Some(s"status counts $counted, buffers ${buffered.size}")
+          else None
+      }
+      (store.calls.toSeq, problem)
+    }
+    val (calls, clean) = crashAt(-1)
+    assert(clean.isEmpty, clean)
+    val expected = Set("addItems" -> "writeChunk", "addItems" -> "save", "addItems" -> "deleteChunks",
+      "beginFlush" -> "save", "completeFlush" -> "save", "completeFlush" -> "deleteChunks",
+      "deleteBatch" -> "save", "deleteBatch" -> "deleteChunks")
+    assert(expected.subsetOf(calls.toSet), calls)
+    val failures = calls.indices.flatMap { i =>
+      crashAt(i)._2.map(p => s"crash before call $i ${calls(i)}: $p")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("concurrent addItems to one batchId lose no add, and a restart sees the same state") {
+    val dir = tmp("graft-acc-concurrent")
+    val flushed = collection.mutable.Buffer.empty[Long]
+    def make() = new BatchAccumulator[java.lang.Long](
+      threshold = 1000, process = ds => flushed ++= ds.collect().map(Long.unbox),
+      clock = () => 7L, store = accStore(dir))
+    val a = make()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val adds = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 3).foreach { k =>
+            val lo = (t * 3 + k) * 10L
+            a.addItems("b", items(lo, lo + 10))
+          }
+        })
+      }
+      adds.foreach(_.get())
+    } finally pool.shutdown()
+    assert(a.getBatchStatus("b").get.itemCount == 120)
+    val b = make()
+    assert(b.getAllBatchesForBaseId("b") == a.getAllBatchesForBaseId("b"))
+    assert(b.flush("b") && flushed.sorted == (0L until 120L))
   }
 
   test("crash between post-flush checkpoint and chunk GC: snapshot stays recoverable") {
@@ -280,28 +373,36 @@ class DurableControlPlaneSpec extends SparkSpec {
     // corrupt the snapshot in place: the next load must THROW — a
     // swallowed error here silently re-runs a multi-hour job's side
     // effects from zero
-    val f = new java.io.File(s"$dir/iter_jobs")
-    f.listFiles().filter(_.getName.endsWith(".parquet"))
+    newestGeneration(dir).listFiles().filter(_.getName.endsWith(".parquet"))
       .foreach(p => Files.write(p.toPath, Array[Byte](1, 2, 3)))
     intercept[Exception] { store.load() }
   }
 
-  test("a torn accumulator save can orphan a chunk but never reuse a referenced handle") {
-    val s = spark; import s.implicits._
+  /** The highest committed `gen-<n>` directory of a snapshot store. */
+  private def newestGeneration(dir: String): java.io.File =
+    new java.io.File(dir).listFiles().filter(_.getName.matches("gen-\\d+"))
+      .maxBy(_.getName.stripPrefix("gen-").toLong)
+
+  test("a save interrupted before its rename leaves the previous generation loadable") {
     val dir = tmp("graft-acc-torn")
-    val store = AccStore.parquet[java.lang.Long](s, dir)
-    store.save(graft.operators.AccSnapshot(Seq.empty, Seq.empty, Seq.empty, 5L))
-    // simulate the crash window: next_chunk committed, batches not —
-    // recovery must still see nextChunk = 5 (handles 0-4 burned), so
-    // fresh chunks can never clobber one an older row references
-    val b = new java.io.File(s"$dir/control/batches")
-    def del(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles().foreach(del); x.delete()
-    }
-    if (b.exists()) del(b)
+    val store = accStore(dir)
+    val row = graft.operators.AccBatchRow(
+      "b", 3L, "accumulating", 2L, 7L, None, 0L, Seq("chunk-4"), Nil)
+    store.save(graft.operators.AccSnapshot(Seq(row), Seq.empty, Seq.empty, 5L))
+    // the driver dies inside the next save, before its rename: the
+    // write left a partial gen-<n+1>.tmp with a garbage part file and
+    // the writer's _temporary/
+    val control = new java.io.File(s"$dir/control")
+    val n = newestGeneration(control.getPath).getName.stripPrefix("gen-").toLong
+    val partial = new java.io.File(control, s"gen-${n + 1}.tmp")
+    assert(new java.io.File(partial, "_temporary/0").mkdirs())
+    Files.write(new java.io.File(partial, "part-00000.snappy.parquet").toPath, Array[Byte](1, 2, 3))
     val snap = store.load().get
-    assert(snap.nextChunk == 5L, s"allocator must never roll back: $snap")
-    assert(snap.batches.isEmpty)
+    assert(snap.nextChunk == 5L && snap.batches == Seq(row), snap)
+    // the next save commits over the leftover and sweeps both
+    store.save(graft.operators.AccSnapshot(Seq.empty, Seq.empty, Seq.empty, 6L))
+    assert(store.load().get.nextChunk == 6L)
+    assert(control.list().filter(_.startsWith("gen-")).toSeq == Seq(s"gen-${n + 1}"))
   }
 
   test("writeBucketedOnce rebuilds when the same table is asked for a DIFFERENT dataset") {
