@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.GraftExpressions
+import graft.sources.{GraftLocalFileSystem, GraftLocalFs}
 
 /** Session factory with the engine's tuned defaults.
   *
@@ -13,6 +14,12 @@ import graft.functions.GraftExpressions
   *   - shuffle.partitions sized to cores locally (a cluster deploy
   *     overrides via spark-submit; AQE coalesces either way).
   *   - UTC session time zone so results are environment-independent.
+  *   - `file://` served by [[graft.sources.LocalFs]]: without the
+  *     native-hadoop library, Hadoop's own local file system launches
+  *     a `chmod` process per file create or mkdir and four `readlink`
+  *     processes per `FileContext.rename`, and state-store commits,
+  *     checkpoint logs and parquet commits wait on them. LocalFs keeps
+  *     its checksums, permissions and atomic rename without forking.
   */
 object GraftSession {
 
@@ -42,6 +49,8 @@ object GraftSession {
       // reader rejects; read as long and convert in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
 
   /** Local session for tests and ad-hoc runs. */
   def local(cores: Int = 4, appName: String = "graft"): SparkSession = {

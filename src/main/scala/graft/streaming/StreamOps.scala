@@ -862,12 +862,18 @@ object StreamOps {
 
   def runAttributionToCompletion(s: SparkSession, dir: String,
       sink: String = "stream_attrib"): DataFrame = {
-    // a stream-stream join carries FOUR state stores per partition
-    // per side; at local scale the fixed store open/commit cost
-    // dominates, so the state partition count (pinned at the first
-    // batch from shuffle.partitions) is lowered for this query. On a
-    // cluster the deploy sets it to the executor count — the knob,
-    // not the value, is the point. Results are partition-invariant.
+    // a stream-stream join keeps TWO state stores per side per
+    // partition (keyToNumValues, keyWithIndexToValue): 4 per
+    // partition, 16 store instances at 4 state partitions. Each store
+    // commits a delta file every micro-batch, so commit cost grows
+    // with the partition count, not the rows: at sf0.01 on 4 cores
+    // the 16 commits of one micro-batch sum to 45-130 ms of task time
+    // (with graft.sources.LocalFs; Hadoop's forking local file system
+    // made it 1.0-1.25 s). The state partition count (pinned at the
+    // first batch from shuffle.partitions) is therefore capped for
+    // this query. On a cluster the deploy sets it to the executor
+    // count — the knob, not the value, is the point. Results are
+    // partition-invariant.
     val key = "spark.sql.shuffle.partitions"
     val orig = s.conf.get(key)
     val q = try {
@@ -918,7 +924,8 @@ object StreamOps {
 
   def runAttributionOuterToCompletion(s: SparkSession, dir: String,
       sink: String = "stream_attrib_outer"): DataFrame = {
-    // same state-partition knob rationale as the inner variant
+    // same state-partition cap as the inner variant: 4 state stores
+    // per partition, each committing every micro-batch
     val key = "spark.sql.shuffle.partitions"
     val orig = s.conf.get(key)
     val q = try {
