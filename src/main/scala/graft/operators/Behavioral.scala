@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Agg._
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** §2.10 Behavioral, time-series & incremental analytics.
   *
@@ -499,7 +499,7 @@ object Behavioral {
     * prunes date partitions. */
   private def eventsSlice(s: SparkSession, dir: String, since: Boolean): DataFrame = {
     import s.implicits._
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Parquet.read(s, s"$dir/events.parquet")
     val sliced =
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType) {
         val nsCut = cutoffUs * 1000L

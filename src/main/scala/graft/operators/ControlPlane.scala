@@ -5,6 +5,8 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
+import graft.sources.Parquet
+
 /** Durable driver control-plane state — parity with the reference's
   * Convex-table persistence (reference: src/component/schema.ts:1-72,
   * lib.ts:1073-1119). The reference's accumulator batches and
@@ -66,7 +68,7 @@ private[operators] final class Snapshots[A: Encoder](spark: SparkSession, dir: S
   // job from cursor 0, re-running all process() side effects — the
   // worst possible answer to a corrupt checkpoint.
   def load(): Option[Seq[A]] = generations.maxOption.map { n =>
-    spark.read.parquet(s"$dir/gen-$n").as[A].collect().toSeq
+    Parquet.read(spark, s"$dir/gen-$n").as[A].collect().toSeq
   }
 }
 
@@ -146,7 +148,7 @@ object AccStore {
         readChunk(handle)
       }
       def readChunk(handle: String): Dataset[T] =
-        spark.read.parquet(chunkPath(handle)).as[T]
+        Parquet.read(spark, chunkPath(handle)).as[T]
       def deleteChunks(handles: Seq[String]): Unit = {
         val conf = spark.sparkContext.hadoopConfiguration
         handles.foreach { h =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Ranks
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** §2.9 Data-layout optimization.
   *
@@ -358,7 +358,7 @@ object Layout {
     // can't infer a schema — an empty source short-circuits to the
     // same (empty) frame the partitioned scan would produce
     if (ev.isEmpty) ev.filter(col("event_type").isin("purchase", "click"))
-    else s.read.parquet(s"${stagePartitioned(s, dir)}/events_by_type")
+    else Parquet.read(s, s"${stagePartitioned(s, dir)}/events_by_type")
       .filter(col("event_type").isin("purchase", "click"))
   }
 
@@ -438,7 +438,7 @@ object Layout {
     import s.implicits._
     import graft.functions.Agg.dsum
     val root = compactStaged(s, dir)
-    s.read.parquet(s"$root/compacted")
+    Parquet.read(s, s"$root/compacted")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"), dsum($"value").as("sum_value"),
         min($"us").as("min_us"), max($"us").as("max_us"))
@@ -454,7 +454,7 @@ object Layout {
           $"event_type", $"value")
       // the fragmented landing state: 48 tiny files
       ev.repartition(48).write.parquet(s"$out/fragmented")
-      s.read.parquet(s"$out/fragmented")
+      Parquet.read(s, s"$out/fragmented")
         .repartitionByRange(compactTargetFiles, $"us")
         .sortWithinPartitions($"us")
         .write.option("maxRecordsPerFile", compactMaxRecords)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Agg.{dsum, rnd, rndSql}
 import graft.functions.VectorFns
+import graft.sources.Parquet
 
 /** §2.5 IVF (inverted-file) ANN — the second scale path next to
   * [[Similarity.annLsh]].
@@ -176,9 +177,9 @@ object SimilarityIvf {
     (graft.sources.OracleStage.pathOf("ivf_centroids", dir),
      graft.sources.OracleStage.pathOf("ivf_assigned", dir)) match {
       case (Some(cp), Some(ap)) =>
-        val cents = s.read.parquet(cp).collect()
+        val cents = Parquet.read(s, cp).collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).map(_._2).toSeq
-        (cents, s.read.parquet(ap))
+        (cents, Parquet.read(s, ap))
       case _ => kmeans(s, dir)
     }
 

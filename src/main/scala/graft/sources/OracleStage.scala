@@ -43,12 +43,12 @@ object OracleStage {
     * oracle interpolation, and return a frame reading the artifact. */
   def stage(s: SparkSession, key: String, dir: String)(df: => DataFrame): DataFrame = {
     val path = memo.getOrElseUpdate((key, dir), {
-      val p = s"$root/${key}_${Integer.toHexString(dir.hashCode)}"
+      val p = s"$root/${key}_${Sinks.pathDigest(dir)}"
       df.coalesce(1).write.mode("overwrite").parquet(p)
       p
     })
     last.put(key, path)
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 
   /** The parquet glob DuckDB should read for `key`, if staged. */

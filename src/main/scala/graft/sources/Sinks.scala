@@ -97,6 +97,13 @@ object Sinks {
     s"$path#${fs.size}#${md.digest().map("%02x".format(_)).mkString}"
   }
 
+  /** Hex of the first 128 bits of `path`'s SHA-256: names a staging
+    * dir keyed by a dataset path, where a 32-bit `hashCode` collides
+    * (`…/Aa` and `…/BB` share one). */
+  def pathDigest(path: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(path.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
+
   private val appended =
     scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
 

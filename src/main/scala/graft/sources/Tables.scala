@@ -6,14 +6,16 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the test-data star schema.
   *
-  * Plain `spark.read.parquet` so Catalyst owns pushdown: any filter /
-  * projection applied downstream reaches the scan (verified in
-  * PlanSpec). At deployment scale the same loaders point at
-  * partitioned parquet roots and partition pruning applies unchanged.
+  * Reads go through [[Parquet.read]], which resolves the schema from
+  * one footer on the driver instead of an inference job; the scan is
+  * still Spark's, so Catalyst owns pushdown: any filter / projection
+  * applied downstream reaches the scan (verified in PlanSpec). At
+  * deployment scale the same loaders point at partitioned parquet
+  * roots and partition pruning applies unchanged.
   */
 object Tables {
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, dir: String): DataFrame     = read(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame     = read(s, dir, "nation")

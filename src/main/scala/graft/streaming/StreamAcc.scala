@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Accumulator
+import graft.sources.{Parquet, Sinks}
 
 /** §2.1 #7 — the accumulator's interval-timer flush as Structured
   * Streaming: the real-time analog of the reference's
@@ -31,10 +32,7 @@ object StreamAcc {
         // 32-bit hashCode can collide across dataset paths) and verify
         // an existing symlink actually points at this dataset,
         // recreating it when it doesn't.
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(path.getBytes("UTF-8")).take(16)
-          .map("%02x".format(_)).mkString
-        val d = Paths.get(sys.props("java.io.tmpdir"), "graft-stream", digest)
+        val d = Paths.get(sys.props("java.io.tmpdir"), "graft-stream", Sinks.pathDigest(path))
         Files.createDirectories(d)
         val target = Paths.get(path)
         val link = d.resolve(s"$table.parquet")
@@ -43,8 +41,7 @@ object StreamAcc {
         if (!Files.exists(link)) Files.createSymbolicLink(link, target)
         d.toString
       }
-    val raw = s.read.parquet(path)
-    s.readStream.schema(raw.schema).parquet(streamDir)
+    s.readStream.schema(Parquet.read(s, path).schema).parquet(streamDir)
   }
 
   /** Events stream normalized through the same shared `ts` normalizer

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.operators.Accumulator
+import graft.sources.Parquet
 
 /** Event shape for stateful streaming ops (micros keep the parquet's
   * sub-millisecond precision through the typed boundary). */
@@ -508,7 +509,7 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(s"$out/data")
+    Parquet.read(s, s"$out/data")
       .orderBy(col("doc_id"), col("pos"), col("piece_pos"))
   }
 
@@ -574,7 +575,7 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(s"$out/data")
+    Parquet.read(s, s"$out/data")
       .orderBy(col("doc_id"), col("pos"), col("piece_pos"))
   }
 
@@ -732,7 +733,7 @@ object StreamOps {
     // materialize the covered frame (lineage cut off the temp files),
     // then delete the run's sink/checkpoint dirs — repeated stream
     // runs must not accumulate temp data
-    val covered = s.read.parquet(s"$out/data")
+    val covered = Parquet.read(s, s"$out/data")
       .dropDuplicates("doc_id", "off")
       .localCheckpoint(true)
     deleteRecursively(new java.io.File(out))
