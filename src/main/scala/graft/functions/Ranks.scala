@@ -63,7 +63,7 @@ object Ranks {
     * (key-projection plan, bucket count) — a split of the key space —
     * so they are sampled once per session and reused, the same
     * session-scoped artifact store the PQ codebooks use
-    * (EmbedPq.cbCache). Keyed by the CANONICALIZED plan of
+    * (EmbedPq.trainCodebooks). Keyed by the CANONICALIZED plan of
     * `df.select(keys)` (structural equality — source paths, pushed
     * filters and the projection all participate), so two frames share
     * an entry only when they would scan identical data. Staleness

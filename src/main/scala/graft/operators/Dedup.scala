@@ -423,11 +423,8 @@ object Dedup {
     * corpus (the prefix-filter literature's "inverted ordering" —
     * built once per index cycle in production), and each invocation
     * re-paid the shingle explode + df window + collect_list build. */
-  private val jpDocsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), DataFrame]
-
   private def jaccardPrefixDocsCkpt(s: SparkSession, dir: String): DataFrame =
-    jpDocsMemo.getOrElseUpdate((dir, s),
+    graft.sources.Memo("dedup.jaccard_prefix_docs", dir, s)(
       jaccardPrefixDocs(s, dir).localCheckpoint(true))
 
   /** The pinned doc-array frame [[dedupJaccardPrefix]] builds its
@@ -847,7 +844,7 @@ object Dedup {
     * [[dedupClustersEmbedding]], [[buildEmbedClusterIndex]] — three
     * rebuilds of the same edges before this memo), and the pair graph
     * is a deterministic artifact of the corpus, so it persists like
-    * the PQ codebooks (EmbedPq.cbCache) and every later consumer
+    * the PQ codebooks (EmbedPq.trainCodebooks) and every later consumer
     * reads the parquet artifact instead of re-deriving the join. */
   private[graft] def embeddingPairs(s: SparkSession, dir: String): DataFrame =
     graft.sources.OracleStage.stage(s, "embed_pairs", dir)(

@@ -56,13 +56,11 @@ object EmbedPq {
   /** Codebooks are a deterministic artifact of the corpus (decimal-
     * exact k-means from a fixed init), so they are trained once per
     * dataset and reused — a production deployment persists them next
-    * to the index; here a process-level memo stands in for that
-    * artifact store (embed_pq and ann_pq share one training run). */
-  private val cbCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Double]]]]
-
+    * to the index; here a session memo stands in for that artifact
+    * store (embed_pq and ann_pq share one training run). */
   def trainCodebooks(s: SparkSession, dir: String): Seq[Seq[Seq[Double]]] = {
-    val cbs = cbCache.getOrElseUpdate(dir, trainCodebooksUncached(s, dir))
+    val cbs = graft.sources.Memo("embedpq.codebooks", dir, s)(
+      trainCodebooksUncached(s, dir))
     // persist the codebook artifact (KB-sized) so the oracle can
     // recompute encode/ADC/refine from it — and because that is what
     // a production index does with its codebooks anyway
@@ -248,8 +246,8 @@ object EmbedPq {
 
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // memoized for ann_recall_report's re-invocation (TierMemo rules)
-    graft.sources.TierMemo.refresh("ann_ivf_pq", dir, s)(
+    // memoized for ann_recall_report's re-invocation (Memo.refresh rules)
+    graft.sources.Memo.refresh("ann_ivf_pq", dir, s)(
         graft.plans.TopK.perGroup(
           ivfPqScored(s, dir),
           Seq("query_id"), Seq("adist" -> false, "vec_id" -> false), Similarity.k)
@@ -273,8 +271,8 @@ object EmbedPq {
         ivfPqScored(s, dir),
         Seq("query_id"), Seq("adist" -> false, "vec_id" -> false), refineShortlist)
       .select($"query_id", $"vec_id")
-    // memoized for ann_recall_report's re-invocation (TierMemo rules)
-    graft.sources.TierMemo.refresh("ann_ivf_pq_refine", dir, s)(
+    // memoized for ann_recall_report's re-invocation (Memo.refresh rules)
+    graft.sources.Memo.refresh("ann_ivf_pq_refine", dir, s)(
         exactRerank(s, dir, shortlist))
       .orderBy($"query_id", $"rank")
   }
@@ -405,8 +403,8 @@ object EmbedPq {
         scored.select($"query_id", $"vec_id", $"adist"),
         Seq("query_id"), Seq("adist" -> false, "vec_id" -> false), refineShortlist)
       .select($"query_id", $"vec_id")
-    // memoized for ann_recall_report's re-invocation (TierMemo rules)
-    graft.sources.TierMemo.refresh("ann_pq_refine", dir, s)(
+    // memoized for ann_recall_report's re-invocation (Memo.refresh rules)
+    graft.sources.Memo.refresh("ann_pq_refine", dir, s)(
         exactRerank(s, dir, shortlist))
       .orderBy($"query_id", $"rank")
   }
@@ -581,11 +579,9 @@ object EmbedPq {
     * improvement). Staged like the codebooks; at 10¹¹ vectors the
     * covariance pass runs on a deterministic sample (covariance
     * converges long before the corpus is exhausted). */
-  private val rotCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
-
   def opqRotation(s: SparkSession, dir: String): Seq[Seq[Double]] = {
-    val rot = rotCache.getOrElseUpdate(dir, opqRotationUncached(s, dir))
+    val rot = graft.sources.Memo("embedpq.opq_rotation", dir, s)(
+      opqRotationUncached(s, dir))
     import s.implicits._
     graft.sources.OracleStage.stage(s, "opq_rotation", dir)(
       rot.zipWithIndex.map { case (r, i) => (i, r) }.toDF("i", "r"))
@@ -698,7 +694,7 @@ object EmbedPq {
     }
 
   def trainOpqCodebooks(s: SparkSession, dir: String): Seq[Seq[Seq[Double]]] = {
-    val cbs = cbCache.getOrElseUpdate(s"opq:$dir",
+    val cbs = graft.sources.Memo("embedpq.opq_codebooks", dir, s)(
       trainCodebooksOn(s, rotatedVectors(s, dir)))
     import s.implicits._
     graft.sources.OracleStage.stage(s, "opq_codebooks", dir)(
@@ -742,8 +738,8 @@ object EmbedPq {
     val dtab = broadcast(distTables(qrot, cbs).toDF("query_id", "dt"))
     val scored = codes.join(dtab, $"vec_id" =!= $"query_id")
       .withColumn("adist", expr(adcExpr))
-    // memoized for ann_recall_report's re-invocation (TierMemo rules)
-    graft.sources.TierMemo.refresh("ann_opq", dir, s)(
+    // memoized for ann_recall_report's re-invocation (Memo.refresh rules)
+    graft.sources.Memo.refresh("ann_opq", dir, s)(
         graft.plans.TopK.perGroup(
           scored.select($"query_id", $"vec_id", $"adist"),
           Seq("query_id"), Seq("adist" -> false, "vec_id" -> false), Similarity.k)

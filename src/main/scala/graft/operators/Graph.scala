@@ -35,11 +35,6 @@ object Graph {
 
   val pagerankIters = 5
   val damping = 0.85
-  /** Lineage-cut period for the iteration loop. Every round: an
-    * UNCUT chain measured 3× slower at sf0.1 (AQE re-plans the whole
-    * growing DAG per stage and the edge cache doesn't amortize), and
-    * per-round cuts also bound executor lineage at 50-round depth. */
-  val checkpointEvery = 1
   private val Q = "1000000000000.0" // 1e-12 contribution quantum
 
   /** THE shared graph artifact: per unordered part pair (u < v) the
@@ -84,9 +79,6 @@ object Graph {
     * co-purchase support (the round-6 shared-intermediate rule), and
     * before the memo both PageRank variants and PPR re-paid the
     * full-edge shuffle + materialization on every invocation. */
-  private val edgeCkptMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), DataFrame]
-
   private def edgesCkpt(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // partitioned on DST: each round's edge⋈state join builds the
@@ -96,7 +88,7 @@ object Graph {
     // key consecutive operations the same way and they share one
     // layout). Partitioning by src made every round pay a full
     // edge-set shuffle for the dst aggregate.
-    edgeCkptMemo.getOrElseUpdate((dir, s),
+    graft.sources.Memo("graph.edges_ckpt", dir, s)(
       edges(s, dir).repartition($"dst").localCheckpoint(true))
   }
 
@@ -182,11 +174,13 @@ object Graph {
     var state = deg.select($"src".as("id"), $"outdeg",
         (lit(1.0) / lit(n.toDouble)).as("rank"))
       .localCheckpoint(true)
-    // lineage cut every [[checkpointEvery]] rounds (see its note —
-    // measured: uncut chains re-plan the growing DAG and run 3×
-    // slower; the dominant cost of this operator is the one-time
-    // edge build, ~6 of 9 s at sf0.1, amortized in any real deploy
-    // where the edge table is a persisted artifact).
+    // lineage cut every round: an UNCUT chain measured 3× slower at
+    // sf0.1 (AQE re-plans the whole growing DAG per stage and the
+    // edge cache doesn't amortize), and per-round cuts also bound
+    // executor lineage at 50-round depth. The dominant cost of this
+    // operator is the one-time edge build, ~6 of 9 s at sf0.1,
+    // amortized in any real deploy where the edge table is a
+    // persisted artifact.
     for (k <- 1 to pagerankIters) {
       val contribs = state.select($"id",
         expr(s"CAST(floor(rank / outdeg * $Q + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("cq"))
@@ -206,8 +200,7 @@ object Graph {
         .select($"src".as("id"), $"outdeg",
           (lit(1.0 - damping) / lit(n.toDouble) +
             lit(damping) * ($"sq".cast("double") / expr(s"CAST($Q AS DOUBLE)"))).as("rank"))
-      if (k % checkpointEvery == 0 && k < pagerankIters)
-        state = state.localCheckpoint(true)
+      if (k < pagerankIters) state = state.localCheckpoint(true)
     }
     state.select($"id".as("part_id"), $"rank").orderBy($"part_id")
   }
@@ -316,6 +309,18 @@ object Graph {
     coPurchaseSupport(s, dir)
       .filter($"n_ab" >= triangleMinSupport)
       .select($"u", $"v")
+  }
+
+  /** The strong edges in both orientations, hash-partitioned on `src`
+    * and eagerly checkpointed: the adjacency every iterative strong-
+    * graph operator (label propagation, k-core, BFS, harmonic
+    * centrality, random walks) joins its frontier against per round. */
+  private def undirectedStrongEdges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val e = strongEdges(s, dir)
+    e.select($"u".as("src"), $"v".as("dst"))
+      .unionAll(e.select($"v".as("src"), $"u".as("dst")))
+      .repartition($"src").localCheckpoint(true)
   }
 
   /** Direct each undirected edge (u, v) from its LOWER-degree endpoint
@@ -460,10 +465,7 @@ object Graph {
   private[graft] def lpaLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val e = strongEdges(s, dir)
-    val edges = e.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(e.select($"v".as("src"), $"u".as("dst")))
-      .repartition($"src").localCheckpoint(true)
+    val edges = undirectedStrongEdges(s, dir)
     val universe = Tables.part(s, dir).select($"p_partkey".as("node"))
     var lab = universe.withColumn("label", $"node").localCheckpoint(true)
     for (_ <- 1 to labelPropIters) {
@@ -616,10 +618,7 @@ object Graph {
     * the identical peel unrolled as chained CTEs. */
   def graphKcore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = strongEdges(s, dir)
-    val edges = e.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(e.select($"v".as("src"), $"u".as("dst")))
-      .repartition($"src").localCheckpoint(true)
+    val edges = undirectedStrongEdges(s, dir)
     var surv = edges.select($"src".as("id")).distinct().localCheckpoint(true)
     for (_ <- 1 to kcoreRounds) {
       surv = edges
@@ -844,10 +843,7 @@ object Graph {
     * row counts, not their number. */
   def graphBfs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = strongEdges(s, dir)
-    val edges = e.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(e.select($"v".as("src"), $"u".as("dst")))
-      .repartition($"src").localCheckpoint(true)
+    val edges = undirectedStrongEdges(s, dir)
     val seeds = edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
       .orderBy($"deg".desc, $"node").limit(bfsSeeds)
       .select($"node")
@@ -1002,10 +998,7 @@ object Graph {
     * so cross-engine equality is trivial rather than engineered. */
   def graphHarmonic(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = strongEdges(s, dir)
-    val edges = e.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(e.select($"v".as("src"), $"u".as("dst")))
-      .repartition($"src").localCheckpoint(true)
+    val edges = undirectedStrongEdges(s, dir)
     val seeds = edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
       .orderBy($"deg".desc, $"node").limit(harmonicSources)
       .select($"node")
@@ -1105,10 +1098,7 @@ object Graph {
     * strong graph has no sinks) would simply emit shorter walks. */
   def graphRandomWalk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = strongEdges(s, dir)
-    val edges = e.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(e.select($"v".as("src"), $"u".as("dst")))
-      .repartition($"src").localCheckpoint(true)
+    val edges = undirectedStrongEdges(s, dir)
     val starts = edges.select($"src".as("start")).distinct()
     var frontier = starts.withColumn("cur", $"start")
     var walk = frontier.select($"start", lit(0L).as("step"), $"cur".as("node"))
@@ -1296,8 +1286,8 @@ object Graph {
           (lit(1.0 - damping) * $"restart" +
             lit(damping) * (coalesce($"sq", lit(0L)).cast("double") / expr(s"CAST($Q AS DOUBLE)"))).as("rank"),
           $"restart")
-      if (k % checkpointEvery == 0 && k < pprIters)
-        state = state.localCheckpoint(true)
+      // lineage cut every round (the pagerank loop's measured reason)
+      if (k < pprIters) state = state.localCheckpoint(true)
     }
     state.filter(state("rank") > 0.0)
       .select(state("id").as("part_id"), state("rank").as("rank"))

@@ -32,7 +32,7 @@ import graft.sources.Tables
   * parquet-backed, so the planner sizes them from real stats — no
   * live corpus aggregate ever feeds a join it must size. The vector
   * side is the REGISTERED [[SimilarityIvf.annIvf]] tier through the
-  * TierMemo rules (the corpus is probed, never shuffled); fusion
+  * Memo.cached rules (the corpus is probed, never shuffled); fusion
   * joins two ≤ queries×k rank lists — driver-scale. Cross-engine
   * exactness: the stored weight is the identical rnd(idf·saturation)
   * double the round-10 live chain computed (row-local, join-order
@@ -173,20 +173,20 @@ object HybridSearch {
   def searchHybridRrf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val tranks = textRanks(s, bm25Tscores(s, dir))
-    val vranks = graft.sources.TierMemo.cached("ann_ivf", dir, s)(
+    val vranks = graft.sources.Memo.cached("ann_ivf", dir, s)(
         SimilarityIvf.annIvf(s, dir))
       .select($"query_id", $"neighbor_id".as("doc_id"), $"rank".as("vec_rank"))
-    // standalone runs compute live and refresh the memo (TierMemo
+    // standalone runs compute live and refresh the memo (Memo.refresh
     // rule); downstream consumers (MMR, rerank, the reports) read the
     // last computed frame instead of re-paying both probes
-    graft.sources.TierMemo.refresh("search_hybrid_rrf", dir, s)(
+    graft.sources.Memo.refresh("search_hybrid_rrf", dir, s)(
       fuse(s, tranks, vranks))
   }
 
   /** The memoized fused list, for consumers ranked above it in the
     * chain. */
   private def fusedCached(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TierMemo.cached("search_hybrid_rrf", dir, s)(
+    graft.sources.Memo.cached("search_hybrid_rrf", dir, s)(
       searchHybridRrf(s, dir))
 
   /** The language predicate of [[searchHybridFiltered]] — stands in
@@ -401,7 +401,7 @@ object HybridSearch {
         Seq("score" -> true, "doc_id" -> false), hybridK)
       .select($"query_id", $"doc_id", $"best_chunk_idx",
         $"rank".as("text_rank"))
-    val vranks = graft.sources.TierMemo.cached("ann_ivf", dir, s)(
+    val vranks = graft.sources.Memo.cached("ann_ivf", dir, s)(
         SimilarityIvf.annIvf(s, dir))
       .select($"query_id", $"neighbor_id".as("doc_id"), $"rank".as("vec_rank"))
     val rrfExpr = graft.functions.Agg.rndSql(
@@ -417,7 +417,7 @@ object HybridSearch {
       .select($"query_id", $"rank", $"doc_id", $"best_chunk_idx", $"rrf",
         $"text_rank", $"vec_rank")
       .orderBy($"query_id", $"rank")
-      .transform(graft.sources.TierMemo.refresh("search_chunk_hybrid", dir, s)(_))
+      .transform(graft.sources.Memo.refresh("search_chunk_hybrid", dir, s)(_))
   }
 
   /** Oracle: the chunk postings (corpus_chunk's boundary arithmetic
@@ -693,16 +693,13 @@ object HybridSearch {
     * stale snapshot. The TABLE rewrite below stays unconditional:
     * that is the run-scoped contract (rebuild + append exactly once),
     * not a statistic. */
-  private val bm25StatsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), (DataFrame, DataFrame)]
-
   private def bm25StreamStats(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bm25StatsMemo.getOrElseUpdate(
-      (graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s), {
-        val corpus = bm25CorpusDocs(s, dir)
-        val tf = bm25Tf(s, corpus).localCheckpoint(true)
-        (tf, bm25IdfOf(s, corpus, Some(tf)).localCheckpoint(true))
-      })
+    graft.sources.Memo("hybrid.bm25_stats",
+        graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s) {
+      val corpus = bm25CorpusDocs(s, dir)
+      val tf = bm25Tf(s, corpus).localCheckpoint(true)
+      (tf, bm25IdfOf(s, corpus, Some(tf)).localCheckpoint(true))
+    }
 
   private[graft] def rebuildBm25StreamBase(s: SparkSession, dir: String): DataFrame = {
     val (tf, idf) = bm25StreamStats(s, dir)
@@ -715,18 +712,14 @@ object HybridSearch {
   /** The unseen-term idf default: a term the corpus snapshot never saw
     * has df = 0 → idf = rnd(ln(1 + (n + 0.5) / 0.5)) with n = corpus
     * doc count — the same formula, continuously. */
-  private val unseenIdfMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), Double]
-
   private[graft] def bm25UnseenIdf(s: SparkSession, dir: String): Double =
-    unseenIdfMemo.getOrElseUpdate(
-      (graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s), {
-        import graft.functions.Agg.rndSql
-        import s.implicits._
-        bm25CorpusDocs(s, dir).agg(count(lit(1)).as("n"))
-          .select(expr(rndSql("ln(1.0 + (CAST(n AS DOUBLE) + 0.5) / 0.5)", 6)))
-          .collect()(0).getDouble(0)
-      })
+    graft.sources.Memo("hybrid.bm25_unseen_idf",
+        graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s) {
+      import graft.functions.Agg.rndSql
+      bm25CorpusDocs(s, dir).agg(count(lit(1)).as("n"))
+        .select(expr(rndSql("ln(1.0 + (CAST(n AS DOUBLE) + 0.5) / 0.5)", 6)))
+        .collect()(0).getDouble(0)
+    }
 
   /** The post-ingest probe: the standard BM25 search over the GROWN
     * stream table (query terms read back from it, one bounded
@@ -831,12 +824,12 @@ object HybridSearch {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.{Pipeline, TextAnalysis => TA}
     val (c0, s0) = (Pipeline.chunkSize, Pipeline.chunkStride)
-    // the retrieval stage reads through TierMemo (the ragPipelineE2e
+    // the retrieval stage reads through Memo (the ragPipelineE2e
     // rule): context assembly is a CONSUMER of the chunk-hybrid
     // ranking, and re-running the whole retrieval chain live per pack
     // invocation double-paid it; standalone search_chunk_hybrid still
     // computes live and refreshes.
-    val fused = graft.sources.TierMemo.cached("search_chunk_hybrid", dir, s)(
+    val fused = graft.sources.Memo.cached("search_chunk_hybrid", dir, s)(
         searchChunkHybrid(s, dir))
       .withColumn("chunk_idx", coalesce($"best_chunk_idx", lit(0L)))
       .select($"query_id", $"rank", $"doc_id", $"chunk_idx")
@@ -972,7 +965,7 @@ object HybridSearch {
       remaining = rel.join(sel.select("query_id", "doc_id"),
         Seq("query_id", "doc_id"), "left_anti")
     }
-    graft.sources.TierMemo.refresh("search_mmr", dir, s)(
+    graft.sources.Memo.refresh("search_mmr", dir, s)(
       sel.orderBy($"query_id", $"mmr_rank"))
   }
 
@@ -1112,7 +1105,7 @@ object HybridSearch {
         coalesce($"exp_score", lit(0.0)).as("exp_score"))
       .withColumn("score", rnd(lit(prfAlpha) * $"orig_score"
         + lit(1.0 - prfAlpha) * $"exp_score", 6))
-    graft.sources.TierMemo.refresh("search_prf_rm3", dir, s)(
+    graft.sources.Memo.refresh("search_prf_rm3", dir, s)(
       graft.plans.TopK.perGroup(fused, Seq("query_id"),
           Seq("score" -> true, "doc_id" -> false), hybridK)
         .select($"query_id", $"rank", $"doc_id", $"score",
@@ -1241,7 +1234,7 @@ object HybridSearch {
       .agg(dsum(rnd($"gain" / expr("ln(1 + trank) / ln(2)"), 6)).as("idcg"))
     def tagged(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("tier"), $"query_id", $"rank", $"doc_id")
-    import graft.sources.TierMemo.cached
+    import graft.sources.Memo.cached
     val tiers = tagged("hybrid_rrf", fusedCached(s, dir))
       .unionByName(tagged("prf_rm3",
         cached("search_prf_rm3", dir, s)(searchPrfRm3(s, dir))))
@@ -1461,7 +1454,7 @@ object HybridSearch {
     * the scorer is a stand-in. `prev_rank` (the fused rank) rides
     * through so rank movement is visible. */
   def searchRerank(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TierMemo.refresh("search_rerank", dir, s)(
+    graft.sources.Memo.refresh("search_rerank", dir, s)(
       searchRerankLive(s, dir))
 
   /** The un-memoized plan (PlanSpec inspects this — the memo's eager
@@ -1570,7 +1563,7 @@ object HybridSearch {
     import graft.operators.{Pipeline, TextAnalysis => TA}
     val fusedc = fusedCached(s, dir)
       .groupBy($"query_id").agg(count(lit(1)).as("n_retrieved"))
-    val rr = graft.sources.TierMemo.cached("search_rerank", dir, s)(
+    val rr = graft.sources.Memo.cached("search_rerank", dir, s)(
         searchRerank(s, dir))
       .select($"query_id", $"rank", $"doc_id").localCheckpoint(true)
     val docLens = Tables.documents(s, dir)

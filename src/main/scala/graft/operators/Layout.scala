@@ -175,12 +175,9 @@ object Layout {
     * across invocations — a fresh checkpoint per run changes the
     * canonicalized plan key, so all four layouts re-paid their
     * boundary-sampling scans every time. */
-  private val pruneBaseMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), DataFrame]
-
   private def pruneBase(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    pruneBaseMemo.getOrElseUpdate((dir, s),
+    graft.sources.Memo("layout.prune_base", dir, s)(
       Tables.lineitem(s, dir)
         .select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
         .withColumn("zval", expr(zvalExpr("l_partkey", "l_suppkey", sparkShift)))
@@ -316,10 +313,8 @@ object Layout {
     * stands in for the production table that was WRITTEN partitioned
     * in the first place (the write is the layout operator; queries
     * only ever read it). */
-  private val partStage = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def stagePartitioned(s: SparkSession, dir: String): String =
-    partStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("layout.partitioned", dir, s) {
       import s.implicits._
       val out = java.nio.file.Files.createTempDirectory("graft-part").toString
       val ev = Tables.events(s, dir)
@@ -327,7 +322,7 @@ object Layout {
           $"event_type", $"value")
       graft.sources.Sinks.writePartitioned(ev, s"$out/events_by_type", "event_type")
       out
-    })
+    }
 
   /** §2.9 #46b — partition-pruned scan over a directory-partitioned
     * table: events written `partitionBy(event_type)` (Hive layout,
@@ -421,8 +416,6 @@ object Layout {
   val compactTargetFiles = 4
   val compactMaxRecords = 100000L
 
-  private val compactStage = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** §2.9 #46c — small-file compaction (the lakehouse OPTIMIZE): a
     * landing table fragmented into dozens of tiny files (one per
     * micro-batch/task — the small-files problem that murders scan
@@ -446,7 +439,7 @@ object Layout {
   }
 
   private[graft] def compactStaged(s: SparkSession, dir: String): String =
-    compactStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("layout.compacted", dir, s) {
       import s.implicits._
       val out = java.nio.file.Files.createTempDirectory("graft-compact").toString
       val ev = Tables.events(s, dir)
@@ -460,7 +453,7 @@ object Layout {
         .write.option("maxRecordsPerFile", compactMaxRecords)
         .parquet(s"$out/compacted")
       out
-    })
+    }
 
   val layoutCompactSql: String = {
     import graft.functions.Agg.dsumSql

@@ -102,11 +102,8 @@ object QualityModel {
   private case class Stats(n: Long, mu: Array[Double], sd: Array[Double],
                            qmean: Double)
 
-  private val statsStage =
-    scala.collection.concurrent.TrieMap.empty[String, Stats]
-
   private def stats(s: SparkSession, dir: String): Stats =
-    statsStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("quality.stats", dir, s) {
       val raw = rawFeatures(s, dir)
       val aggs = (1 to 3).flatMap { j =>
         Seq(sum(col(s"q$j").cast("long").cast(D0)).as(s"s$j"),
@@ -135,10 +132,7 @@ object QualityModel {
         val qmean = math.floor(r.getDecimal(6).doubleValue / nD + 0.5)
         Stats(n, mu, sd, qmean)
       }
-    })
-
-  private val featStage =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    }
 
   /** (z1, z2, z3, y): standardized features (1e-6-requantized) and
     * the above-mean-quality label; staged once per dataset. */
@@ -150,14 +144,14 @@ object QualityModel {
     }
 
   private[graft] def features(s: SparkSession, dir: String): DataFrame =
-    featStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("quality.features", dir, s) {
       import s.implicits._
       val st = stats(s, dir)
       rawFeatures(s, dir)
         .select(zCols(st) :+
           when($"qq" > lit(st.qmean), lit(1.0)).otherwise(lit(0.0)).as("y"): _*)
         .localCheckpoint()
-    })
+    }
 
   /** Score any documents-shaped frame (batch or STREAM — everything
     * here is row-local against driver-literal weights and moments,
@@ -210,13 +204,10 @@ object QualityModel {
   private def sigmoid(m: Column): Column =
     lit(0.5) + lit(0.5) * m / (lit(1.0) + abs(m))
 
-  private val weightStage =
-    scala.collection.concurrent.TrieMap.empty[String, (Array[Double], Long)]
-
   /** Run the bounded GD loop; memoized per dataset (train + every
     * scoring query share one training run, like the PQ codebooks). */
   private[graft] def trainedWeights(s: SparkSession, dir: String): (Array[Double], Long) =
-    weightStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("quality.weights", dir, s) {
       val f = features(s, dir)
       val n = stats(s, dir).n
       val nD = n.toDouble
@@ -231,7 +222,7 @@ object QualityModel {
         w = w.indices.map(j => roundAt(w(j) - gdLr * g(j) / nD, 1e9)).toArray
       }
       (w, n)
-    })
+    }
 
   // ------------------------------------------------------------------
   // quality_model_train

@@ -63,11 +63,8 @@ object Similarity {
     * same static 2-column projection per invocation. One artifact
     * serves them all; plain [[vectors]] stays the lazy view for
     * single-pass consumers. */
-  private val vecCkptMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), DataFrame]
-
   private[graft] def vectorsCkpt(s: SparkSession, dir: String): DataFrame =
-    vecCkptMemo.getOrElseUpdate((dir, s),
+    graft.sources.Memo("similarity.vectors_ckpt", dir, s)(
       vectors(s, dir).localCheckpoint(true))
 
   /** Exact cosine top-k for the query set. */
@@ -80,8 +77,8 @@ object Similarity {
       .withColumn("cosine",
         expr(rndSql(s"${VectorFns.dot("qv", "v")} / (qnrm * nrm)", 6)))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    // memoized for the recall report's truth re-use (TierMemo rules)
-    graft.sources.TierMemo.refresh("ann_bruteforce", dir, s)(scored
+    // memoized for the recall report's truth re-use (Memo.refresh rules)
+    graft.sources.Memo.refresh("ann_bruteforce", dir, s)(scored
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter($"rank" <= k)
         .select($"query_id", $"rank", $"vec_id".as("neighbor_id"), $"cosine"))
@@ -169,9 +166,9 @@ object Similarity {
       .select($"query_id", $"qv", $"qnrm", $"vec_id", $"v", $"nrm")
       .dropDuplicates("query_id", "vec_id")
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    // memoized for the recall report's tier re-use (TierMemo rules:
+    // memoized for the recall report's tier re-use (Memo.refresh rules:
     // a standalone run always computes live and refreshes)
-    graft.sources.TierMemo.refresh("ann_lsh", dir, s)(cand
+    graft.sources.Memo.refresh("ann_lsh", dir, s)(cand
         .withColumn("cosine",
           expr(rndSql(s"${VectorFns.dot("qv", "v")} / (qnrm * nrm)", 6)))
         .withColumn("rank", row_number().over(w).cast("long"))
@@ -234,13 +231,13 @@ object Similarity {
     * a k'-bounded frame. */
   def annMatryoshka(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.sources.TierMemo.refresh("ann_matryoshka", dir, s)(
+    graft.sources.Memo.refresh("ann_matryoshka", dir, s)(
         annMatryoshkaFrame(s, dir))
       .orderBy($"query_id", $"rank")
   }
 
   /** The un-memoized ranking frame (PlanSpec audits this — the eager
-    * TierMemo checkpoint hides the stage plan from the final frame). */
+    * Memo checkpoint hides the stage plan from the final frame). */
   private[graft] def annMatryoshkaFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val v = vectors(s, dir)
@@ -1121,7 +1118,7 @@ object Similarity {
     * downstream. */
   def annHamming(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.sources.TierMemo.refresh("ann_hamming", dir, s)(
+    graft.sources.Memo.refresh("ann_hamming", dir, s)(
         annHammingFrame(s, dir))
       .orderBy($"query_id", $"rank")
   }
@@ -1311,7 +1308,7 @@ object Similarity {
       .withColumn("cosine",
         expr(rndSql(s"${VectorFns.dot("qv", "v")} / (qnrm * nrm)", 6)))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    graft.sources.TierMemo.refresh("ann_hamming_refine", dir, s)(exact
+    graft.sources.Memo.refresh("ann_hamming_refine", dir, s)(exact
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter($"rank" <= k)
         .select($"query_id", $"rank", $"vec_id".as("neighbor_id"), $"cosine"))

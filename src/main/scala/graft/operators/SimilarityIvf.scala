@@ -64,15 +64,11 @@ object SimilarityIvf {
     * seed from them; before this memo EVERY one of them re-paid the
     * 5-iteration training loop (5 driver collects over the posexplode
     * frame, ~0.8 s/invocation) even though the STAGED artifact write
-    * was already memoized. Keyed (centKey, dir, session); the
-    * assignment side stays the staged parquet read-back, so oracles
-    * are unchanged. */
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, SparkSession), (Seq[Seq[Double]], DataFrame)]
-
+    * was already memoized. Named by `centKey`; the assignment side
+    * stays the staged parquet read-back, so oracles are unchanged. */
   private def trainKmeans(s: SparkSession, v0: DataFrame, centKey: String,
                           assignKey: String, dir: String): (Seq[Seq[Double]], DataFrame) =
-    kmCache.getOrElseUpdate((centKey, dir, s),
+    graft.sources.Memo(s"ivf.kmeans.$centKey", dir, s)(
       trainKmeansUncached(s, v0, centKey, assignKey, dir))
 
   private def trainKmeansUncached(s: SparkSession, v0: DataFrame, centKey: String,
@@ -159,8 +155,8 @@ object SimilarityIvf {
       .dropDuplicates("query_id", "vec_id")
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
     // result memoized for ann_recall_report's re-invocation; each
-    // standalone call still computes the probe scan live (TierMemo)
-    graft.sources.TierMemo.refresh("ann_ivf", dir, s)(cand
+    // standalone call still computes the probe scan live (Memo)
+    graft.sources.Memo.refresh("ann_ivf", dir, s)(cand
         .withColumn("cosine",
           expr(rndSql(s"${VectorFns.dot("qv", "v")} / (qnrm * nrm)", 6)))
         .withColumn("rank", row_number().over(w).cast("long"))
@@ -174,8 +170,8 @@ object SimilarityIvf {
     * (the cost-report path — counting candidates must not re-pay the
     * k-means loop), else train via [[kmeans]]. */
   private[graft] def stagedIndex(s: SparkSession, dir: String): (Seq[Seq[Double]], DataFrame) =
-    (graft.sources.OracleStage.pathOf("ivf_centroids", dir),
-     graft.sources.OracleStage.pathOf("ivf_assigned", dir)) match {
+    (graft.sources.OracleStage.pathOf(s, "ivf_centroids", dir),
+     graft.sources.OracleStage.pathOf(s, "ivf_assigned", dir)) match {
       case (Some(cp), Some(ap)) =>
         val cents = Parquet.read(s, cp).collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).map(_._2).toSeq
@@ -464,12 +460,12 @@ object SimilarityIvf {
         posexplode($"probes").as(Seq("prank", "cid")))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2),
         r.getInt(3) + 1, r.getInt(4)))
-    // truth through TierMemo like ann_recall_report (the report-side
+    // truth through Memo like ann_recall_report (the report-side
     // rule): the sweep is a tuning-curve READER of the brute-force
     // tier, so it reuses the session's last computed truth instead of
     // re-scoring the corpus per invocation; standalone ann_bruteforce
     // still always computes live (the round-10 advice contract).
-    val truth = graft.sources.TierMemo.cached("ann_bruteforce", dir, s)(
+    val truth = graft.sources.Memo.cached("ann_bruteforce", dir, s)(
         Similarity.annBruteforce(s, dir))
       .select($"query_id", $"neighbor_id")
     val corpus = assigned.agg(count(lit(1)).as("n_corpus"))

@@ -171,11 +171,8 @@ object SimilarityKnn {
     * before the memo all four graph-tier queries re-paid the
     * pool-wide window per invocation (plus a redundant
     * localCheckpoint at every call site). */
-  private val edgeMemo =
-    scala.collection.concurrent.TrieMap[(String, SparkSession), DataFrame]()
-
   private def searchEdges(s: SparkSession, dir: String): DataFrame =
-    edgeMemo.getOrElseUpdate((dir, s),
+    graft.sources.Memo("knn.search_edges", dir, s)(
       topK(knnCandidatePool(s, dir), searchK)
         .select(col("src"), col("dst")).localCheckpoint(true))
 
@@ -223,44 +220,25 @@ object SimilarityKnn {
     * without ever changing what the standalone query costs. */
   def annGraphSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val live = graphSearchOf(s, dir, centroidSeeded = true).localCheckpoint(true)
-    gsMemo.put((dir, s), live)
-    live.orderBy($"query_id", $"rank")
-  }
-
-  /** The report-side accessor: reuse the last computed descent for
-    * this (dataset, session) if one exists, else compute and memoize. */
-  private def graphSearchMemoized(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gsMemo.getOrElseUpdate((dir, s),
-        graphSearchOf(s, dir, centroidSeeded = true).localCheckpoint(true))
+    graft.sources.Memo.refresh("ann_graph_search", dir, s)(
+        graphSearchOf(s, dir, centroidSeeded = true))
       .orderBy($"query_id", $"rank")
   }
 
-  /** Session memo of the computed descent (lineage-cut), NOT a disk
-    * artifact: cleared with the session, never read by oracles. */
-  private val gsMemo =
-    scala.collection.concurrent.TrieMap[(String, SparkSession), DataFrame]()
+  /** |visited| of the centroid-seeded descent — the tier's
+    * candidates-scanned count, recorded by the same run the report
+    * reuses. */
+  private val visitedCount = "knn.graph_search_visited"
 
-  /** |visited| of the last centroid-seeded descent — the tier's
-    * candidates-scanned count, set by the same run the report reuses. */
-  private val gsCandMemo =
-    scala.collection.concurrent.TrieMap[(String, SparkSession), Long]()
-
-  /** The descent's scored-candidate count for the report: the
-    * memoized value if the tier ran this session, else one memoized
-    * run (the same rule [[graphSearchMemoized]] applies to results). */
-  private[graft] def graphSearchCandidates(s: SparkSession, dir: String): Long =
-    gsCandMemo.getOrElse((dir, s), {
-      graphSearchMemoized(s, dir).queryExecution // force memoization
-      gsCandMemo.getOrElseUpdate((dir, s), {
-        // memoized frame predates the counter (older session path):
-        // recompute the descent once to fill it
-        gsMemo.remove((dir, s))
-        graphSearchMemoized(s, dir)
-        gsCandMemo((dir, s))
-      })
-    })
+  /** The descent's scored-candidate count for the report: the tier's
+    * result is read through [[graft.sources.Memo.cached]] first — a
+    * hit means a centroid-seeded descent ran this session, a miss
+    * runs one — and every such descent records its count. */
+  private[graft] def graphSearchCandidates(s: SparkSession, dir: String): Long = {
+    graft.sources.Memo.cached("ann_graph_search", dir, s)(annGraphSearch(s, dir))
+    graft.sources.Memo[Long](visitedCount, dir, s)(
+      throw new IllegalStateException(s"no graph-search descent recorded for $dir"))
+  }
 
   /** The global-entry variant, spec seam only (see [[entryCount]]). */
   private[graft] def graphSearchGlobalEntry(s: SparkSession, dir: String): DataFrame =
@@ -341,7 +319,7 @@ object SimilarityKnn {
     // once (the anti-join dedups expansions); the count is a cheap
     // action on the checkpointed frame. Memoized only for the
     // production (centroid-seeded) path the report ranks.
-    if (centroidSeeded) gsCandMemo.put((dir, s), visited.count())
+    if (centroidSeeded) graft.sources.Memo(visitedCount, dir, s)(visited.count())
     visited.filter($"node" =!= $"query_id")
       .withColumn("rank", row_number().over(bw).cast("long"))
       .filter($"rank" <= Similarity.k)
@@ -674,12 +652,6 @@ object SimilarityKnn {
   val knnEdgesTable = "graft_knn_edges"
   val knnEdgesBuckets = 8
 
-  /** Corpus-only cut of [[knnEdgesTable]] for the insert descent,
-    * checkpoint memoized per (dataset, session) — the searchEdges
-    * pattern. */
-  private val corpusEdgeMemo =
-    scala.collection.concurrent.TrieMap[(String, SparkSession), DataFrame]()
-
   /** NN-descent candidate pool over the ESTABLISHED corpus only
     * ([[SimilarityIvf.ivfShardMod]] split — the same continuous-
     * ingest split the IVF maintenance path uses, so one arrival
@@ -730,7 +702,7 @@ object SimilarityKnn {
     // the filter excludes exactly the appended shard), so the eager
     // checkpoint is memoized per (dataset, session) like searchEdges
     // instead of re-materializing the table scan on every run.
-    val edges = corpusEdgeMemo.getOrElseUpdate((dir, s),
+    val edges = graft.sources.Memo("knn.corpus_edges", dir, s)(
       s.table(knnEdgesTable)
         .filter($"src" % SimilarityIvf.ivfShardMod =!= SimilarityIvf.ivfShardRem)
         .select($"src", $"dst").localCheckpoint(true))
@@ -779,7 +751,7 @@ object SimilarityKnn {
     * the truth join and rollup are |methods|·queries·k-bounded. */
   def annRecallReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.sources.TierMemo.cached
+    import graft.sources.Memo.cached
     val truth = cached("ann_bruteforce", dir, s)(Similarity.annBruteforce(s, dir))
       .select($"query_id", $"neighbor_id")
     val methods: Seq[(String, DataFrame)] = Seq(
@@ -797,13 +769,13 @@ object SimilarityKnn {
       "ann_knn_graph" -> annKnnGraph(s, dir)
         .filter($"vec_id" < Similarity.nQueries)
         .select($"vec_id".as("query_id"), $"neighbor_id"),
-      "ann_graph_search" -> graphSearchMemoized(s, dir)
+      "ann_graph_search" -> cached("ann_graph_search", dir, s)(annGraphSearch(s, dir))
         .select($"query_id", $"neighbor_id"),
       // the IVF/PQ PRODUCTION stack (31b/31j/31k/31e/31m): the tiers
       // an operator actually deploys at 10¹¹ vectors — the report
       // exists to pick among them, so they must sit in the same table
       // as the hash/graph tiers (round-10 verdict's top item). Each
-      // goes through TierMemo: the session's last standalone result
+      // goes through Memo: the session's last standalone result
       // if the tier already ran, else the registered operator live.
       "ann_ivf" -> cached("ann_ivf", dir, s)(SimilarityIvf.annIvf(s, dir))
         .select($"query_id", $"neighbor_id"),

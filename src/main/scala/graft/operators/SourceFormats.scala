@@ -39,10 +39,8 @@ object SourceFormats {
     * production analog: the landing files simply EXIST; nothing
     * re-serializes per query). Timestamps ride as µs longs — the
     * lossless wire form of a TIMESTAMP(NANOS)-floored-to-µs column. */
-  private val stage = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def staged(s: SparkSession, dir: String): String =
-    stage.getOrElseUpdate(dir, {
+    graft.sources.Memo("sourceformats.landing", dir, s) {
       import s.implicits._
       val out = java.nio.file.Files.createTempDirectory("graft-landing").toString
       val ev = Tables.events(s, dir).select($"event_id",
@@ -50,7 +48,7 @@ object SourceFormats {
       ev.write.option("header", "true").mode("overwrite").csv(s"$out/events_csv")
       ev.write.mode("overwrite").json(s"$out/events_jsonl")
       out
-    })
+    }
 
   /** Per-(format, event_type) rollup of both text-format reads:
     * row count, exact value sum, µs-timestamp extrema. */
@@ -86,15 +84,13 @@ object SourceFormats {
   /** Generation split instant for the schema-evolution staging. */
   val evolutionCutoff = "2024-01-16 00:00:00"
 
-  private val evoStage = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Two parquet "generations" under one table root: generation 1
     * (rows before the cutoff) WITHOUT the `value` column — the schema
     * as it shipped — and generation 2 with it. The production reality
     * of any long-lived landing table: columns get added; old files
     * never get rewritten. */
   private def evoStaged(s: SparkSession, dir: String): String =
-    evoStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("sourceformats.evolution", dir, s) {
       import s.implicits._
       val out = java.nio.file.Files.createTempDirectory("graft-evo").toString
       val cut = lit(evolutionCutoff).cast("timestamp")
@@ -106,7 +102,7 @@ object SourceFormats {
       ev.filter($"ts" >= cut).drop("ts")
         .write.mode("overwrite").parquet(s"$out/t/gen=2")
       out
-    })
+    }
 
   /** §2.11 — schema-evolution read: both generations scanned through
     * ONE `mergeSchema` read — generation-1 rows surface `value` as
@@ -149,10 +145,8 @@ object SourceFormats {
     * from the clean parquet. */
   val badRecordMod = 97L
 
-  private val badStage = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedBad(s: SparkSession, dir: String): String =
-    badStage.getOrElseUpdate(dir, {
+    graft.sources.Memo("sourceformats.bad_landing", dir, s) {
       import s.implicits._
       val out = java.nio.file.Files.createTempDirectory("graft-badlanding").toString
       Tables.events(s, dir)
@@ -164,7 +158,7 @@ object SourceFormats {
             $"event_type", $"value"))).as("value"))
         .write.mode("overwrite").text(s"$out/events_jsonl")
       out
-    })
+    }
 
   /** §2.11 — corrupt-record quarantine: the landing JSONL contains
     * deterministically broken lines (1 in [[badRecordMod]]); the read

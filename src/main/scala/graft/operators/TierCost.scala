@@ -29,13 +29,10 @@ object TierCost {
     * deterministic function of the dataset's staged artifacts, and
     * the report invokes this on every run — before the memo each
     * invocation re-paid ~8 driver actions (LSH collision distinct,
-    * hamming shortlist join, IVF probe joins …). Keyed (dir, session)
-    * like TierMemo; the frame is 11 rows, checkpointed. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(String, SparkSession), DataFrame]
-
+    * hamming shortlist join, IVF probe joins …). The frame is 11
+    * rows, checkpointed. */
   def tierCandidates(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((dir, s),
+    graft.sources.Memo("tiercost.candidates", dir, s)(
       tierCandidatesUncached(s, dir).localCheckpoint(true))
 
   private def tierCandidatesUncached(s: SparkSession, dir: String): DataFrame = {

@@ -179,12 +179,10 @@ object Unigram {
   /** Per-(dataset, budget) training memo: vocab/segs staging and the
     * sweep all reuse one driver-side train run, the way a deploy
     * trains once and ships the artifact. */
-  private val trainMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), (Seq[(String, Long, String, Long)], Map[String, Long], Long)]
   private[graft] def trainFor(s: SparkSession, dir: String,
       seedMulti: Int = uniSeedMulti)
       : (Seq[(String, Long, String, Long)], Map[String, Long], Long) =
-    trainMemo.getOrElseUpdate((dir, seedMulti),
+    graft.sources.Memo(s"unigram.train_b$seedMulti", dir, s)(
       trainOf(Tables.documents(s, dir), seedMulti))
 
   private def vocabKey(b: Int) =
@@ -590,11 +588,6 @@ object Unigram {
        |  FROM tk JOIN sg USING (tok) GROUP BY 1),
        |${Pipeline.budgetPlanSqlTail}""".stripMargin
 
-  /** Holdout-trained model memo (the [[trainFor]] device, keyed so a
-    * full-corpus model can never be confused with the split one). */
-  private val holdoutMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long, String, Long)], Map[String, Long], Long)]
-
   /** The TRAIN-split-only segmentation lexicon applied to EVERY
     * corpus word, staged: held-out words segment under the train
     * model's DP; overlong words char-split (the documented rule);
@@ -610,7 +603,10 @@ object Unigram {
           md5(concat(lit(s"${Pipeline.splitSeed}:"), $"doc_id".cast("string"))
             .cast("binary")), 1, 4))
         .filter($"h" >= lit(Pipeline.splitValHex))
-      val (_, counts, total) = holdoutMemo.getOrElseUpdate(dir, trainOf(trainDocs))
+      // the [[trainFor]] device, under its own name so a full-corpus
+      // model can never be confused with the split one
+      val (_, counts, total) =
+        graft.sources.Memo("unigram.holdout_train", dir, s)(trainOf(trainDocs))
       val all = wordsOf(Tables.documents(s, dir), capped = false)
       val charSplit = regexp_replace($"word", "(.)", s"$SEP$$1")
       if (counts.isEmpty)

@@ -21,11 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * persisted index artifacts, written once per corpus and reused by
   * every downstream query ([[Sinks.writeBucketed]] is the bucketed
   * sibling for exchange-free probes). The write is memoized per
-  * (key, dataset); [[stage]] returns a frame READING the artifact,
-  * so consumers in the same process reuse the computed signatures
-  * instead of re-deriving them. `coalesce(1)` is test-scale
-  * convenience for the single-file glob — a cluster deploy drops it
-  * and globs the directory.
+  * (key, dataset, session) in [[Memo]]; [[stage]] returns a frame
+  * READING the artifact, so consumers in the same session reuse the
+  * computed signatures instead of re-deriving them. `coalesce(1)` is
+  * test-scale convenience for the single-file glob — a cluster deploy
+  * drops it and globs the directory.
   *
   * Oracle SQL interpolation works because Verify/VerifyOne dump
   * `SparkEntry.oracleSql` AFTER running the queries: by dump time the
@@ -36,17 +36,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object OracleStage {
   private lazy val root = Files.createTempDirectory("graft-oracle-stage").toString
-  private val memo = TrieMap.empty[(String, String), String] // (key, dir) -> path
-  private val last = TrieMap.empty[String, String]           // key -> last staged path
+  private val last = TrieMap.empty[String, String] // key -> last staged path
 
-  /** Write `df` once per (key, dataset dir), record the path for
-    * oracle interpolation, and return a frame reading the artifact. */
+  private def memoName(key: String) = s"oracle.$key"
+
+  /** Write `df` once per (key, dataset dir, session), record the path
+    * for oracle interpolation, and return a frame reading the artifact. */
   def stage(s: SparkSession, key: String, dir: String)(df: => DataFrame): DataFrame = {
-    val path = memo.getOrElseUpdate((key, dir), {
+    val path = Memo(memoName(key), dir, s) {
       val p = s"$root/${key}_${Sinks.pathDigest(dir)}"
       df.coalesce(1).write.mode("overwrite").parquet(p)
       p
-    })
+    }
     last.put(key, path)
     Parquet.read(s, path)
   }
@@ -55,9 +56,9 @@ object OracleStage {
   def globOf(key: String): Option[String] =
     last.get(key).map(p => s"$p/*.parquet")
 
-  /** The staged path for (key, dataset), if this process staged it —
+  /** The staged path for (key, dataset), if this session staged it —
     * lets a consumer read an existing artifact without constructing
     * (or re-running) the builder frame. */
-  def pathOf(key: String, dir: String): Option[String] =
-    memo.get((key, dir))
+  def pathOf(s: SparkSession, key: String, dir: String): Option[String] =
+    Memo.get[String](memoName(key), dir, s)
 }
