@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.classic.GraftPlans
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -313,13 +314,16 @@ final class BatchAccumulator[T](
     * never fire mid-flush (doFlushTransition's not_accumulating guard,
     * lib.ts:494-498). */
   def addItems(batchId: String, items: Dataset[T]): AccBatchStatus = synchronized {
-    // persist the chunk (no-op for the in-memory store) and buffer and
-    // count the READ-BACK frame, so live and recovered runs see
-    // identical data by construction and the caller's lineage runs once
+    // persist the chunk (no-op for the in-memory store) and buffer the
+    // READ-BACK frame, so live and recovered runs see identical data by
+    // construction and the caller's lineage runs once. The chunk write
+    // counts the items on the way; only the in-memory store, which runs
+    // nothing, needs a count of its own.
     val handle = s"chunk-$nextChunk"
     nextChunk += 1
-    val persisted = store.writeChunk(handle, items)
-    val n = persisted.count()
+    val obs = Observation()
+    val persisted = store.writeChunk(handle, items.observe(obs, count(lit(1))))
+    val n = GraftPlans.observed(items.sparkSession, obs).fold(persisted.count())(_.getLong(0))
     frames(handle) = persisted
     val b = batches.getOrElse(batchId,
       AccBatchRow(batchId, 0, "accumulating", 0, 0L, None, 0, Nil, Nil))

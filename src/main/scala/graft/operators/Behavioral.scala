@@ -1321,80 +1321,6 @@ object Behavioral {
        |FROM du JOIN f USING (user_id)
        |GROUP BY day ORDER BY day""".stripMargin
 
-  /** §2.10 — additive seasonal decomposition of daily revenue (the
-    * STL-lite every metrics dashboard wants): trend = centered 7-day
-    * moving average (NULL at the 3-day edges, where a centered
-    * window is undefined), seasonal = day-of-week mean of the
-    * detrended series, residual = the rest. The series is the
-    * CALENDAR-sized daily aggregate, so the single unpartitioned
-    * window runs on a ~30-row frame; every averaged quantity is
-    * 1e-6-quantized and integer-summed first (window sums and
-    * day-of-week means alike), so both engines produce identical
-    * doubles regardless of their window-aggregation internals
-    * (DuckDB's segment tree vs Spark's sliding buffer would
-    * otherwise disagree in the last ulp). Day-of-week keys by
-    * epoch-day mod 7 — pure arithmetic, immune to the engines'
-    * dayofweek numbering mismatch. */
-  def qSeasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val daily = Tables.events(s, dir)
-      .filter($"event_type" === "purchase")
-      .groupBy(to_date($"ts").as("day"))
-      .agg(dsum($"value").as("rev"))
-      .withColumn("rev_q", expr("CAST(floor(rev * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)"))
-      .withColumn("dow", expr("unix_date(day) % 7"))
-    val w = Window.orderBy($"day").rowsBetween(-3, 3)
-    val trended = daily
-      .withColumn("n_win", count(lit(1)).over(w))
-      .withColumn("trend", when($"n_win" === 7,
-        sum($"rev_q").over(w).cast("double") / lit(7.0) / lit(1000000.0)))
-      .withColumn("dq", when($"trend".isNotNull,
-        expr("CAST(floor((rev - trend) * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)")))
-      .localCheckpoint(true)
-    val seasonal = trended.filter($"dq".isNotNull)
-      .groupBy($"dow")
-      .agg((sum($"dq").cast("double") / count(lit(1)).cast("double") /
-        lit(1000000.0)).as("seasonal"))
-    trended.join(broadcast(seasonal), "dow")
-      .select($"day",
-        expr(rndSql("rev", 6)).as("rev"),
-        expr(rndSql("trend", 6)).as("trend"),
-        expr(rndSql("seasonal", 6)).as("seasonal"),
-        expr(rndSql("rev - trend - seasonal", 6)).as("residual"))
-      .orderBy($"day")
-  }
-
-  val qSeasonalDecomposeSql: String =
-    s"""WITH daily AS (
-       |  SELECT CAST(ts AS DATE) AS day, ${dsumSql("value")} AS rev
-       |  FROM events WHERE event_type = 'purchase'
-       |  GROUP BY 1),
-       |q AS (
-       |  SELECT day, rev,
-       |    CAST(floor(rev * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS rev_q,
-       |    (day - DATE '1970-01-01') % 7 AS dow
-       |  FROM daily),
-       |tr AS (
-       |  SELECT day, rev, dow,
-       |    CASE WHEN count(*) OVER w = 7
-       |      THEN CAST(sum(rev_q) OVER w AS DOUBLE) / 7.0 / 1000000.0 END AS trend
-       |  FROM q
-       |  WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-       |dt AS (
-       |  SELECT *, CASE WHEN trend IS NOT NULL
-       |    THEN CAST(floor((rev - trend) * 1000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-       |  END AS dq FROM tr),
-       |se AS (
-       |  SELECT dow, CAST(sum(dq) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0 AS seasonal
-       |  FROM dt WHERE dq IS NOT NULL GROUP BY 1)
-       |SELECT day,
-       |  ${rndSql("rev", 6)} AS rev,
-       |  ${rndSql("trend", 6)} AS trend,
-       |  ${rndSql("seasonal", 6)} AS seasonal,
-       |  ${rndSql("rev - trend - seasonal", 6)} AS residual
-       |FROM dt JOIN se USING (dow)
-       |ORDER BY day""".stripMargin
-
   /** §2.10 — Theil–Sen robust trend of daily purchase revenue: the
     * median of all pairwise day-to-day slopes — up to ~29% of the
     * daily points can be corrupted (a logging outage, a bot flood)

@@ -22,9 +22,11 @@ import graft.sources.Parquet
   * Layout: each store's control rows are write-once generations,
   * `<dir>/gen-<n>` (the iterator's job rows; the accumulator's one
   * [[AccSnapshot]] row under `<dir>/control/`). A save writes the whole
-  * row set as one parquet write into `gen-<n>.tmp` and renames it to
+  * row set as one parquet file into `gen-<n>.tmp`, on the driver and
+  * with no Spark job ([[Parquet.writeRows]]), and renames it to
   * `gen-<n>`: the rename is the commit point, as one Convex mutation
-  * commits atomically. A driver that dies inside a save leaves the
+  * commits atomically. A load reads the rows back on the driver too
+  * ([[Parquet.readRows]]). A driver that dies inside a save leaves the
   * previous generation loadable; load reads the highest committed
   * generation and ignores `.tmp` leftovers, which the next save sweeps
   * along with the superseded generations.
@@ -56,7 +58,7 @@ private[operators] final class Snapshots[A: Encoder](spark: SparkSession, dir: S
     val n = generations.maxOption.fold(0L)(_ + 1)
     val tmp = new Path(root, s"gen-$n.tmp")
     fs.delete(tmp, true) // a leftover of an interrupted save
-    spark.createDataset(rows).coalesce(1).write.parquet(tmp.toString)
+    Parquet.writeRows(spark, tmp.toString, rows)
     if (!fs.rename(tmp, new Path(root, s"gen-$n")))
       throw new java.io.IOException(s"could not commit $tmp")
     entries.filter(e => e != s"gen-$n" && e.startsWith("gen-"))
@@ -67,9 +69,7 @@ private[operators] final class Snapshots[A: Encoder](spark: SparkSession, dir: S
   // propagate: swallowing it would silently restart every multi-hour
   // job from cursor 0, re-running all process() side effects — the
   // worst possible answer to a corrupt checkpoint.
-  def load(): Option[Seq[A]] = generations.maxOption.map { n =>
-    Parquet.read(spark, s"$dir/gen-$n").as[A].collect().toSeq
-  }
+  def load(): Option[Seq[A]] = generations.maxOption.map(n => Parquet.readRows[A](spark, s"$dir/gen-$n"))
 }
 
 trait IterStateStore {

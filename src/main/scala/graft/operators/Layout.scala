@@ -19,9 +19,6 @@ import graft.sources.{Parquet, Tables}
   */
 object Layout {
 
-  /** Bits kept per key (keys are masked into [0, 2^16)). */
-  val zBits = 16
-
   /** The classic bit-spread: 16 significant bits spaced out to even
     * positions of a 32-bit word via magic masks. `shift` renders the
     * left shift per dialect (Spark SQL: `shiftleft(x, n)`; DuckDB:

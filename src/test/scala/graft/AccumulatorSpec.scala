@@ -153,4 +153,19 @@ class AccumulatorSpec extends SparkSpec {
     assert(a.getFlushHistory("b").isEmpty)
     assert(a.getAllBatchesForBaseId("b").isEmpty)
   }
+
+  test("an add on the in-memory store counts exactly and never waits on its observation") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val sink = collection.mutable.Buffer.empty[Long]
+    val a = acc(sink) // AccStore.none: the chunk write runs nothing
+    val statuses = Await.result(Future {
+      Seq(a.addItems("b", items(4)), a.addItems("b", items(3)), a.addItems("b", items(5)))
+    }, 2.minutes)
+    assert(statuses.map(s => (s.seq, s.itemCount)) == Seq((0L, 4L), (0L, 7L), (1L, 0L)))
+    // the third add crossed the threshold (12 ≥ 10) and flushed all 12
+    assert(sink.toList == List(12L))
+    assert(a.getFlushHistory("b").map(h => (h.seq, h.itemCount, h.success)) == Seq((0L, 12L, true)))
+  }
 }
