@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.Partitioner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,6 +34,7 @@ object Ranks {
   private val PID = "__graft_pid"
   private val OFF = "__graft_off"
   private val CNT = "__graft_cnt"
+  private val KEY = "__graft_key"
 
   /** The deploy-time parallelism knob: two-phase layouts derive their
     * bucket counts from `spark.sql.shuffle.partitions` instead of a
@@ -162,6 +164,67 @@ object Ranks {
   private[graft] def withBucket(df: DataFrame, keys: Seq[Column],
                                 numPartitions: Int, out: String): DataFrame =
     df.withColumn(out, pidExpr(keys, sampleBounds(df, keys, numPartitions)))
+
+  /** Routes a `(bucket id, key)` pair to the partition of its bucket. */
+  private final class BucketPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(k: Any): Int = k.asInstanceOf[(Int, Long)]._1
+  }
+
+  /** Chunk ends of the `key` order (cast to long, nulls dropped) cut
+    * every `every` rows: for each key holding a rank that is a multiple
+    * of `every`, `(key, rank of its last occurrence)`, then `(max key,
+    * row count)` if the last such rank is below the count. Keys are
+    * distinct and ascending, so the closed key ranges between
+    * consecutive ends never split a tie. O(#chunks) pairs reach the
+    * driver; Nil on a frame with no non-null key.
+    *
+    * Two jobs over the [[withBucket]] layout (its sampled bounds are
+    * memoized, so a warm frame samples nothing): per-bucket counts and
+    * the max key, read on the driver as bucket rank offsets; then the
+    * buckets whose rank range holds a multiple of `every` are sorted,
+    * one per partition, and walked in key order. Ties never straddle a
+    * bucket: the bucket id is a pure function of the key. The second
+    * job is skipped when no bucket needs a walk. */
+  private[graft] def chunkEnds(df: DataFrame, key: Column, every: Long,
+                               numPartitions: Int): Seq[(Long, Long)] = {
+    require(every > 0, s"chunk size must be positive, got $every")
+    val keys = df.select(key.cast("long").as(KEY)).filter(col(KEY).isNotNull)
+    val pairs = withBucket(keys, Seq(col(KEY)), numPartitions, PID)
+      .select(col(PID), col(KEY)).rdd.map(r => (r.getInt(0), r.getLong(1)))
+    val nb = math.max(1, numPartitions)
+    val perTask = pairs.mapPartitions { it =>
+      val c = new Array[Long](nb)
+      var mx = Long.MinValue
+      it.foreach { case (p, k) => c(p) += 1; if (k > mx) mx = k }
+      Iterator((c, mx))
+    }.collect()
+    val counts = perTask.map(_._1).transpose.map(_.sum)
+    val total = counts.sum
+    if (total == 0) return Nil
+    val maxKey = perTask.map(_._2).max
+    // offsets(p) = rows in the buckets below p; bucket p holds ranks
+    // offsets(p)+1 .. offsets(p+1)
+    val offsets = counts.scanLeft(0L)(_ + _)
+    val walk = (0 until nb).filter(p => offsets(p + 1) / every > offsets(p) / every).toSet
+    val found =
+      if (walk.isEmpty) Seq.empty[(Long, Long)]
+      else pairs.filter { case (p, _) => walk(p) }.map(pk => (pk, ()))
+        .repartitionAndSortWithinPartitions(new BucketPartitioner(nb))
+        .mapPartitionsWithIndex { (p, it) =>
+          val sorted = it.map(_._1._2).buffered
+          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+          var rank = offsets(p)
+          while (sorted.hasNext) {
+            val k = sorted.next()
+            val first = rank + 1
+            rank += 1
+            while (sorted.hasNext && sorted.head == k) { sorted.next(); rank += 1 }
+            if (rank / every > (first - 1) / every) out += ((k, rank))
+          }
+          out.iterator
+        }.collect().toSeq
+    if (found.lastOption.forall(_._2 < total)) found :+ ((maxKey, total)) else found
+  }
 
   def globalRowNumber(df: DataFrame, key: Column, numPartitions: Int, out: String): DataFrame =
     globalRowNumber(df, Seq(key), numPartitions, out)

@@ -39,10 +39,12 @@ import graft.sources.Parquet
   * [[AccStore.none]] keep the in-memory-only behavior. */
 
 /** Persistable iterator-job row ([[TableIterator]] state; mirrors the
-  * reference iteratorJobs table, schema.ts:34-55). */
+  * reference iteratorJobs table, schema.ts:34-55). `boundaries` are
+  * the closed chunk end keys, ascending; `ends(i)` is the row count
+  * through `boundaries(i)`. */
 final case class IterJobRow(
   jobId: String, status: String, processedCount: Long, cursor: Option[Long],
-  batchesDone: Long, retries: Long, lastRunAt: Long, boundaries: Seq[Long])
+  batchesDone: Long, retries: Long, lastRunAt: Long, boundaries: Seq[Long], ends: Seq[Long])
 
 /** Write-once generations of one row set under `dir` (layout above). */
 private[operators] final class Snapshots[A: Encoder](spark: SparkSession, dir: String) {

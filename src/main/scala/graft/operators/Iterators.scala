@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Ranks
@@ -147,11 +147,19 @@ final case class IterJobStatus(
 /** §2.2 #12 — the iterator as a Spark driver API (reference client
   * startIterator/pause/resume/cancel/status/list, lib.ts:736-1132).
   *
-  * Chunking is by KEY RANGES: boundary keys (every batchSize-th key)
-  * are computed once with the distributed global row number and only
-  * the O(#chunks) boundaries ever reach the driver. Each batch is
-  * then `key ∈ (lo, hi]` — an independent, pushdown-pruned scan, so
-  * 1000 executors can each own a chunk with no global coordination.
+  * Chunking is by KEY RANGES, fixed at [[start]] by two Spark jobs
+  * ([[graft.functions.Ranks.chunkEnds]]): a per-bucket count, then a
+  * walk of the sorted buckets that holds a rank multiple of
+  * batchSize. Only the O(#chunks) chunk ends reach the driver: each
+  * end key with the cumulative row count through it. Batch i is the
+  * closed range `key ∈ (end(i-1), end(i)]`. The last end is the max
+  * key, so no chunk is open-ended. A chunk ends on the last
+  * occurrence of its end key, so it never splits a tie and may hold
+  * more than batchSize rows. Each batch is an independent,
+  * pushdown-pruned scan, read once by `process`: a step launches no
+  * job of its own, and on success takes its processedCount and
+  * cursor from the chunk end. The input is read as of `start`. Rows
+  * with a null key fall in no chunk and are never counted.
   * Retries use exponential backoff 1s→30s (lib.ts:1018-1049);
   * `sleeper` is injectable for tests.
   *
@@ -179,8 +187,16 @@ final class TableIterator(
 
   private val jobs = mutable.LinkedHashMap.empty[String, IterJobRow]
 
-  // load-on-construct: resume persisted jobs (cursor, counts, status)
-  store.load().foreach(_.foreach(r => jobs(r.jobId) = r))
+  // load-on-construct: resume persisted jobs (cursor, counts, status).
+  // A row without one count per chunk end (a generation written before
+  // the counts were persisted) cannot resume: fail rather than restart.
+  store.load().foreach(_.foreach { r =>
+    if (r.ends == null || r.ends.length != r.boundaries.length)
+      throw new IllegalStateException(
+        s"iterator job ${r.jobId}: checkpoint has ${Option(r.ends).fold(0)(_.length)} chunk " +
+          s"counts for ${r.boundaries.length} chunk ends")
+    jobs(r.jobId) = r
+  })
 
   private def put(j: IterJobRow): IterJobRow = { jobs(j.jobId) = j; j }
   private def checkpoint(): Unit = store.save(jobs.values.toSeq)
@@ -190,76 +206,50 @@ final class TableIterator(
     * (lib.ts:1018-1029). */
   def backoffMs(attempt: Int): Long = math.min(1000L << attempt, 30000L)
 
-  /** Registers a job and computes its chunk boundaries (one Spark
-    * job; O(#chunks) driver memory). The job starts `pending`
-    * (reference JobStatus, client/index.ts:9, validator lib.ts:893) —
-    * the first [[step]] transitions it to `running`. */
+  /** Registers a job and computes its chunk ends (two Spark jobs, see
+    * [[Ranks.chunkEnds]]; O(#chunks) driver memory). The job starts
+    * `pending` (reference JobStatus, client/index.ts:9, validator
+    * lib.ts:893) — the first [[step]] transitions it to `running`. */
   def start(jobId: String): IterJobStatus = synchronized {
-    // boundary keys: every batchSize-th key, ascending; the final
-    // (partial) chunk is open-ended.
-    val bRows = Ranks.globalRowNumber(df.select(col(keyCol)), col(keyCol),
-        Ranks.defaultPartitions(df), "rn")
-      .filter(col("rn") % batchSize === 0)
-      .select(col(keyCol).cast("long"))
-      .orderBy(col(keyCol))
-      .collect().map(_.getLong(0))
-    save(IterJobRow(jobId, "pending", 0, None, 0, 0, clock(), bRows.toSeq))
+    val ends = Ranks.chunkEnds(df, col(keyCol), batchSize, Ranks.defaultPartitions(df))
+    save(IterJobRow(jobId, "pending", 0, None, 0, 0, clock(), ends.map(_._1), ends.map(_._2)))
     status(jobId).get
-  }
-
-  private def chunkFilter(j: IterJobRow): Option[Column] = {
-    val done = j.batchesDone.toInt
-    val lo = j.cursor
-    if (done < j.boundaries.length) {
-      val hi = j.boundaries(done)
-      Some(lo.map(c => col(keyCol) > c && col(keyCol) <= hi)
-        .getOrElse(col(keyCol) <= hi))
-    } else if (done == j.boundaries.length) {
-      // trailing partial chunk past the last boundary (or whole table
-      // if it's smaller than one batch)
-      Some(lo.map(c => col(keyCol) > c).getOrElse(lit(true)))
-    } else None
   }
 
   /** Processes one batch with retry/backoff. Returns false when the
     * job cannot advance (done, paused, cancelled, failed). A `pending`
-    * job transitions to `running` on its first step. */
+    * job transitions to `running` on its first step. The only Spark
+    * jobs a step launches are `process`'s own: the chunk's count and
+    * cursor were fixed at [[start]]. */
   def step(jobId: String): Boolean = synchronized {
     jobs.get(jobId) match {
       case Some(j0) if j0.status == "pending" || j0.status == "running" =>
         var j = put(j0.copy(status = "running"))
-        chunkFilter(j) match {
-          case None => complete(j); false
-          case Some(f) =>
-            val chunk = df.filter(f)
-            // count and cursor in one job, before process: the chunk is
-            // an immutable key range, so both equal their post-process
-            // values
-            val r = chunk.agg(count(lit(1)), max(col(keyCol)).cast("long")).head
-            val n = r.getLong(0)
-            if (n == 0) { complete(j); false }
-            else {
-              var attempt = 0
-              var ok = false
-              while (!ok && attempt <= maxRetries) {
-                try { process(chunk); ok = true }
-                catch { case _: Exception =>
-                  if (attempt < maxRetries) {
-                    sleeper(backoffMs(attempt)); j = put(j.copy(retries = j.retries + 1))
-                  }
-                  attempt += 1
-                }
+        val done = j.batchesDone.toInt
+        if (done >= j.boundaries.length) { complete(j); false }
+        else {
+          val hi = j.boundaries(done)
+          val chunk = df.filter(j.cursor.fold(col(keyCol) <= hi)(c => col(keyCol) > c && col(keyCol) <= hi))
+          var attempt = 0
+          var ok = false
+          while (!ok && attempt <= maxRetries) {
+            try { process(chunk); ok = true }
+            catch { case _: Exception =>
+              if (attempt < maxRetries) {
+                sleeper(backoffMs(attempt)); j = put(j.copy(retries = j.retries + 1))
               }
-              if (!ok) save(j.copy(status = "failed", lastRunAt = clock()))
-              else {
-                save(j.copy(processedCount = j.processedCount + n, cursor = Some(r.getLong(1)),
-                  batchesDone = j.batchesDone + 1, lastRunAt = clock()))
-                // throttle between batches (reference delayBetweenBatchesMs,
-                // lib.ts — rate-limits the downstream consumer)
-                if (delayBetweenBatchesMs > 0) sleeper(delayBetweenBatchesMs)
-              }
-              ok
+              attempt += 1
             }
+          }
+          if (!ok) save(j.copy(status = "failed", lastRunAt = clock()))
+          else {
+            save(j.copy(processedCount = j.ends(done), cursor = Some(hi),
+              batchesDone = j.batchesDone + 1, lastRunAt = clock()))
+            // throttle between batches (reference delayBetweenBatchesMs,
+            // lib.ts — rate-limits the downstream consumer)
+            if (delayBetweenBatchesMs > 0) sleeper(delayBetweenBatchesMs)
+          }
+          ok
         }
       case _ => false
     }

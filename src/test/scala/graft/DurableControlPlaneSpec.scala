@@ -368,7 +368,7 @@ class DurableControlPlaneSpec extends SparkSpec {
     val dir = tmp("graft-iter-corrupt")
     val store = IterStateStore.parquet(s, dir)
     store.save(Seq(graft.operators.IterJobRow(
-      "j", "paused", 42L, Some(7L), 2L, 0L, 1L, Seq(0L, 10L))))
+      "j", "paused", 42L, Some(7L), 2L, 0L, 1L, Seq(0L, 10L), Seq(20L, 42L))))
     assert(store.load().get.head.processedCount == 42L)
     // corrupt the snapshot in place: the next load must THROW — a
     // swallowed error here silently re-runs a multi-hour job's side

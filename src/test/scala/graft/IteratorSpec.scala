@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.TableIterator
+import graft.operators.{IterStateStore, TableIterator}
 import graft.sources.Tables
 
 class IteratorSpec extends SparkSpec {
@@ -140,5 +140,56 @@ class IteratorSpec extends SparkSpec {
     it.start("j")
     it.step("j"); it.step("j")
     assert(sleeps.toList == List(250L, 250L))
+  }
+
+  test("a non-unique key: every row once, at any batch size, across a restart") {
+    val s = spark; import s.implicits._
+    // l_orderkey repeats 1-7 times per order, so rank multiples of
+    // batchSize fall inside runs of equal keys. The rows are held in a
+    // local relation: a chunk's collect then runs on the driver, so
+    // the ~1,500 chunks of batchSize 2 take seconds, not minutes.
+    val keys = Tables.lineitem(spark, sfDir).select($"l_orderkey").as[Long].collect().sorted.toSeq
+    val li = keys.toDF("l_orderkey")
+    val chunkKeys = (df: DataFrame) => df.collect().map(_.getLong(0)).sorted.toSeq
+    val runs = Seq(2L, 3L, 7L, 1000L).map { batch =>
+      val chunks = collection.mutable.Buffer.empty[Seq[Long]]
+      val it = new TableIterator(li, "l_orderkey", batch, process = chunks += chunkKeys(_), clock = () => 7L)
+      it.start("j")
+      val st = it.runAll("j")
+      assert(st.status == "completed", s"batchSize $batch")
+      assert(st.processedCount == keys.size, s"batchSize $batch")
+      assert(chunks.map(_.size).sum == keys.size && chunks.map(_.sum).sum == keys.sum, s"batchSize $batch")
+      assert(chunks.flatten == keys, s"batchSize $batch: rows out of key order, lost or repeated")
+      assert(chunks.sliding(2).forall(p => p.size < 2 || p(0).last < p(1).head),
+        s"batchSize $batch: a tie split across chunks")
+      batch -> chunks.toList
+    }.toMap
+    // mid-job restart on the same key: the chunk sequence equals the
+    // uninterrupted run's
+    val dir = java.nio.file.Files.createTempDirectory("graft-iter-ties").toString
+    val resumed = collection.mutable.Buffer.empty[Seq[Long]]
+    def make() = new TableIterator(li, "l_orderkey", 7, process = resumed += chunkKeys(_), clock = () => 7L,
+      store = IterStateStore.parquet(spark, dir))
+    val a = make()
+    a.start("j")
+    (1 to 5).foreach(_ => assert(a.step("j")))
+    val b = make()
+    assert(b.status("j") == a.status("j"))
+    val done = b.runAll("j")
+    assert(done.status == "completed" && done.processedCount == keys.size)
+    assert(resumed.toList == runs(7L))
+  }
+
+  test("null keys are never processed or counted") {
+    val s = spark; import s.implicits._
+    val df = (Seq[Option[Long]](None, Some(3L), Some(1L), None, Some(2L), Some(2L), Some(-4L), None))
+      .toDF("k")
+    val chunks = collection.mutable.Buffer.empty[Seq[Long]]
+    val it = new TableIterator(df, "k", 2,
+      process = c => chunks += c.select($"k").as[Long].collect().sorted.toSeq, clock = () => 7L)
+    it.start("j")
+    val st = it.runAll("j")
+    assert(st.status == "completed" && st.processedCount == 5L && st.cursor.contains(3L))
+    assert(chunks.toList == List(Seq(-4L, 1L), Seq(2L, 2L), Seq(3L)))
   }
 }

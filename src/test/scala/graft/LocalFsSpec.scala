@@ -163,7 +163,7 @@ class LocalFsSpec extends SparkSpec {
       val rows = StreamOps.runAttributionToCompletion(spark, sfDir, sink = "localfs_nofork").count()
       assert(rows > 0)
       IterStateStore.parquet(spark, tmp().getPath)
-        .save(Seq(IterJobRow("j", "running", 0L, None, 0L, 0L, 0L, Seq(1L, 2L))))
+        .save(Seq(IterJobRow("j", "running", 0L, None, 0L, 0L, 0L, Seq(1L, 2L), Seq(1L, 2L))))
       new LocalFsSpecMarker().commit()
       assert(done.await(60, TimeUnit.SECONDS), "the marker event never arrived")
     } finally rs.close()

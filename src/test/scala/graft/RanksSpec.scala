@@ -142,4 +142,35 @@ class RanksSpec extends SparkSpec {
       }
     }
   }
+
+  /** Driver-side chunk ends: sort the non-null keys, take the key at
+    * every `every`-th rank once with the rank of its last occurrence,
+    * close with (max key, count). */
+  private def sortAndPick(keys: Seq[Option[Long]], every: Long): Seq[(Long, Long)] = {
+    val sorted = keys.flatten.sorted.toIndexedSeq
+    val n = sorted.length.toLong
+    val lastRank = sorted.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap
+    val picked = (every to n by every).map(r => sorted((r - 1).toInt)).distinct.map(k => (k, lastRank(k)))
+    if (n == 0) Nil else if (picked.lastOption.forall(_._2 < n)) picked :+ ((sorted.last, n)) else picked
+  }
+
+  test("chunkEnds matches a driver-side sort-and-pick") {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(7)
+    val shapes: Seq[(String, Seq[Option[Long]])] = Seq(
+      "empty"        -> Nil,
+      "single"       -> Seq(Some(5L)),
+      "all-equal"    -> Seq.fill(3000)(Some(7L)),
+      "mod-dups"     -> (0 until 6000).map(i => Some((i % 37).toLong)),
+      "head-skew"    -> ((0 until 4000).map(_ => Some(0L)) ++ (1 to 100).map(i => Some(i.toLong))),
+      "runs-of-1-7"  -> (0 until 900).flatMap(i => Seq.fill(1 + i % 7)(Some(i.toLong * 3))),
+      "null-signed"  -> (0 until 3000).map(_ =>
+        if (rnd.nextInt(5) == 0) None else Some(rnd.nextLong() % 500L)),
+      "all-null"     -> Seq.fill(10)(None))
+    for ((name, keys) <- shapes; parts <- Seq(1, 7, 32); every <- Seq(1L, 7L, 1000L, 100000L)) {
+      val df = keys.toDF("k")
+      val got = Ranks.chunkEnds(df, $"k", every, parts)
+      assert(got == sortAndPick(keys, every), s"[$name parts=$parts every=$every]")
+    }
+  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.util.LongAccumulator
 
 import graft.operators.{AccBatchRow, AccSnapshot, AccStore, BatchAccumulator, FlushRecord, IterJobRow,
-  IterStateStore, RelationalTpch}
+  IterStateStore, RelationalTpch, TableIterator}
 import graft.sources.Tables
 
 /** Building a query over parquet sources launches no Spark job: the
@@ -65,7 +65,7 @@ class ReadJobsSpec extends SparkSpec {
   test("loading a saved iterator store launches no job") {
     val dir = tmp()
     val store = IterStateStore.parquet(spark, dir)
-    store.save(Seq(IterJobRow("j", "paused", 42L, Some(7L), 2L, 0L, 1L, Seq(0L, 10L))))
+    store.save(Seq(IterJobRow("j", "paused", 42L, Some(7L), 2L, 0L, 1L, Seq(0L, 10L), Seq(20L, 42L))))
     var loaded: Option[Seq[IterJobRow]] = None
     assert(jobsOf { loaded = IterStateStore.parquet(spark, dir).load() } == 0)
     assert(loaded.get.map(_.processedCount) == Seq(42L))
@@ -73,7 +73,7 @@ class ReadJobsSpec extends SparkSpec {
 
   test("saving an iterator store or an accumulator store launches no job") {
     val iter = IterStateStore.parquet(spark, tmp())
-    assert(jobsOf(iter.save(Seq(IterJobRow("j", "running", 1L, None, 1L, 0L, 1L, Seq(0L))))) == 0)
+    assert(jobsOf(iter.save(Seq(IterJobRow("j", "running", 1L, None, 1L, 0L, 1L, Seq(0L), Seq(1L))))) == 0)
     val acc = AccStore.parquet[Long](spark, tmp())(Encoders.scalaLong)
     val snap = AccSnapshot(Seq(AccBatchRow("b", 0L, "accumulating", 3L, 1L, None, 0L, Seq("chunk-0"), Nil)),
       Nil, Seq(FlushRecord("a", 0L, 5L, 9L, 2L, success = true)), 1L)
@@ -109,5 +109,18 @@ class ReadJobsSpec extends SparkSpec {
       assert(a.addItems("b", counted(4, evals)).itemCount == 13L, name)
       assert(evals.sum == 13L, name)
     }
+  }
+
+  test("a warm iterator start launches at most two jobs and a step only its process's") {
+    val orders = Tables.orders(spark, sfDir)
+    val it = new TableIterator(orders, "o_orderkey", 1000, process = _ => (),
+      store = IterStateStore.parquet(spark, tmp()))
+    it.start("cold")
+    assert(jobsOf(it.start("j")) <= 2)
+    // 1,500 orders at sf0.001: two chunks, then the completing step
+    assert(jobsOf(assert(it.step("j"))) == 0)
+    assert(jobsOf(assert(it.step("j"))) == 0)
+    assert(jobsOf(assert(!it.step("j"))) == 0)
+    assert(it.status("j").get.status == "completed")
   }
 }

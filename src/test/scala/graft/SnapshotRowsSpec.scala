@@ -31,8 +31,8 @@ class SnapshotRowsSpec extends SparkSpec {
     AccSnapshot(Nil, Nil, Nil, 0L))
 
   private val jobs = Seq(
-    IterJobRow("j", "paused", 42L, Some(7L), 2L, 0L, 1L, Seq(0L, 10L)),
-    IterJobRow("k", "pending", 0L, None, 0L, 3L, 0L, Nil))
+    IterJobRow("j", "paused", 42L, Some(7L), 2L, 0L, 1L, Seq(0L, 10L), Seq(20L, 42L)),
+    IterJobRow("k", "pending", 0L, None, 0L, 3L, 0L, Nil, Nil))
 
   /** Spark's own write of `rows`: one task, so one part file, plus
     * `_SUCCESS` and the checksum files. */
@@ -126,6 +126,20 @@ class SnapshotRowsSpec extends SparkSpec {
     assert(b.runAll("j").processedCount == orders.count())
   }
 
+  test("an iterator over a generation without chunk counts fails loudly instead of restarting") {
+    import spark.implicits._
+    val orders: DataFrame = Tables.orders(spark, sfDir)
+    val old = Seq(IterJobRowWithoutEnds("j", "paused", 800L, Some(800L), 2L, 0L, 1L, Seq(400L, 800L, 1200L)))
+    for (write <- Seq[(Seq[IterJobRowWithoutEnds], String) => Unit]((rows, dir) => Parquet.writeRows(spark, dir, rows), sparkWrite(_, _))) {
+      val dir = tmp("graft-rows-old-iter")
+      write(old, s"$dir/gen-0")
+      val e = intercept[IllegalStateException] {
+        new TableIterator(orders, "o_orderkey", 400, process = _ => (), store = IterStateStore.parquet(spark, dir))
+      }
+      assert(e.getMessage.contains("chunk counts"), e.getMessage)
+    }
+  }
+
   test("a generation whose data file is gone fails to load") {
     val dir = tmp("graft-rows-gone")
     val store = IterStateStore.parquet(spark, dir)
@@ -157,3 +171,9 @@ class SnapshotRowsSpec extends SparkSpec {
     }
   }
 }
+
+/** The iterator-job row as persisted before the per-chunk row counts
+  * (`IterJobRow.ends`) were added. */
+final case class IterJobRowWithoutEnds(
+  jobId: String, status: String, processedCount: Long, cursor: Option[Long],
+  batchesDone: Long, retries: Long, lastRunAt: Long, boundaries: Seq[Long])
