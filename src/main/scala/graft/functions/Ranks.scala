@@ -45,15 +45,20 @@ object Ranks {
   def defaultPartitions(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Lexicographic driver-side ordering over sampled key tuples.
-    * Key columns are simple orderable types (long, int, double,
-    * string, timestamp, decimal) by contract; each implements
-    * Comparable. */
+  /** Lexicographic driver-side ordering over sampled key tuples,
+    * nulls first (Spark's ascending default). Key columns are simple
+    * orderable types (long, int, double, string, timestamp, decimal)
+    * by contract; each implements Comparable. */
   private val rowOrd: Ordering[Seq[Any]] = new Ordering[Seq[Any]] {
     def compare(a: Seq[Any], b: Seq[Any]): Int = {
       var i = 0
       while (i < a.length) {
-        val c = a(i).asInstanceOf[Comparable[Any]].compareTo(b(i))
+        val c = (a(i), b(i)) match {
+          case (null, null) => 0
+          case (null, _) => -1
+          case (_, null) => 1
+          case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+        }
         if (c != 0) return c
         i += 1
       }
@@ -141,10 +146,14 @@ object Ranks {
     * branches by construction. Codegen-friendly: a chain of
     * comparisons against literals, no lambda, no shuffle. */
   private def pidExpr(keys: Seq[Column], bounds: Seq[Seq[Any]]): Column = {
+    // nulls first, as rowOrd sorts the bounds: a non-null key exceeds a
+    // null bound and a null key equals one. Against a non-null bound a
+    // null key compares to null, which `when` reads as "not above".
+    def gt(i: Int, v: Any): Column = if (v == null) keys(i).isNotNull else keys(i) > lit(v)
+    def eq(i: Int, v: Any): Column = if (v == null) keys(i).isNull else keys(i) === lit(v)
     def gtBound(b: Seq[Any], i: Int): Column =
-      if (i == keys.length - 1) keys(i) > lit(b(i))
-      else (keys(i) > lit(b(i))) ||
-        (keys(i) === lit(b(i)) && gtBound(b, i + 1))
+      if (i == keys.length - 1) gt(i, b(i))
+      else gt(i, b(i)) || (eq(i, b(i)) && gtBound(b, i + 1))
     bounds.map(b => when(gtBound(b, 0), 1).otherwise(0))
       .reduceOption(_ + _).getOrElse(lit(0))
   }

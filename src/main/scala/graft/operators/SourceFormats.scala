@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 import graft.functions.Agg.{countIf, dsum, dsumSql}
 import graft.sources.Tables
+import graft.streaming.StreamRun
 
 /** §2.11 Landing-format sources — CSV and JSON-lines ingestion.
   *
@@ -223,24 +225,16 @@ object SourceFormats {
     * shard would kill the whole tail). */
   def streamBadRecords(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val root = stagedBad(s, dir)
     // the reconciliation aggregate runs INSIDE the stream (complete
-    // mode): the sink holds |types|+1 rows, not one row per event —
-    // an append-mode raw sink would grow with the corpus on the
-    // driver. Shares quarantineReconcile with the batch read.
+    // mode): each micro-batch rewrites |types|+1 rows, not one row
+    // per event. Shares quarantineReconcile with the batch read.
     val agg = quarantineReconcile(
       s.readStream.schema(quarantineSchema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(s"$root/events_jsonl"))
-    val q = agg.writeStream
-      .format("memory").queryName("stream_bad_records_sink")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table("stream_bad_records_sink")
+    StreamRun.toCompletion(agg, OutputMode.Complete)
       .orderBy($"status", $"event_type")
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.Accumulator
 import graft.sources.{Parquet, Sinks}
@@ -65,19 +65,11 @@ object StreamAcc {
               $"item_count", $"first_ts", $"last_ts")
   }
 
-  /** Runs the stream to completion over the existing files
-    * (Trigger.AvailableNow) into an in-memory table; returns the
-    * materialized flushes. Used by the parity spec and the
-    * `stream_acc_time_flush` rows check. */
-  def runToCompletion(s: SparkSession, dir: String, sink: String = "stream_acc"): DataFrame = {
-    val q = streamingFlushes(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
-  }
+  /** Runs the stream to completion over the existing files in
+    * complete mode ([[StreamRun]]); returns the flushes. Used by the
+    * parity spec and the `stream_acc_time_flush` rows check. */
+  def runToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(streamingFlushes(s, dir), OutputMode.Complete)
 
   /** The PRODUCTION shape of the streaming flush: append output mode
     * with the watermark doing the flushing. Complete mode
@@ -92,22 +84,14 @@ object StreamAcc {
     * literal. StreamAccSpec proves the bounded-state contract: emitted
     * windows = the batch result MINUS windows the final watermark
     * (max event time − 1 h) hasn't closed. */
-  def runAppendToCompletion(s: SparkSession, dir: String,
-                            sink: String = "stream_acc_append"): DataFrame = {
-    val q = streamingFlushes(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
-  }
+  def runAppendToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(streamingFlushes(s, dir), OutputMode.Append)
 
   /** Driver-contract entry (parity with the batch result is also
     * asserted in StreamAccSpec). */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_acc_time_flush" -> ((s, dir) => runToCompletion(s, dir, sink = "stream_acc_verify")),
-    "stream_acc_flush_closed" -> ((s, dir) => runAppendToCompletion(s, dir, sink = "stream_acc_closed_verify"))
+    "stream_acc_time_flush" -> (runToCompletion _),
+    "stream_acc_flush_closed" -> (runAppendToCompletion _)
   )
 
   /** DuckDB oracle: with AvailableNow + complete mode the streaming

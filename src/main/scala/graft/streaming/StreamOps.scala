@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.operators.Accumulator
-import graft.sources.Parquet
 
 /** Event shape for stateful streaming ops (micros keep the parquet's
   * sub-millisecond precision through the typed boundary). */
@@ -111,16 +110,8 @@ object StreamOps {
         $"sw.end".as("session_end"), $"n_events", $"sum_value")
   }
 
-  def runSessionsToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_sessions"): DataFrame = {
-    val q = sessionWindows(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
-  }
+  def runSessionsToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(sessionWindows(s, dir), OutputMode.Complete)
 
   private def sizeFlushFn(threshold: Long)(
       batchId: String,
@@ -156,16 +147,9 @@ object StreamOps {
   }
 
   def runSizeFlushesToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_size_flush",
       threshold: Long = Accumulator.threshold): DataFrame = {
     import s.implicits._
-    val q = sizeFlushes(s, dir, threshold).toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    StreamRun.toCompletion(sizeFlushes(s, dir, threshold).toDF(), OutputMode.Append)
       .select($"batch_id", $"seq", $"item_count",
         timestamp_micros($"min_us").as("created_at"),
         timestamp_micros($"max_us").as("last_updated_at"))
@@ -206,16 +190,9 @@ object StreamOps {
     graft.operators.QualityModel.scoreDocs(s, dir,
       StreamAcc.fileStream(s, dir, "documents"))
 
-  def runQualityScoreToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_qscore"): DataFrame = {
-    val q = qualityScoreStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("doc_id"))
-  }
+  def runQualityScoreToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(qualityScoreStream(s, dir), OutputMode.Append)
+      .orderBy(col("doc_id"))
 
   /** §2.8/streaming — continuous corpus heavy hitters: the exact
     * token-count aggregation run as a streaming aggregation over the
@@ -225,24 +202,16 @@ object StreamOps {
     * law), merged incrementally each micro-batch with map-side
     * partials; at 100 TB the store is RocksDB-backed and
     * hash-partitioned, exactly the batch shuffle's layout. Complete
-    * mode into the memory sink is the verify harness; production
-    * runs update mode into a keyed sink (each micro-batch emits only
-    * tokens it touched). The support cut n·(k+1) > total and top-N
-    * run on the (tiny) materialized count table. Shares the batch
-    * oracle verbatim. */
+    * mode is the verify harness; production runs update mode into a
+    * keyed sink (each micro-batch emits only tokens it touched). The
+    * support cut n·(k+1) > total and top-N run on the (tiny)
+    * materialized count table. Shares the batch oracle verbatim. */
   def heavyHittersStream(s: SparkSession, dir: String): DataFrame =
     graft.operators.Pipeline.tokenCountsOn(StreamAcc.fileStream(s, dir, "documents"))
 
-  def runHeavyHittersToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_hh"): DataFrame = {
+  def runHeavyHittersToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val q = heavyHittersStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val t = s.table(sink)
+    val t = StreamRun.toCompletion(heavyHittersStream(s, dir), OutputMode.Complete)
     val total = broadcast(t.agg(sum($"n_occurrences").as("n_total")))
     t.crossJoin(total)
       .filter($"n_occurrences" * (graft.operators.Pipeline.hhK + 1) > $"n_total")
@@ -277,19 +246,12 @@ object StreamOps {
       .select($"w.start".as("window_start"), $"k", $"n_occurrences")
   }
 
-  def runWindowedHeavyHittersToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_hh_win"): DataFrame = {
+  def runWindowedHeavyHittersToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val q = windowedHeavyHitters(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val w = Window.partitionBy($"window_start")
       .orderBy($"n_occurrences".desc, $"k")
-    s.table(sink)
+    StreamRun.toCompletion(windowedHeavyHitters(s, dir), OutputMode.Append)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= hhWindowTopN)
       .select($"window_start", $"rank", $"k", $"n_occurrences")
@@ -340,19 +302,12 @@ object StreamOps {
       .select($"w.start".as("window_start"), $"n_a", $"n_b")
   }
 
-  def runWindowedSrmToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_srm_win"): DataFrame = {
+  def runWindowedSrmToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Agg.rndSql
-    val q = windowedSrm(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val chi2 = "(CAST(n_a AS DOUBLE) - e) * (CAST(n_a AS DOUBLE) - e) / e + " +
       "(CAST(n_b AS DOUBLE) - e) * (CAST(n_b AS DOUBLE) - e) / e"
-    s.table(sink)
+    StreamRun.toCompletion(windowedSrm(s, dir), OutputMode.Append)
       .withColumn("e", ($"n_a" + $"n_b").cast("double") / lit(2.0))
       .select($"window_start", $"n_a", $"n_b",
         expr(rndSql(chi2, 6)).as("chi2"),
@@ -382,16 +337,9 @@ object StreamOps {
        |FROM closed ORDER BY window_start""".stripMargin
   }
 
-  def runQualityFilterToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_quality"): DataFrame = {
-    val q = qualityFilterStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("doc_id"))
-  }
+  def runQualityFilterToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(qualityFilterStream(s, dir), OutputMode.Append)
+      .orderBy(col("doc_id"))
 
   /** §2.8 — STREAMING span decontamination: the
     * [[graft.operators.Pipeline.decontaminateSpan]] release gate run
@@ -454,8 +402,7 @@ object StreamOps {
     * coalesce short-circuits, so known words never pay it. Measured
     * at sf≈1 the lexicon join is a modest win on its own (56.4 →
     * 51.4 s against the memory sink — the sink dominated); the big
-    * cost was the driver-side sink, fixed in
-    * [[runBpeEncodeToCompletion]]. */
+    * cost was the driver-side sink (see [[runBpeEncodeToCompletion]]). */
   def bpeEncodeStream(s: SparkSession, dir: String,
       lexOverride: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
@@ -487,31 +434,15 @@ object StreamOps {
         ($"pp0" + 1).cast("long").as("piece_pos"), $"piece")
   }
 
-  /** Unlike every other run-to-completion helper here, this one sinks
-    * to PARQUET, not the in-memory table: the encode emits one row per
-    * (doc, token, piece) — corpus-sized output, the only stream in the
-    * suite whose result doesn't aggregate down. A memory sink funnels
-    * all of it through the driver (the exact anti-pattern a
-    * 1000-executor deployment can't survive); the file sink writes
-    * executor-side, which is also how a production ingest tokenizer
-    * actually lands tokens. Measured at sf≈1: 56.4 s (memory sink,
-    * per-instance chain) → 51.4 s (memory sink + broadcast lexicon)
-    * → 9.7 s (file sink + broadcast lexicon). */
+  /** The encode emits one row per (doc, token, piece): corpus-sized
+    * output, written executor-side by [[StreamRun]] as a production
+    * ingest tokenizer lands tokens. Measured at sf≈1: 56.4 s (memory
+    * sink, per-instance chain) → 51.4 s (memory sink + broadcast
+    * lexicon) → 9.7 s (file sink + broadcast lexicon). */
   def runBpeEncodeToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_bpe",
-      lexOverride: Option[DataFrame] = None): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory(sink).toString
-    val q = bpeEncodeStream(s, dir, lexOverride).writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Parquet.read(s, s"$out/data")
+      lexOverride: Option[DataFrame] = None): DataFrame =
+    StreamRun.toCompletion(bpeEncodeStream(s, dir, lexOverride), OutputMode.Append)
       .orderBy(col("doc_id"), col("pos"), col("piece_pos"))
-  }
 
   /** §2.8 42e' — the UNIGRAM encoder run at ingest (the streaming
     * sibling of [[bpeEncodeStream]] for the second tokenizer family):
@@ -564,31 +495,13 @@ object StreamOps {
   }
 
   def runUnigramEncodeToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_unigram",
-      lexOverride: Option[DataFrame] = None): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory(sink).toString
-    val q = unigramEncodeStream(s, dir, lexOverride).writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Parquet.read(s, s"$out/data")
+      lexOverride: Option[DataFrame] = None): DataFrame =
+    StreamRun.toCompletion(unigramEncodeStream(s, dir, lexOverride), OutputMode.Append)
       .orderBy(col("doc_id"), col("pos"), col("piece_pos"))
-  }
 
-  def runDecontaminateSpanToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_decontam"): DataFrame = {
-    val q = decontaminateSpanStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("doc_id"))
-  }
+  def runDecontaminateSpanToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(decontaminateSpanStream(s, dir), OutputMode.Append)
+      .orderBy(col("doc_id"))
 
   /** §2.8 #44e' — the SEMANTIC release gate run AT INGEST: the
     * bounded eval-set embeddings ship as a literal (the 44c'
@@ -667,27 +580,13 @@ object StreamOps {
       .dropDuplicates("corpus_id", "new_id")
   }
 
-  def runMmNearDupToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_mm_near"): DataFrame = {
-    val q = mmNearDupStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("new_id"), col("corpus_id"))
-  }
+  def runMmNearDupToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(mmNearDupStream(s, dir), OutputMode.Append)
+      .orderBy(col("new_id"), col("corpus_id"))
 
-  def runDecontaminateSemanticToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_semdecontam"): DataFrame = {
-    val q = decontaminateSemanticStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("vec_id"))
-  }
+  def runDecontaminateSemanticToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(decontaminateSemanticStream(s, dir), OutputMode.Append)
+      .orderBy(col("vec_id"))
 
   /** §2.4 29e''' — duplicated-SPAN REMOVAL at ingest: the streaming
     * gate of [[graft.operators.Dedup.dedupSpanRemoval]]. Arriving
@@ -698,7 +597,7 @@ object StreamOps {
     * shuffle onto the bucket layout, the index is read exchange-free
     * (the 29d/36g' probe pattern). The probe emits the covered token
     * positions row-by-row (no stream-side aggregation — corpus-sized
-    * output goes to the parquet sink, the 42e' rationale); the
+    * output stays executor-side, the 42e' rationale); the
     * island-merge + cut + reassembly is the run-to-completion rebuild
     * over the probe output, THE SAME tail the batch operator runs
     * ([[graft.operators.Dedup.spanRemovalFromCovered]]), so completed
@@ -717,32 +616,12 @@ object StreamOps {
         expr(s"sequence(pos, pos + ${Dedup.spanTokens - 1})")).as("off"))
   }
 
-  def runDedupSpanToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_span"): DataFrame = {
+  def runDedupSpanToCompletion(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     Dedup.buildSpanIndex(s, dir)
-    val out = java.nio.file.Files.createTempDirectory(sink).toString
-    val q = spanRemovalProbeStream(s, dir).writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // materialize the covered frame (lineage cut off the temp files),
-    // then delete the run's sink/checkpoint dirs — repeated stream
-    // runs must not accumulate temp data
-    val covered = Parquet.read(s, s"$out/data")
+    val covered = StreamRun.toCompletion(spanRemovalProbeStream(s, dir), OutputMode.Append)
       .dropDuplicates("doc_id", "off")
-      .localCheckpoint(true)
-    deleteRecursively(new java.io.File(out))
     Dedup.spanRemovalFromCovered(s, dir, covered)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 
   /** Continuous-ingest EXACT dedup: the §2.4 `dedup_exact` layout run
@@ -761,16 +640,9 @@ object StreamOps {
       .agg(min($"doc_id").as("canonical_id"), count(lit(1)).as("n_copies"))
   }
 
-  def runDedupExactToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_dedup"): DataFrame = {
-    val q = dedupExactStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("canonical_id"))
-  }
+  def runDedupExactToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(dedupExactStream(s, dir), OutputMode.Complete)
+      .orderBy(col("canonical_id"))
 
   /** Continuous LATEST-STATE materialization (the CDC latest-wins
     * upsert): per user, the most recent event by (ts, event_id) plus
@@ -806,16 +678,9 @@ object StreamOps {
         $"latest.value".as("last_value"), $"n_updates")
   }
 
-  def runLatestStateToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_latest"): DataFrame = {
-    val q = latestStateStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("user_id"))
-  }
+  def runLatestStateToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(latestStateStream(s, dir), OutputMode.Complete)
+      .orderBy(col("user_id"))
 
   /** Run to completion, the latest-wins merge equals the batch
     * argmax row per user. The oracle takes the SAME (ts, event_id)
@@ -861,33 +726,22 @@ object StreamOps {
         $"purchase_ts", $"click_ts")
   }
 
-  def runAttributionToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_attrib"): DataFrame = {
-    // a stream-stream join keeps TWO state stores per side per
-    // partition (keyToNumValues, keyWithIndexToValue): 4 per
-    // partition, 16 store instances at 4 state partitions. Each store
-    // commits a delta file every micro-batch, so commit cost grows
-    // with the partition count, not the rows: at sf0.01 on 4 cores
-    // the 16 commits of one micro-batch sum to 45-130 ms of task time
-    // (with graft.sources.LocalFs; Hadoop's forking local file system
-    // made it 1.0-1.25 s). The state partition count (pinned at the
-    // first batch from shuffle.partitions) is therefore capped for
-    // this query. On a cluster the deploy sets it to the executor
-    // count — the knob, not the value, is the point. Results are
-    // partition-invariant.
-    val key = "spark.sql.shuffle.partitions"
-    val orig = s.conf.get(key)
-    val q = try {
-      s.conf.set(key, math.min(8, orig.toInt).toString)
-      attributionJoin(s, dir).writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally s.conf.set(key, orig)
-    q.awaitTermination()
-    s.table(sink).orderBy(col("purchase_id"), col("click_id"))
-  }
+  /** A stream-stream join keeps TWO state stores per side per
+    * partition (keyToNumValues, keyWithIndexToValue): 4 per
+    * partition, 16 store instances at 4 state partitions. Each store
+    * commits a delta file every micro-batch, so commit cost grows
+    * with the partition count, not the rows: at sf0.01 on 4 cores
+    * the 16 commits of one micro-batch sum to 45-130 ms of task time
+    * (with graft.sources.LocalFs; Hadoop's forking local file system
+    * made it 1.0-1.25 s). Both attribution joins therefore cap their
+    * state partitions at this count. On a cluster the deploy sets it
+    * to the executor count — the knob, not the value, is the point.
+    * Results are partition-invariant. */
+  private val attributionStatePartitions = Some(8)
+
+  def runAttributionToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(attributionJoin(s, dir), OutputMode.Append,
+      attributionStatePartitions).orderBy(col("purchase_id"), col("click_id"))
 
   /** §2.4 — LEFT OUTER stream-stream interval join: the shape
     * production attribution actually ships. The inner join (29g)
@@ -923,25 +777,13 @@ object StreamOps {
         $"purchase_ts", $"click_ts")
   }
 
-  def runAttributionOuterToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_attrib_outer"): DataFrame = {
-    // same state-partition cap as the inner variant: 4 state stores
-    // per partition, each committing every micro-batch
-    val key = "spark.sql.shuffle.partitions"
-    val orig = s.conf.get(key)
-    val q = try {
-      s.conf.set(key, math.min(8, orig.toInt).toString)
-      attributionOuterJoin(s, dir).writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally s.conf.set(key, orig)
-    q.awaitTermination()
+  def runAttributionOuterToCompletion(s: SparkSession, dir: String): DataFrame = {
+    val out = StreamRun.toCompletion(attributionOuterJoin(s, dir), OutputMode.Append,
+      attributionStatePartitions)
     // (purchase_id, click_id) is a total order even with nulls:
     // a null click_id only ever appears as its purchase's singleton
     // row, so null-ordering conventions never tie-break
-    s.table(sink).orderBy(col("purchase_id"), col("click_id"))
+    out.orderBy(col("purchase_id"), col("click_id"))
   }
 
   /** Oracle for the outer variant: the batch interval join plus the
@@ -1040,16 +882,9 @@ object StreamOps {
         $"valid_from_us")
   }
 
-  def runScd2EnrichToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_scd2"): DataFrame = {
-    val q = scd2EnrichStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("event_id"))
-  }
+  def runScd2EnrichToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(scd2EnrichStream(s, dir), OutputMode.Append)
+      .orderBy(col("event_id"))
 
   /** Oracle: the identical batch temporal join. */
   val scd2EnrichSql: String =
@@ -1132,16 +967,9 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(funnelFn)
   }
 
-  def runFunnelToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_funnel"): DataFrame = {
+  def runFunnelToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val q = funnelHits(s, dir).toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    StreamRun.toCompletion(funnelHits(s, dir).toDF(), OutputMode.Append)
       .select($"user_id", $"step", timestamp_micros($"ts_us").as("ts"))
       .orderBy($"user_id", $"step")
   }
@@ -1238,16 +1066,9 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(resampleFn)
   }
 
-  def runResampleToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_resample"): DataFrame = {
+  def runResampleToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val q = resampleStream(s, dir).toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    StreamRun.toCompletion(resampleStream(s, dir).toDF(), OutputMode.Append)
       .select($"event_type", timestamp_micros($"bucket_us").as("bucket_ts"),
         $"avg_value", $"n_obs", $"src")
       .orderBy($"event_type", $"bucket_ts")
@@ -1343,16 +1164,10 @@ object StreamOps {
     * the count/normalize rollup runs on the emitted pairs — bounded
     * by observed transitions — exactly as [[Behavioral.qMarkov]]
     * does, so this shares its oracle verbatim. */
-  def runMarkovToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_markov"): DataFrame = {
+  def runMarkovToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val q = markovPairsFrom(StreamAcc.eventsStream(s, dir)).toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val pairs = s.table(sink)
+    val pairs = StreamRun.toCompletion(
+        markovPairsFrom(StreamAcc.eventsStream(s, dir)).toDF(), OutputMode.Append)
       .groupBy($"prev_type", $"next_type")
       .agg(count(lit(1)).as("n_pairs"))
     val marg = pairs.groupBy($"prev_type".as("from_type"))
@@ -1424,16 +1239,9 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(anomalyFn)
   }
 
-  def runAnomaliesToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_anomaly"): DataFrame = {
+  def runAnomaliesToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val q = anomaliesFrom(StreamAcc.eventsStream(s, dir)).toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    StreamRun.toCompletion(anomaliesFrom(StreamAcc.eventsStream(s, dir)).toDF(), OutputMode.Append)
       .select($"event_type", $"event_id", $"value", $"n_prior", $"zscore")
       .orderBy($"event_type", $"event_id")
   }
@@ -1520,16 +1328,9 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(rateLimitFn)
   }
 
-  def runRateLimitToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_rate_limit"): DataFrame = {
+  def runRateLimitToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val q = rateLimitFrom(StreamAcc.eventsStream(s, dir)).toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    StreamRun.toCompletion(rateLimitFrom(StreamAcc.eventsStream(s, dir)).toDF(), OutputMode.Append)
       .select($"user_id", $"event_id",
         timestamp_micros($"bucket_us").as("window_start"), $"admit_seq")
       .orderBy($"user_id", $"event_id")
@@ -1589,16 +1390,9 @@ object StreamOps {
       .dropDuplicates("corpus_id", "new_id")
   }
 
-  def runEmbedDedupToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_embed_dedup"): DataFrame = {
-    val q = embedDedupStream(s, dir).writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy(col("new_id"), col("corpus_id"))
-  }
+  def runEmbedDedupToCompletion(s: SparkSession, dir: String): DataFrame =
+    StreamRun.toCompletion(embedDedupStream(s, dir), OutputMode.Append)
+      .orderBy(col("new_id"), col("corpus_id"))
 
   /** Oracle: the all-pairs corpus×incoming cosine τ-cut (banding
     * recall is total at the driver SFs — the dedup_embedding
@@ -1792,24 +1586,15 @@ object StreamOps {
     * by users × active days — exactly as
     * [[graft.operators.Behavioral.qDauNewReturning]] does, so this
     * shares its oracle verbatim. */
-  def runDauToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_dau"): DataFrame = {
+  def runDauToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pairs = StreamAcc.eventsStream(s, dir)
       .select($"user_id", expr("unix_date(to_date(ts))").cast("int").as("day"))
       .as[DauEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(dauFn)
-    val q = pairs.toDF().writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val du = s.table(sink)
-    // fresh read for the first-touch side: deriving both join inputs
-    // from ONE memory-table frame leaves conflicting attribute ids
-    val first = s.table(sink).groupBy($"user_id").agg(min($"day").as("first_day"))
+    val du = StreamRun.toCompletion(pairs.toDF(), OutputMode.Append)
+    val first = du.groupBy($"user_id").agg(min($"day").as("first_day"))
       .withColumnRenamed("user_id", "fu")
     du.join(first, $"user_id" === $"fu")
       .groupBy($"day")
@@ -1831,79 +1616,46 @@ object StreamOps {
     * .qAbtest]] readout and this shares its oracle verbatim. State is
     * bounded by #metrics × 6 numbers — nothing event-sized survives a
     * batch. */
-  def runAbtestToCompletion(s: SparkSession, dir: String,
-      sink: String = "stream_abtest"): DataFrame = {
+  def runAbtestToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.operators.Experimentation.{welchAggs, welchReadout}
     val st = StreamAcc.eventsStream(s, dir)
       .withColumn("a", $"user_id" % 2 === 0)
       .groupBy($"event_type")
       .agg(welchAggs.head, welchAggs.tail: _*)
-    val q = st.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    welchReadout(s.table(sink))
+    welchReadout(StreamRun.toCompletion(st, OutputMode.Complete))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_abtest" -> ((s, dir) =>
-      runAbtestToCompletion(s, dir, sink = "stream_abtest_verify")),
-    "stream_srm_windowed" -> ((s, dir) =>
-      runWindowedSrmToCompletion(s, dir, sink = "stream_srm_verify")),
-    "stream_dau" -> ((s, dir) =>
-      runDauToCompletion(s, dir, sink = "stream_dau_verify")),
-    "stream_embed_dedup" -> ((s, dir) =>
-      runEmbedDedupToCompletion(s, dir, sink = "stream_embed_dedup_verify")),
+    "stream_abtest" -> (runAbtestToCompletion _),
+    "stream_srm_windowed" -> (runWindowedSrmToCompletion _),
+    "stream_dau" -> (runDauToCompletion _),
+    "stream_embed_dedup" -> (runEmbedDedupToCompletion _),
     "stream_ivf_ingest" -> (runIvfIngestToCompletion _),
     "stream_bm25_ingest" -> (runBm25IngestToCompletion _),
     "stream_takedown" -> (runTakedownToCompletion _),
-    "stream_rate_limit" -> ((s, dir) =>
-      runRateLimitToCompletion(s, dir, sink = "stream_rate_limit_verify")),
-    "stream_anomaly" -> ((s, dir) =>
-      runAnomaliesToCompletion(s, dir, sink = "stream_anomaly_verify")),
-    "stream_markov" -> ((s, dir) =>
-      runMarkovToCompletion(s, dir, sink = "stream_markov_verify")),
-    "stream_resample" -> ((s, dir) =>
-      runResampleToCompletion(s, dir, sink = "stream_resample_verify")),
-    "stream_funnel" -> ((s, dir) =>
-      runFunnelToCompletion(s, dir, sink = "stream_funnel_verify")),
-    "stream_sessionize" -> ((s, dir) =>
-      runSessionsToCompletion(s, dir, sink = "stream_sessions_verify")),
-    "stream_acc_size_flush" -> ((s, dir) =>
-      runSizeFlushesToCompletion(s, dir, sink = "stream_size_flush_verify")),
-    "stream_quality_filter" -> ((s, dir) =>
-      runQualityFilterToCompletion(s, dir, sink = "stream_quality_verify")),
-    "stream_decontaminate_span" -> ((s, dir) =>
-      runDecontaminateSpanToCompletion(s, dir, sink = "stream_decontam_verify")),
-    "stream_decontaminate_semantic" -> ((s, dir) =>
-      runDecontaminateSemanticToCompletion(s, dir, sink = "stream_semdecontam_verify")),
-    "stream_bpe_encode" -> ((s, dir) =>
-      runBpeEncodeToCompletion(s, dir, sink = "stream_bpe_verify")),
-    "stream_unigram_encode" -> ((s, dir) =>
-      runUnigramEncodeToCompletion(s, dir, sink = "stream_unigram_verify")),
-    "stream_dedup_exact" -> ((s, dir) =>
-      runDedupExactToCompletion(s, dir, sink = "stream_dedup_verify")),
-    "stream_dedup_span" -> ((s, dir) =>
-      runDedupSpanToCompletion(s, dir, sink = "stream_span_verify")),
-    "stream_latest_state" -> ((s, dir) =>
-      runLatestStateToCompletion(s, dir, sink = "stream_latest_verify")),
-    "stream_scd2_join" -> ((s, dir) =>
-      runScd2EnrichToCompletion(s, dir, sink = "stream_scd2_verify")),
-    "stream_quality_score" -> ((s, dir) =>
-      runQualityScoreToCompletion(s, dir, sink = "stream_qscore_verify")),
-    "stream_attribution_join" -> ((s, dir) =>
-      runAttributionToCompletion(s, dir, sink = "stream_attrib_verify")),
-    "stream_attribution_outer" -> ((s, dir) =>
-      runAttributionOuterToCompletion(s, dir, sink = "stream_attrib_outer_verify")),
-    "stream_heavy_hitters" -> ((s, dir) =>
-      runHeavyHittersToCompletion(s, dir, sink = "stream_hh_verify")),
-    "stream_hh_windowed" -> ((s, dir) =>
-      runWindowedHeavyHittersToCompletion(s, dir, sink = "stream_hh_win_verify")),
-    "stream_mm_dedup_near" -> ((s, dir) =>
-      runMmNearDupToCompletion(s, dir, sink = "stream_mm_near_verify"))
+    "stream_rate_limit" -> (runRateLimitToCompletion _),
+    "stream_anomaly" -> (runAnomaliesToCompletion _),
+    "stream_markov" -> (runMarkovToCompletion _),
+    "stream_resample" -> (runResampleToCompletion _),
+    "stream_funnel" -> (runFunnelToCompletion _),
+    "stream_sessionize" -> (runSessionsToCompletion _),
+    "stream_acc_size_flush" -> ((s, dir) => runSizeFlushesToCompletion(s, dir)),
+    "stream_quality_filter" -> (runQualityFilterToCompletion _),
+    "stream_decontaminate_span" -> (runDecontaminateSpanToCompletion _),
+    "stream_decontaminate_semantic" -> (runDecontaminateSemanticToCompletion _),
+    "stream_bpe_encode" -> ((s, dir) => runBpeEncodeToCompletion(s, dir)),
+    "stream_unigram_encode" -> ((s, dir) => runUnigramEncodeToCompletion(s, dir)),
+    "stream_dedup_exact" -> (runDedupExactToCompletion _),
+    "stream_dedup_span" -> (runDedupSpanToCompletion _),
+    "stream_latest_state" -> (runLatestStateToCompletion _),
+    "stream_scd2_join" -> (runScd2EnrichToCompletion _),
+    "stream_quality_score" -> (runQualityScoreToCompletion _),
+    "stream_attribution_join" -> (runAttributionToCompletion _),
+    "stream_attribution_outer" -> (runAttributionOuterToCompletion _),
+    "stream_heavy_hitters" -> (runHeavyHittersToCompletion _),
+    "stream_hh_windowed" -> (runWindowedHeavyHittersToCompletion _),
+    "stream_mm_dedup_near" -> (runMmNearDupToCompletion _)
   )
 
   /** DuckDB oracle for the size-threshold flushes: a flush emits

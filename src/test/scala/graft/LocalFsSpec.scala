@@ -160,7 +160,7 @@ class LocalFsSpec extends SparkSpec {
       rs.onEvent(classOf[LocalFsSpecMarker].getName, _ => done.countDown())
       rs.startAsync()
       new ProcessBuilder("true").start().waitFor()
-      val rows = StreamOps.runAttributionToCompletion(spark, sfDir, sink = "localfs_nofork").count()
+      val rows = StreamOps.runAttributionToCompletion(spark, sfDir).count()
       assert(rows > 0)
       IterStateStore.parquet(spark, tmp().getPath)
         .save(Seq(IterJobRow("j", "running", 0L, None, 0L, 0L, 0L, Seq(1L, 2L), Seq(1L, 2L))))

@@ -171,7 +171,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val streamed = graft.streaming.StreamOps.runMmNearDupToCompletion(
-        s, dir2, sink = "mm_near_plant")
+        s, dir2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     assert(streamed.exists { case (c, n, h) =>
       c == 0L && n == 9L && h <= Multimodal.mmNearMaxHamming },

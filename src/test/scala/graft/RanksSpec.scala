@@ -93,6 +93,50 @@ class RanksSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("null keys rank first, as ORDER BY ... NULLS FIRST, with null bucket bounds") {
+    val s = spark; import s.implicits._
+    // a third of the keys null, so at 4 or 7 buckets some sampled
+    // bound holds a null; non-null keys repeat
+    val df = s.range(300).select($"id",
+      when($"id" % 3 === 0, lit(null).cast("long")).otherwise(($"id" * 7) % 101).as("k"),
+      ($"id" % 2).as("g"))
+    def kOf(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    for (parts <- Seq(4, 7)) {
+      // one key: ties make the row order inside a key arbitrary, so
+      // compare the (key, rank) pairs
+      val oneExpected = df
+        .withColumn("rn", row_number().over(Window.orderBy($"k".asc_nulls_first)).cast("long"))
+        .collect().map(r => (kOf(r, 1), r.getLong(3))).sortBy(_._2).toSeq
+      val oneGot = Ranks.globalRowNumber(df, $"k", parts, "rn")
+        .collect().map(r => (kOf(r, 1), r.getLong(3))).sortBy(_._2).toSeq
+      assert(oneGot == oneExpected, s"[one key, parts=$parts]")
+      // two keys, unique as a composite: the exact rank per row
+      val twoW = Window.orderBy($"k".asc_nulls_first, $"id")
+      val twoExpected = df
+        .withColumn("rn", row_number().over(twoW).cast("long"))
+        .withColumn("run", sum($"id").over(twoW.rowsBetween(Window.unboundedPreceding, 0)))
+        .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4))).toMap
+      val twoGot = Ranks.globalRunningSum(
+          Ranks.globalRowNumber(df, Seq($"k", $"id"), parts, "rn"),
+          Seq($"k", $"id"), $"id", parts, "run")
+        .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4))).toMap
+      assert(twoGot == twoExpected, s"[two keys, parts=$parts]")
+      // a null bound splits the null keys by id instead of emptying a
+      // bucket: every bucket holds rows, and the id stays monotone
+      val pids = Ranks.withBucket(df, Seq($"k", $"id"), parts, "pid")
+        .orderBy($"k".asc_nulls_first, $"id").select($"pid").as[Int].collect().toSeq
+      assert(pids.distinct.size == parts && pids == pids.sorted, s"[buckets, parts=$parts]")
+      val perKeyExpected = df
+        .withColumn("rn", row_number().over(
+          Window.partitionBy($"g").orderBy($"k".asc_nulls_first, $"id")).cast("long"))
+        .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+      val perKeyGot = Ranks.perKeyRowNumber(df, Seq("g"), Seq($"k", $"id"), parts, "rn")
+        .select($"id", $"rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(perKeyGot == perKeyExpected, s"[per key, parts=$parts]")
+    }
+  }
+
   test("globalRowNumber survives partition counts larger than the data") {
     val s = spark; import s.implicits._
     val df = Seq(5L, 1L, 9L, 3L).toDF("k")

@@ -7,7 +7,7 @@ class StreamAccSpec extends SparkSpec {
 
   test("streaming tumbling-window flushes equal the batch accumulator result") {
     val s = spark; import s.implicits._
-    val streamed = StreamAcc.runToCompletion(s, sfDir, sink = "parity_sink")
+    val streamed = StreamAcc.runToCompletion(s, sfDir)
       .collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2),
                  r.getLong(3), r.getTimestamp(4), r.getTimestamp(5)))
@@ -28,7 +28,7 @@ class StreamAccSpec extends SparkSpec {
   test("append mode emits exactly the watermark-closed windows (bounded state)") {
     val s = spark; import s.implicits._
     import org.apache.spark.sql.functions._
-    val emitted = StreamAcc.runAppendToCompletion(s, sfDir, sink = "append_spec_sink")
+    val emitted = StreamAcc.runAppendToCompletion(s, sfDir)
       .select($"batch_id", $"window_start", $"window_end", $"item_count")
       .collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))

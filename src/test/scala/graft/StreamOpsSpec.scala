@@ -10,7 +10,7 @@ class StreamOpsSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
                  r.getLong(3), r.getDouble(4))).toSet
-    val streamed = key(StreamOps.runSessionsToCompletion(s, sfDir, sink = "sess_parity"))
+    val streamed = key(StreamOps.runSessionsToCompletion(s, sfDir))
     val batch = key(operators.Relational.qSessionWindow(s, sfDir)
       .select($"user_id", $"session_start", $"session_end", $"n_events", $"sum_value"))
     assert(batch.nonEmpty)
@@ -21,8 +21,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("streaming quality filter equals the batch filter exactly") {
     val s = spark
-    val streamed = StreamOps.runQualityFilterToCompletion(s, sfDir,
-      sink = "quality_parity")
+    val streamed = StreamOps.runQualityFilterToCompletion(s, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toList
     val batch = graft.operators.Pipeline.qualityFilter(s, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toList
@@ -36,7 +35,7 @@ class StreamOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toList
     val streamed = key(StreamOps.runDecontaminateSemanticToCompletion(
-      s, sfDir, sink = "semdecon_parity"))
+      s, sfDir))
     val batch = key(graft.operators.Pipeline.decontaminateSemantic(s, sfDir))
     assert(batch.nonEmpty)
     assert(streamed == batch,
@@ -48,7 +47,7 @@ class StreamOpsSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
                  r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
-    val streamed = key(StreamOps.runAbtestToCompletion(s, sfDir, sink = "abtest_parity"))
+    val streamed = key(StreamOps.runAbtestToCompletion(s, sfDir))
     val batch = key(operators.Experimentation.qAbtest(s, sfDir))
     assert(batch.nonEmpty)
     // decimal fixed-point sums merge order-free, so the incremental
@@ -74,7 +73,7 @@ class StreamOpsSpec extends SparkSpec {
     (day(1, 100, 100) ++ day(2, 100, 20) ++ day(3, 50, 50) ++ day(4, 9, 9))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = StreamOps.runWindowedSrmToCompletion(s, dir, sink = "srm_win_spec").collect()
+    val out = StreamOps.runWindowedSrmToCompletion(s, dir).collect()
     assert(out.length == 3, s"only the 3 closed windows may emit: ${out.mkString(";")}")
     val byDay = out.map(r => r.getTimestamp(0).toString.take(10) ->
       (r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))).toMap
@@ -91,8 +90,7 @@ class StreamOpsSpec extends SparkSpec {
     val s = spark
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val streamed = key(StreamOps.runDedupExactToCompletion(s, sfDir,
-      sink = "dedup_parity"))
+    val streamed = key(StreamOps.runDedupExactToCompletion(s, sfDir))
     val batch = key(graft.operators.Dedup.dedupExact(s, sfDir))
     assert(batch.nonEmpty)
     assert(streamed == batch,
@@ -104,8 +102,7 @@ class StreamOpsSpec extends SparkSpec {
     val s = spark
     val mod = graft.operators.Dedup.embedShardMod
     val rem = graft.operators.Dedup.embedShardRem
-    val streamed = StreamOps.runEmbedDedupToCompletion(s, sfDir,
-        sink = "embed_dedup_parity").collect()
+    val streamed = StreamOps.runEmbedDedupToCompletion(s, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // ground truth: the O(n²) all-pairs τ-cut restricted to pairs with
     // exactly one incoming endpoint, oriented (corpus, new)
@@ -128,8 +125,7 @@ class StreamOpsSpec extends SparkSpec {
     val s = spark
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    val streamed = key(StreamOps.runHeavyHittersToCompletion(s, sfDir,
-      sink = "hh_parity"))
+    val streamed = key(StreamOps.runHeavyHittersToCompletion(s, sfDir))
     val batch = key(graft.operators.Pipeline.corpusHeavyHitters(s, sfDir))
     assert(batch.nonEmpty)
     assert(streamed == batch,
@@ -142,8 +138,7 @@ class StreamOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.expr
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val streamed = key(StreamOps.runAttributionToCompletion(s, sfDir,
-      sink = "attrib_parity"))
+    val streamed = key(StreamOps.runAttributionToCompletion(s, sfDir))
     val ev = graft.sources.Tables.events(s, sfDir)
     val p = ev.filter($"event_type" === "purchase")
       .select($"user_id", $"event_id".as("purchase_id"), $"ts".as("pts"))
@@ -161,14 +156,12 @@ class StreamOpsSpec extends SparkSpec {
   test("outer attribution join: matched pairs equal the inner join, null rows emit exactly once for watermark-closed clickless purchases") {
     val s = spark; import s.implicits._
     import org.apache.spark.sql.functions.{expr, least, lit, max, when}
-    val rows = StreamOps.runAttributionOuterToCompletion(s, sfDir,
-      sink = "attrib_outer_parity").collect()
+    val rows = StreamOps.runAttributionOuterToCompletion(s, sfDir).collect()
     val matched = rows.filter(!_.isNullAt(2))
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val nullRows = rows.filter(_.isNullAt(2))
     // inner part identical to the inner-join operator
-    val inner = StreamOps.runAttributionToCompletion(s, sfDir,
-      sink = "attrib_outer_inner_parity").collect()
+    val inner = StreamOps.runAttributionToCompletion(s, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(matched == inner)
     // each clickless purchase appears EXACTLY once, never alongside
@@ -205,7 +198,7 @@ class StreamOpsSpec extends SparkSpec {
                  r.getTimestamp(3), r.getTimestamp(4))).toSet
     val thresh = 50 // sf0.001 has ~200 events per type — several flushes at 50
     val streamed = key(StreamOps.runSizeFlushesToCompletion(s, sfDir,
-      sink = "size_parity", threshold = thresh))
+      threshold = thresh))
     val batch = key(Accumulator.accSizeFlush(s, sfDir, thresh)
       .filter($"item_count" === thresh)
       .select($"batch_id", $"seq", $"item_count", $"created_at", $"last_updated_at"))
@@ -217,7 +210,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("streaming funnel step-reach counts equal the batch funnel") {
     val s = spark; import s.implicits._
-    val hits = StreamOps.runFunnelToCompletion(s, sfDir, sink = "funnel_parity")
+    val hits = StreamOps.runFunnelToCompletion(s, sfDir)
       .groupBy($"step").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = operators.Behavioral.qFunnel(s, sfDir).collect()(0)
@@ -230,7 +223,7 @@ class StreamOpsSpec extends SparkSpec {
     val s = spark; import s.implicits._
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getTimestamp(1), r.getDouble(2), r.getLong(3), r.getString(4))
-    val streamed = StreamOps.runResampleToCompletion(s, sfDir, sink = "resample_parity")
+    val streamed = StreamOps.runResampleToCompletion(s, sfDir)
       .collect().map(key).toSet
     // batch restricted to each type's closed range [first obs bucket,
     // last obs bucket) — the stream's trailing open bucket and the
@@ -305,7 +298,7 @@ class StreamOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def tsUs(t: java.sql.Timestamp): Long =
       t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-    val expectedF = StreamOps.runFunnelToCompletion(s, sfDir, sink = s"${tag}_funnel_ref")
+    val expectedF = StreamOps.runFunnelToCompletion(s, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), tsUs(r.getTimestamp(2)))).toSet
     assert(streamedF == expectedF,
       s"multi-batch funnel diverged: ${(streamedF -- expectedF).take(3)} / ${(expectedF -- streamedF).take(3)}")
@@ -316,7 +309,7 @@ class StreamOpsSpec extends SparkSpec {
     rq.awaitTermination()
     val streamedR = s.table(s"${tag}_resample").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getString(4))).toSet
-    val expectedR = StreamOps.runResampleToCompletion(s, sfDir, sink = s"${tag}_resample_ref")
+    val expectedR = StreamOps.runResampleToCompletion(s, sfDir)
       .collect().map(r => (r.getString(0), tsUs(r.getTimestamp(1)),
         r.getDouble(2), r.getLong(3), r.getString(4))).toSet
     assert(streamedR == expectedR,
@@ -547,10 +540,9 @@ class StreamOpsSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sortBy(t => (t._1, t._2, t._3)).toList
-    val viaLex = key(StreamOps.runBpeEncodeToCompletion(s, sfDir,
-      sink = "bpe_lex_full"))
+    val viaLex = key(StreamOps.runBpeEncodeToCompletion(s, sfDir))
     val viaFallback = key(StreamOps.runBpeEncodeToCompletion(s, sfDir,
-      sink = "bpe_lex_half", lexOverride = Some(crippled)))
+      lexOverride = Some(crippled)))
     assert(viaLex == viaFallback,
       "fallback-encoded words must match their lexicon encoding exactly")
     assert(viaLex.nonEmpty)
@@ -600,7 +592,7 @@ class StreamOpsSpec extends SparkSpec {
     run() // NEW query object, SAME checkpoint: offsets + state resume
     val resumed = s.read.parquet(s"$dir/sink").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val expected = StreamOps.runFunnelToCompletion(s, sfDir, sink = "ckpt_funnel_ref")
+    val expected = StreamOps.runFunnelToCompletion(s, sfDir)
       .collect().map { r =>
         val t = r.getTimestamp(2).toInstant
         (r.getLong(0), r.getLong(1), t.getEpochSecond * 1000000L + t.getNano / 1000L)
@@ -675,7 +667,7 @@ class StreamOpsSpec extends SparkSpec {
       s"batch 1 must be written once pre-crash and once on replay, saw ${batch1Writes.get()}")
     val got = s.read.parquet(s"$dir/sink/batch=*").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val expected = StreamOps.runFunnelToCompletion(s, sfDir, sink = "crash_funnel_ref")
+    val expected = StreamOps.runFunnelToCompletion(s, sfDir)
       .collect().map { r =>
         val t = r.getTimestamp(2).toInstant
         (r.getLong(0), r.getLong(1), t.getEpochSecond * 1000000L + t.getNano / 1000L)
@@ -707,8 +699,7 @@ class StreamOpsSpec extends SparkSpec {
   test("scd2 stream enrichment resolves the version valid at event time") {
     val s = spark
     import s.implicits._
-    val out = StreamOps.runScd2EnrichToCompletion(s, sfDir,
-      sink = "stream_scd2_spec").collect()
+    val out = StreamOps.runScd2EnrichToCompletion(s, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val purchases = graft.sources.Tables.events(s, sfDir)
       .filter($"event_type" === "purchase").count()

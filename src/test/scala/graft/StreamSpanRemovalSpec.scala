@@ -13,7 +13,7 @@ class StreamSpanRemovalSpec extends SparkSpec {
 
   test("streamed span removal equals the batch edit on the corpus") {
     val streamed = StreamOps.runDedupSpanToCompletion(
-        spark, sfDir, sink = "stream_span_spec")
+        spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4))).toSet
     val batch = Dedup.dedupSpanRemoval(spark, sfDir)
@@ -42,7 +42,7 @@ class StreamSpanRemovalSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .coalesce(1).write.mode("append").parquet(s"$dir/documents.parquet")
     val rows = StreamOps.runDedupSpanToCompletion(
-        spark, dir, sink = "stream_span_shards")
+        spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getString(4))).toMap
     assert(rows.keySet == Set(10L, 20L))

@@ -96,7 +96,7 @@ class UnigramSpec extends SparkSpec {
     val emptyLex = Seq.empty[(String, String)].toDF("word", "g")
     val streamed = graft.streaming.StreamOps
       .runUnigramEncodeToCompletion(s, sfDir,
-        sink = "uni_enc_fallback", lexOverride = Some(emptyLex))
+        lexOverride = Some(emptyLex))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val batch = Unigram.tokenIdsUnigram(s, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
