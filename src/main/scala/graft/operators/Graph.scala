@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Loop
 import graft.sources.Tables
 
 /** §2.12 Graph analytics.
@@ -28,8 +29,9 @@ import graft.sources.Tables
   * o_orderkey — one shuffle, per-order fan-out bounded by basket size
   * (k² pairs on a k-item order), distinct partial-aggregated. Each
   * round is one edge⋈state shuffle (state is vertex-sized, AQE may
-  * broadcast it) + one partial-agged sum; `localCheckpoint` caps the
-  * lineage so round N's plan doesn't replay rounds 1..N−1.
+  * broadcast it) + one partial-agged sum; every loop runs through
+  * [[Loop.fixed]], whose per-round cut keeps round N's plan from
+  * replaying rounds 1..N−1.
   */
 object Graph {
 
@@ -171,17 +173,10 @@ object Graph {
     // edge-scale work per round is one equi-join plus the partial-
     // aggregated mass sum (the two-edge-join formulation measured
     // 5.7 s at sf0.1; this shape 40% less)
-    var state = deg.select($"src".as("id"), $"outdeg",
+    val init = deg.select($"src".as("id"), $"outdeg",
         (lit(1.0) / lit(n.toDouble)).as("rank"))
       .localCheckpoint(true)
-    // lineage cut every round: an UNCUT chain measured 3× slower at
-    // sf0.1 (AQE re-plans the whole growing DAG per stage and the
-    // edge cache doesn't amortize), and per-round cuts also bound
-    // executor lineage at 50-round depth. The dominant cost of this
-    // operator is the one-time edge build, ~6 of 9 s at sf0.1,
-    // amortized in any real deploy where the edge table is a
-    // persisted artifact.
-    for (k <- 1 to pagerankIters) {
+    val state = Loop.fixed(init, pagerankIters) { (state, _) =>
       val contribs = state.select($"id",
         expr(s"CAST(floor(rank / outdeg * $Q + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("cq"))
       // unhinted, the planner BROADCASTS THE EDGE TABLE from round 2
@@ -196,11 +191,10 @@ object Graph {
                   else contribs.hint("merge")
       val sums = e.join(cside, e("src") === contribs("id"))
         .groupBy($"dst").agg(sum($"cq").as("sq"))
-      state = deg.join(bc(sums), deg("src") === sums("dst"))
+      deg.join(bc(sums), deg("src") === sums("dst"))
         .select($"src".as("id"), $"outdeg",
           (lit(1.0 - damping) / lit(n.toDouble) +
             lit(damping) * ($"sq".cast("double") / expr(s"CAST($Q AS DOUBLE)"))).as("rank"))
-      if (k < pagerankIters) state = state.localCheckpoint(true)
     }
     state.select($"id".as("part_id"), $"rank").orderBy($"part_id")
   }
@@ -467,8 +461,8 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val edges = undirectedStrongEdges(s, dir)
     val universe = Tables.part(s, dir).select($"p_partkey".as("node"))
-    var lab = universe.withColumn("label", $"node").localCheckpoint(true)
-    for (_ <- 1 to labelPropIters) {
+    val init = universe.withColumn("label", $"node").localCheckpoint(true)
+    Loop.fixed(init, labelPropIters) { (lab, _) =>
       val cnt = edges.join(lab, $"src" === $"node")
         .groupBy($"dst", $"label").agg(count(lit(1)).as("c"))
       val pick = cnt
@@ -476,11 +470,9 @@ object Graph {
           Window.partitionBy($"dst").orderBy($"c".desc, $"label".asc)))
         .filter($"rn" === 1)
         .select($"dst".as("node"), $"label".as("new_label"))
-      lab = lab.join(pick, Seq("node"), "left")
+      lab.join(pick, Seq("node"), "left")
         .select($"node", coalesce($"new_label", $"label").as("label"))
-        .localCheckpoint(true)
     }
-    lab
   }
 
   def graphLabelProp(s: SparkSession, dir: String): DataFrame = {
@@ -619,20 +611,16 @@ object Graph {
   def graphKcore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = undirectedStrongEdges(s, dir)
-    var surv = edges.select($"src".as("id")).distinct().localCheckpoint(true)
-    for (_ <- 1 to kcoreRounds) {
-      surv = edges
-        .join(surv.select($"id".as("sid")), $"src" === $"sid")
-        .join(surv.select($"id".as("did")), $"dst" === $"did")
-        .groupBy($"src").agg(count(lit(1)).as("c"))
-        .filter($"c" >= 2).select($"src".as("id"))
-        .localCheckpoint(true)
-    }
-    val core = edges
+    // per surviving src: its edges whose both endpoints survive
+    def degree(surv: DataFrame): DataFrame = edges
       .join(surv.select($"id".as("sid")), $"src" === $"sid")
       .join(surv.select($"id".as("did")), $"dst" === $"did")
-      .groupBy($"src").agg(count(lit(1)).as("core_degree"))
-      .select($"src".as("cid"), $"core_degree")
+      .groupBy($"src").agg(count(lit(1)).as("c"))
+    val init = edges.select($"src".as("id")).distinct().localCheckpoint(true)
+    val surv = Loop.fixed(init, kcoreRounds) { (surv, _) =>
+      degree(surv).filter($"c" >= 2).select($"src".as("id"))
+    }.localCheckpoint(true) // the core degree reads it twice
+    val core = degree(surv).select($"src".as("cid"), $"c".as("core_degree"))
     Tables.part(s, dir).select($"p_partkey".as("part_id"))
       .join(core, $"part_id" === $"cid", "left")
       .select($"part_id", $"core_degree".isNotNull.as("in_core"),
@@ -837,31 +825,35 @@ object Graph {
     * an anti join against the visited set (vertex-sized — AQE
     * broadcasts it while it fits) admits only new nodes, lineage cut
     * per round. Seeds come from a TakeOrdered top-[[bfsSeeds]] on the
-    * vertex-sized degree frame — never a global sort. State is two
-    * vertex-bounded frames (visited, frontier); the frontier can
-    * only shrink the visited complement, so 100× data widens rounds'
-    * row counts, not their number. */
+    * vertex-sized degree frame — never a global sort. State is one
+    * vertex-bounded frame (node, depth) whose depth-(i − 1) rows are
+    * round i's frontier; the frontier can only shrink the visited
+    * complement, so 100× data widens rounds' row counts, not their
+    * number. */
   def graphBfs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = undirectedStrongEdges(s, dir)
     val seeds = edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
       .orderBy($"deg".desc, $"node").limit(bfsSeeds)
       .select($"node")
-    var dist = seeds.withColumn("depth", lit(0L)).localCheckpoint(true)
-    var frontier = dist.select($"node")
-    for (i <- 1 to bfsRounds) {
-      val next = edges.join(frontier, $"src" === $"node")
-        .select($"dst".as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("depth", lit(i.toLong))
-        .localCheckpoint(true)
-      dist = dist.unionAll(next).localCheckpoint(true)
-      frontier = next.select($"node")
-    }
+    val init = seeds.withColumn("depth", lit(0L)).localCheckpoint(true)
+    val dist = Loop.fixed(init, bfsRounds)(bfsRound(edges, Seq("node")))
     Tables.part(s, dir).select($"p_partkey".as("part_id"))
       .join(dist.withColumnRenamed("node", "part_id"), Seq("part_id"), "left")
       .select($"part_id", $"depth")
       .orderBy($"part_id")
+  }
+
+  /** Round `i` of a BFS whose state is (`keys`..., depth), `keys`
+    * being `node` plus any per-source key: the depth-(i − 1) rows
+    * step one edge, and the (`keys`) pairs not yet in the state join
+    * it at depth i. [[graphBfs]] and [[graphHarmonic]] share it. */
+  private def bfsRound(edges: DataFrame, keys: Seq[String])(state: DataFrame, i: Int): DataFrame = {
+    val next = edges.join(state.filter(col("depth") === i - 1), col("src") === col("node"))
+      .select(col("dst").as("node") +: keys.tail.map(col): _*).distinct()
+      .join(state, keys, "left_anti")
+      .withColumn("depth", lit(i.toLong))
+    state.unionAll(next)
   }
 
   val graphBfsSql: String = {
@@ -1002,18 +994,9 @@ object Graph {
     val seeds = edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
       .orderBy($"deg".desc, $"node").limit(harmonicSources)
       .select($"node")
-    var dist = seeds.select($"node", $"node".as("source"),
+    val init = seeds.select($"node", $"node".as("source"),
       lit(0L).as("depth")).localCheckpoint(true)
-    var frontier = dist.select($"node", $"source")
-    for (i <- 1 to harmonicRounds) {
-      val next = edges.join(frontier, $"src" === $"node")
-        .select($"dst".as("node"), $"source").distinct()
-        .join(dist, Seq("node", "source"), "left_anti")
-        .withColumn("depth", lit(i.toLong))
-        .localCheckpoint(true)
-      dist = dist.unionAll(next).localCheckpoint(true)
-      frontier = next.select($"node", $"source")
-    }
+    val dist = Loop.fixed(init, harmonicRounds)(bfsRound(edges, Seq("node", "source")))
     val hc = dist.filter($"depth" > 0L)
       .groupBy($"node")
       .agg(count(lit(1)).as("n_reached"),
@@ -1099,20 +1082,17 @@ object Graph {
   def graphRandomWalk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = undirectedStrongEdges(s, dir)
-    val starts = edges.select($"src".as("start")).distinct()
-    var frontier = starts.withColumn("cur", $"start")
-    var walk = frontier.select($"start", lit(0L).as("step"), $"cur".as("node"))
+    val init = edges.select($"src".as("start")).distinct()
+      .select($"start", lit(0L).as("step"), $"start".as("node"))
       .localCheckpoint(true)
-    for (i <- 1 to walkSteps) {
-      val nxt = edges.join(frontier, $"src" === $"cur")
-        .withColumn("score", expr(walkScoreSql("cur", "dst", i)))
+    // each walk's step-(i − 1) row is its frontier
+    val walk = Loop.fixed(init, walkSteps) { (walk, i) =>
+      val nxt = edges.join(walk.filter($"step" === i - 1), $"src" === $"node")
+        .withColumn("score", expr(walkScoreSql("node", "dst", i)))
         .groupBy($"start")
         .agg(min(struct($"score", $"dst")).as("m"))
-        .select($"start", $"m.dst".as("cur"))
-        .localCheckpoint(true)
-      walk = walk.unionAll(nxt.select($"start", lit(i.toLong).as("step"),
-        $"cur".as("node"))).localCheckpoint(true)
-      frontier = nxt
+        .select($"start", lit(i.toLong).as("step"), $"m.dst".as("node"))
+      walk.unionAll(nxt)
     }
     walk.orderBy($"start", $"step")
   }
@@ -1267,8 +1247,8 @@ object Graph {
         when($"sid".isNotNull, lit(1.0) / lit(pprSeedCount.toDouble))
           .otherwise(lit(0.0)).as("restart"))
       .localCheckpoint(true)
-    var state = rst.select($"src".as("id"), $"outdeg", $"restart".as("rank"), $"restart")
-    for (k <- 1 to pprIters) {
+    val init = rst.select($"src".as("id"), $"outdeg", $"restart".as("rank"), $"restart")
+    val state = Loop.fixed(init, pprIters) { (state, _) =>
       val contribs = state.filter($"rank" > 0.0).select($"id",
         expr(s"CAST(floor(rank / outdeg * $Q + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("cq"))
       // node-sized frames hinted broadcast — the pagerankOver rule:
@@ -1281,13 +1261,11 @@ object Graph {
       // (graph_pagerank_indexed's bucket-layout SMJ), not this one.
       val sums = e.join(broadcast(contribs), e("src") === contribs("id"))
         .groupBy($"dst").agg(sum($"cq").as("sq"))
-      state = rst.join(broadcast(sums), rst("src") === sums("dst"), "left")
+      rst.join(broadcast(sums), rst("src") === sums("dst"), "left")
         .select($"src".as("id"), $"outdeg",
           (lit(1.0 - damping) * $"restart" +
             lit(damping) * (coalesce($"sq", lit(0L)).cast("double") / expr(s"CAST($Q AS DOUBLE)"))).as("rank"),
           $"restart")
-      // lineage cut every round (the pagerank loop's measured reason)
-      if (k < pprIters) state = state.localCheckpoint(true)
     }
     state.filter(state("rank") > 0.0)
       .select(state("id").as("part_id"), state("rank").as("rank"))

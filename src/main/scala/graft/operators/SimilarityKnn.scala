@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Agg.rndSql
-import graft.functions.VectorFns
+import graft.functions.{Loop, VectorFns}
 
 /** §2.5 — NN-descent k-NN GRAPH construction: every corpus vector's
   * approximate top-k cosine neighbors, the graph-ANN tier next to
@@ -101,13 +101,9 @@ object SimilarityKnn {
       }.reduce(_ unionByName _)
       val seedBoth = seeds.union(seeds.select($"dst".as("src"), $"src".as("dst")))
         .filter($"src" =!= $"dst").distinct()
-      var pool = score(seedBoth, v).localCheckpoint(true)
-      var g = topK(pool, searchK).select($"src", $"dst", $"cosine")
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val u = g.select($"src", $"dst")
-          .union(g.select($"dst".as("src"), $"src".as("dst")))
-          .distinct()
+      Loop.fixed(score(seedBoth, v).localCheckpoint(true), rounds) { (pool, _) =>
+        val g = topK(pool, searchK).select($"src", $"dst")
+        val u = g.union(g.select($"dst".as("src"), $"src".as("dst"))).distinct()
         val prop = u.as("x").join(u.as("y"), "src")
           .filter($"x.dst" < $"y.dst")
           .select($"x.dst".as("src"), $"y.dst".as("dst"))
@@ -117,13 +113,8 @@ object SimilarityKnn {
         val scored = score(prop, v)
         val both = scored
           .union(scored.select($"dst".as("src"), $"src".as("dst"), $"cosine"))
-        pool = pool.union(both)
-          .dropDuplicates("src", "dst")
-          .localCheckpoint(true)
-        g = topK(pool, searchK).select($"src", $"dst", $"cosine")
-          .localCheckpoint(true)
+        pool.union(both).dropDuplicates("src", "dst")
       }
-      pool
     }
 
   /** §2.5 — the k-NN graph: approximate top-[[knnK]] neighbors for
@@ -195,8 +186,8 @@ object SimilarityKnn {
     * is |queries|·beam·degree scored rows. A production run with a
     * large query batch partitions the queries and runs batches
     * independently (queries never interact); the corpus-side plan is
-    * unchanged. Visited sets localCheckpoint per round (lineage cut,
-    * the loop contract of [[poolOf]]).
+    * unchanged. The descent runs through [[graft.functions.Loop.fixed]]
+    * like [[poolOf]]: visited sets are cut per round.
     *
     * SEED RULE (the IVF coarse layer): each query's beam starts from
     * the LEAD MEMBER (lowest vec_id) of each of its [[SimilarityIvf
@@ -264,17 +255,15 @@ object SimilarityKnn {
         .select($"query_id", $"node",
           cosine("qv", "nv", "qn", "nn").as("cosine"))
     val bw = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"node")
-    var visited = scoreCands(entryPairs).localCheckpoint(true)
-    for (_ <- 1 to searchRounds) {
+    Loop.fixed(scoreCands(entryPairs).localCheckpoint(true), searchRounds) { (visited, _) =>
       val frontier = visited.withColumn("rk", row_number().over(bw))
         .filter($"rk" <= beamWidth).select($"query_id", $"node")
       val cand = edges.join(broadcast(frontier), $"src" === $"node")
         .select($"query_id", $"dst".as("node")).distinct()
         .join(visited.select($"query_id", $"node"),
           Seq("query_id", "node"), "left_anti")
-      visited = visited.union(scoreCands(cand)).localCheckpoint(true)
+      visited.union(scoreCands(cand))
     }
-    visited
   }
 
   private def graphSearchOf(s: SparkSession, dir: String,
@@ -313,13 +302,18 @@ object SimilarityKnn {
         q.select($"query_id").crossJoin(entry)
       }
     val bw = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"node")
-    val visited = beamDescent(v, edges, q, entryPairs)
+    val descent = beamDescent(v, edges, q, entryPairs)
     // candidates-scanned accounting for the recall report's cost
     // column: every visited (query, node) was cosine-scored exactly
-    // once (the anti-join dedups expansions); the count is a cheap
-    // action on the checkpointed frame. Memoized only for the
-    // production (centroid-seeded) path the report ranks.
-    if (centroidSeeded) graft.sources.Memo(visitedCount, dir, s)(visited.count())
+    // once (the anti-join dedups expansions). Memoized only for the
+    // production (centroid-seeded) path the report ranks; the run that
+    // counts reads the descent twice, so it cuts it first.
+    val visited =
+      if (centroidSeeded && graft.sources.Memo.get[Long](visitedCount, dir, s).isEmpty) {
+        val cut = descent.localCheckpoint(true)
+        graft.sources.Memo(visitedCount, dir, s)(cut.count())
+        cut
+      } else descent
     visited.filter($"node" =!= $"query_id")
       .withColumn("rank", row_number().over(bw).cast("long"))
       .filter($"rank" <= Similarity.k)
@@ -481,7 +475,9 @@ object SimilarityKnn {
       .groupBy($"cid").agg(min($"vec_id").as("node"))
     val entryPairs = fleads.join(broadcast(probes), "cid")
       .select($"query_id", $"node")
-    val visited = beamDescent(v, edges, q, entryPairs)
+    // cut although read once: joined to the slice uncut, the descent
+    // planned 59 warm jobs (61 for the retraction) against 58 cut
+    val visited = beamDescent(v, edges, q, entryPairs).localCheckpoint(true)
     val surv = visited
       .join(keep.select($"vec_id".as("node")), "node")
       .filter($"node" =!= $"query_id")

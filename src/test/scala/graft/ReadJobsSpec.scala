@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.util.LongAccumulator
 
@@ -19,26 +15,7 @@ import graft.sources.Tables
   * add's only job is its chunk write. */
 class ReadJobsSpec extends SparkSpec {
 
-  /** Spark jobs `body` starts on this thread, counted under a fresh job
-    * group after the listener bus has delivered every event. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"read-jobs-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ReadJobsSpec")
-    try body
-    finally {
-      sc.clearJobGroup()
-      TestBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
+  private def jobsOf(body: => Any): Int = TestBus.jobsOf(spark.sparkContext)(body)
 
   test("the job counter sees a job") {
     assert(jobsOf(spark.range(3).collect()) == 1)
