@@ -10,8 +10,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalTpch.q5RegionVolume(spark, "/root/testdata/sf0.001")
 
-  /** The single authoritative module list — the merge below and the
-    * KeyCheck shadowing audit both iterate THIS, so a module added
+  /** The single authoritative module list — the merge below and
+    * KeyCheckSpec's shadowing audit both iterate THIS, so a module added
     * here is audited automatically (and one added anywhere else
     * cannot exist). A `def`, NOT a val: the staged-artifact oracles
     * (Similarity/SimilarityIvf/EmbedPq/Dedup) register their SQL at

@@ -6,18 +6,15 @@ import org.apache.spark.sql.functions._
 
 /** Distributed exact-quantile SELECTION with bounded task memory.
   *
-  * The previous two-phase layout (q_percentiles_dist /
-  * q_percentiles_grouped) ranked EVERY row — a full within-bucket
-  * sort plus a data-sized rank join — to then keep only the two
-  * bracketing ranks per requested percentile. This helper keeps the
-  * same deterministic key-space buckets ([[Ranks.withBucket]]) and
-  * per-(group, bucket) counts, but then *locates* each target rank's
-  * bucket with a bounded range join (targets × the groups×buckets
-  * count table — both tiny) and sorts ONLY the located buckets: the
-  * row-bearing work is one counting scan plus a selection over
-  * ~|groups|·|ps|·2 buckets, instead of a full-data sort. No driver
-  * collect anywhere, so the group count is unbounded (the
-  * q_percentiles_grouped contract).
+  * The first phase is [[Ranks.bucketOffsets]]: deterministic
+  * key-space buckets, per-(group, bucket) counts and their per-group
+  * exclusive prefix. Instead of ranking every row, this helper then
+  * *locates* each target rank's bucket with a bounded range join
+  * (targets × the groups×buckets count table — both tiny) and sorts
+  * ONLY the located buckets: the row-bearing work is one counting
+  * scan plus a selection over ~|groups|·|ps|·2 buckets, instead of a
+  * full-data sort. No driver collect anywhere, so the group count is
+  * unbounded (the q_percentiles_grouped contract).
   *
   * Returns one row per (group, p):
   * `groupCols ++ (p, pos, lower, higher, n, vlo, vhi)` where
@@ -30,8 +27,7 @@ import org.apache.spark.sql.functions._
 object Quantiles {
 
   def bracketed(v0: DataFrame, groupCols: Seq[String], xCol: String,
-                ps: Seq[Double], numPartitions: Int,
-                bucketCols: Option[Seq[Column]] = None): DataFrame = {
+                ps: Seq[Double], bucketPrefix: Seq[Column] = Nil): DataFrame = {
     val s = v0.sparkSession
     import s.implicits._
     val pid = "__q_pid"
@@ -41,20 +37,15 @@ object Quantiles {
     // bit-for-bit claim holds for nullable callers too (NULLs would
     // otherwise sort first and shift every rank).
     val v = v0.filter(x.isNotNull)
-    // `bucketCols` may drop group columns from the bucket key (the
+    // `bucketPrefix` may drop group columns from the bucket key (the
     // Ranks bucketPrefix rationale: a wide lexicographic boundary
     // tree falls out of codegen): any subset of the group columns
     // plus x stays monotone in x WITHIN a group, which is all the
     // per-group offsets require.
-    val parted = Ranks.withBucket(v, bucketCols.getOrElse(gcols :+ x),
-      numPartitions, pid)
-    val cnt = parted.groupBy((groupCols :+ pid).map(col): _*)
-      .agg(count(lit(1)).as("__c"))
-    // per-group exclusive prefix over ≤ numPartitions rows per group
-    val off = cnt.withColumn("__off", coalesce(
-        sum($"__c").over(Window.partitionBy(gcols: _*).orderBy(col(pid))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .localCheckpoint(true)
+    val (parted, counts) = Ranks.bucketOffsets(v, groupCols, Seq(x), bucketPrefix,
+      None, pid, Seq(count(lit(1)) -> "__c"))
+    val off = counts.localCheckpoint(true)
+    val lo = col(Ranks.offsetOf("__c"))
     val tot = off.groupBy(gcols: _*).agg(sum($"__c").as("n"))
     val targets = tot.crossJoin(ps.toDF("p"))
       .withColumn("pos", $"p" * ($"n" - 1).cast("double"))
@@ -73,8 +64,8 @@ object Quantiles {
       .dropDuplicates(groupCols ++ Seq("p", "__r"))
     val wanted = wantRanks.join(off.withColumnRenamed(pid, "__wpid"),
         groupCols)
-      .filter($"__r" > $"__off" && $"__r" <= $"__off" + $"__c")
-      .select(gcols ++ Seq(col("__wpid").as(pid), ($"__r" - $"__off").as("__lr"),
+      .filter($"__r" > lo && $"__r" <= lo + $"__c")
+      .select(gcols ++ Seq(col("__wpid").as(pid), ($"__r" - lo).as("__lr"),
         $"p", $"pos", $"lower", $"higher", $"n", $"__r"): _*)
     // sort ONLY the buckets holding a target rank. The broadcast of
     // `wanted` is |groups|·|ps|·2-proportional while the helper's

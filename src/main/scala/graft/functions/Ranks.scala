@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.Partitioner
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Scalable ranking helpers.
@@ -10,13 +10,15 @@ import org.apache.spark.sql.functions._
   * A bare `row_number().over(Window.orderBy(k))` collapses the whole
   * dataset into ONE partition — fine at 60k rows, fatal at 100 TB.
   * These helpers use the classic two-phase distributed layout
-  * instead: split the key space into `numPartitions` ordered buckets,
-  * number rows within each bucket, and add per-bucket offsets
-  * computed from a tiny (numPartitions-row) broadcast side.
+  * instead, written once in [[twoPhase]]: split the key space into
+  * ordered buckets, aggregate per bucket, take an exclusive prefix
+  * over the tiny per-bucket table, broadcast it back, and finish with
+  * a window inside each bucket plus the bucket's offset. The bucket
+  * count is the session's `spark.sql.shuffle.partitions`.
   *
   * The bucket id is a DETERMINISTIC pure function of the row —
   * boundaries are sampled once, collected to the driver (bounded:
-  * ≤ 100·numPartitions keys), and embedded as literals — NOT
+  * ≤ 100 keys per bucket), and embedded as literals — NOT
   * `spark_partition_id()` over `repartitionByRange`. The physical-pid
   * formulation is subtly unsound: its correctness requires the
   * offsets branch and the row branch to observe THE SAME sampled
@@ -32,17 +34,16 @@ import org.apache.spark.sql.functions._
   */
 object Ranks {
   private val PID = "__graft_pid"
-  private val OFF = "__graft_off"
-  private val CNT = "__graft_cnt"
+  private val AGG = "__graft_agg_"
   private val KEY = "__graft_key"
 
-  /** The deploy-time parallelism knob: two-phase layouts derive their
-    * bucket counts from `spark.sql.shuffle.partitions` instead of a
-    * hard-coded local constant — 32 buckets over a 10¹¹-row table
-    * would be ~3×10⁹ rows each; a cluster deploy that sets
-    * shuffle.partitions for its executor count scales these layouts
-    * with it (AQE coalesces the excess locally). */
-  def defaultPartitions(df: DataFrame): Int =
+  /** The bucket count: the deploy-time parallelism knob
+    * `spark.sql.shuffle.partitions` instead of a hard-coded local
+    * constant — 32 buckets over a 10¹¹-row table would be ~3×10⁹ rows
+    * each; a cluster deploy that sets shuffle.partitions for its
+    * executor count scales these layouts with it (AQE coalesces the
+    * excess locally). */
+  private def buckets(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Lexicographic driver-side ordering over sampled key tuples,
@@ -66,35 +67,35 @@ object Ranks {
     }
   }
 
-  /** Boundary memo. Boundaries are a deterministic artifact of
-    * (key-projection plan, bucket count) — a split of the key space —
-    * so they are sampled once per session and reused, the same
-    * session-scoped artifact store the PQ codebooks use
-    * (EmbedPq.trainCodebooks). Keyed by the CANONICALIZED plan of
-    * `df.select(keys)` (structural equality — source paths, pushed
-    * filters and the projection all participate), so two frames share
-    * an entry only when they would scan identical data. Staleness
-    * (a path rewritten mid-session) can skew bucket balance but never
-    * correctness: the bucket id is a pure row function and the rank
-    * layouts are output-invariant to the split points. */
+  /** Boundary cache, keyed by the CANONICALIZED plan of
+    * `df.select(keys)` and the bucket count. Boundaries are a split of
+    * the key space, a deterministic artifact of that pair, so they are
+    * sampled once and reused. Not a per-dataset [[graft.sources.Memo]]
+    * entry: a rank input has no dataset name to key on, only its plan
+    * (structural equality — source paths, pushed filters and the
+    * projection all participate), so two frames share an entry only
+    * when they would scan identical data. Staleness (a path rewritten
+    * mid-session) can skew bucket balance but never correctness: the
+    * bucket id is a pure row function and the rank layouts are
+    * output-invariant to the split points. */
   private val boundsCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), Seq[Seq[Any]]]
 
-  /** Sample `numPartitions − 1` key-space boundaries (each a key
+  /** Sample `buckets − 1` key-space boundaries (each a key
     * tuple) in ONE pass: a per-partition reservoir with counts, then
     * weighted bound selection on the driver — the RangePartitioner
     * sketch (Spark's Partitioner.scala rangeBounds/determineBounds)
     * without its separate count job, collected once so every consumer
     * sees the same split. The collect is bounded:
-    * ≤ 3·min(100·numPartitions, 100k) tuples. Returns Nil on an empty
+    * ≤ 3·min(100·buckets, 100k) tuples. Returns Nil on an empty
     * frame (single bucket). */
-  private def sampleBounds(df: DataFrame, keys: Seq[Column],
-                           numPartitions: Int): Seq[Seq[Any]] = {
-    if (numPartitions <= 1) return Nil
+  private def sampleBounds(df: DataFrame, keys: Seq[Column]): Seq[Seq[Any]] = {
+    val nb = buckets(df)
+    if (nb <= 1) return Nil
     val proj = df.select(keys: _*)
-    val cacheKey = (proj.queryExecution.analyzed.canonicalized, numPartitions)
+    val cacheKey = (proj.queryExecution.analyzed.canonicalized, nb)
     boundsCache.getOrElseUpdate(cacheKey, {
-      val target = math.min(100L * numPartitions, 100000L)
+      val target = math.min(100L * nb, 100000L)
       val rdd = proj.rdd
       val perPart = math.max(1, math.ceil(
         3.0 * target / math.max(1, rdd.getNumPartitions)).toInt)
@@ -119,15 +120,15 @@ object Ranks {
       else {
         // Each sampled tuple stands for count/sampleLen source rows;
         // walk the weight-sorted candidates emitting a bound every
-        // total/numPartitions rows (determineBounds' layout).
+        // total/nb rows (determineBounds' layout).
         val candidates = sketched.flatMap { case (cnt, sample) =>
           sample.map(s => (s, cnt.toDouble / sample.length))
         }.sortBy(_._1)(rowOrd)
-        val step = candidates.map(_._2).sum / numPartitions
+        val step = candidates.map(_._2).sum / nb
         val bounds = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
         var cum = 0.0
         var next = step
-        for ((key, w) <- candidates if bounds.size < numPartitions - 1) {
+        for ((key, w) <- candidates if bounds.size < nb - 1) {
           cum += w
           if (cum >= next &&
               (bounds.isEmpty || rowOrd.compare(key, bounds.last) > 0)) {
@@ -158,11 +159,15 @@ object Ranks {
       .reduceOption(_ + _).getOrElse(lit(0))
   }
 
-  /** df + a `PID` bucket column over `keys`. Exposed within the
-    * engine for operators that inline the two-phase layout
-    * (Relational.qPercentilesDist).
+  /** df + an `out` bucket column over `keys`, its bounds sampled from
+    * `boundsFrom` (default `df`: boundaries are only split points of
+    * the key space, so a CHEAPER frame with the same key columns
+    * serves). [[twoPhase]]'s first step, also under [[chunkEnds]]'
+    * RDD walk; [[Quantiles.bracketed]] (behind
+    * `Relational.qPercentilesDist`) takes the whole first phase from
+    * [[bucketOffsets]].
     *
-    * `bucketKeys` may be a PREFIX of the rank ordering: bucket
+    * `keys` may be a PREFIX of the rank ordering: bucket
     * monotonicity only needs the leading sort component(s), and a
     * short prefix keeps the boundary-comparison expression small
     * enough for whole-stage codegen (31 boundaries × a 5-deep
@@ -170,9 +175,56 @@ object Ranks {
     * measured 4× slower on layout_zorder). Rows tied on the prefix
     * stay in one bucket, so prefix cardinality must be high enough to
     * spread the data (unique-ish leading key by contract). */
-  private[graft] def withBucket(df: DataFrame, keys: Seq[Column],
-                                numPartitions: Int, out: String): DataFrame =
-    df.withColumn(out, pidExpr(keys, sampleBounds(df, keys, numPartitions)))
+  private[graft] def withBucket(df: DataFrame, keys: Seq[Column], out: String,
+                                boundsFrom: Option[DataFrame] = None): DataFrame =
+    df.withColumn(out, pidExpr(keys, sampleBounds(boundsFrom.getOrElse(df), keys)))
+
+  /** Name of the exclusive prefix [[bucketOffsets]] takes of the
+    * aggregate named `agg`. */
+  private[graft] def offsetOf(agg: String): String = s"${agg}_off"
+
+  /** The first phase of the layout: `df` with the bucket column `pid`
+    * over `bucketPrefix` (Nil: all of `partKeys ++ order`; see
+    * [[withBucket]]), and the per-(`partKeys`, `pid`) table holding
+    * each `(aggregate, name)` of `aggs` as `name` and its exclusive
+    * prefix over the buckets of its `partKeys` group as
+    * [[offsetOf]]`(name)`. The table has ≤ buckets rows per group:
+    * with no `partKeys` its prefix window is a single partition over
+    * driver-scale data. */
+  private[graft] def bucketOffsets(df: DataFrame, partKeys: Seq[String], order: Seq[Column],
+                                   bucketPrefix: Seq[Column], boundsFrom: Option[DataFrame],
+                                   pid: String, aggs: Seq[(Column, String)]): (DataFrame, DataFrame) = {
+    val bucketOn = if (bucketPrefix.isEmpty) partKeys.map(col) ++ order else bucketPrefix
+    val parted = withBucket(df, bucketOn, pid, boundsFrom)
+    val group = partKeys.map(col) :+ col(pid)
+    val prior = Window.partitionBy(partKeys.map(col): _*).orderBy(col(pid))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val named = aggs.map { case (a, n) => a.as(n) }
+    val offsets = parted.groupBy(group: _*).agg(named.head, named.tail: _*)
+      .select(group ++ aggs.map { case (_, n) => col(n) } ++ aggs.map { case (_, n) =>
+        coalesce(sum(col(n)).over(prior), lit(0L)).as(offsetOf(n))
+      }: _*)
+    (parted, offsets)
+  }
+
+  /** The two-phase layout every entry point is: [[bucketOffsets]] per
+    * (`partKeys`, bucket), the offsets broadcast back, and for each
+    * `(aggregate, inBucket, out)` of `outs` the column `out` =
+    * `inBucket` over the rows of its (`partKeys`, bucket) ordered by
+    * `order`, plus the bucket's offset. Every row-bearing stage is
+    * data-parallel. */
+  private def twoPhase(df: DataFrame, partKeys: Seq[String], order: Seq[Column],
+                       bucketPrefix: Seq[Column], boundsFrom: Option[DataFrame],
+                       outs: Seq[(Column, WindowSpec => Column, String)]): DataFrame = {
+    val aggs = outs.map { case (a, _, o) => (a, AGG + o) }
+    val (parted, offsets) = bucketOffsets(df, partKeys, order, bucketPrefix, boundsFrom, PID, aggs)
+    val inBucket = Window.partitionBy(partKeys.map(col) :+ col(PID): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val joined = parted.join(broadcast(offsets.drop(aggs.map(_._2): _*)), partKeys :+ PID)
+    outs.foldLeft(joined) { case (acc, (_, fn, o)) =>
+      acc.withColumn(o, fn(inBucket) + col(offsetOf(AGG + o)))
+    }.drop(PID +: aggs.map(a => offsetOf(a._2)): _*)
+  }
 
   /** Routes a `(bucket id, key)` pair to the partition of its bucket. */
   private final class BucketPartitioner(val numPartitions: Int) extends Partitioner {
@@ -194,13 +246,12 @@ object Ranks {
     * one per partition, and walked in key order. Ties never straddle a
     * bucket: the bucket id is a pure function of the key. The second
     * job is skipped when no bucket needs a walk. */
-  private[graft] def chunkEnds(df: DataFrame, key: Column, every: Long,
-                               numPartitions: Int): Seq[(Long, Long)] = {
+  private[graft] def chunkEnds(df: DataFrame, key: Column, every: Long): Seq[(Long, Long)] = {
     require(every > 0, s"chunk size must be positive, got $every")
     val keys = df.select(key.cast("long").as(KEY)).filter(col(KEY).isNotNull)
-    val pairs = withBucket(keys, Seq(col(KEY)), numPartitions, PID)
+    val pairs = withBucket(keys, Seq(col(KEY)), PID)
       .select(col(PID), col(KEY)).rdd.map(r => (r.getInt(0), r.getLong(1)))
-    val nb = math.max(1, numPartitions)
+    val nb = math.max(1, buckets(df))
     val perTask = pairs.mapPartitions { it =>
       val c = new Array[Long](nb)
       var mx = Long.MinValue
@@ -235,34 +286,13 @@ object Ranks {
     if (found.lastOption.forall(_._2 < total)) found :+ ((maxKey, total)) else found
   }
 
-  def globalRowNumber(df: DataFrame, key: Column, numPartitions: Int, out: String): DataFrame =
-    globalRowNumber(df, Seq(key), numPartitions, out)
-
-  def globalRowNumber(df: DataFrame, keys: Seq[Column], numPartitions: Int,
-                      out: String): DataFrame =
-    globalRowNumber(df, keys, numPartitions, out, keys)
-
   /** Adds a 1-based global row number `out` ordered by `keys`
     * (lexicographic). The composite must be unique for a
     * deterministic result (ties would land in bucket-dependent
-    * order). `bucketKeys` — see [[withBucket]]. */
-  def globalRowNumber(df: DataFrame, keys: Seq[Column], numPartitions: Int,
-                      out: String, bucketKeys: Seq[Column]): DataFrame = {
-    val parted = df.withColumn(PID,
-      pidExpr(bucketKeys, sampleBounds(df, bucketKeys, numPartitions)))
-    // Per-bucket counts → exclusive prefix sum. numPartitions rows:
-    // the single-partition window here is over driver-scale data.
-    val offsets = parted.groupBy(col(PID)).agg(count(lit(1)).as(CNT))
-      .withColumn(OFF, coalesce(
-        sum(col(CNT)).over(
-          Window.orderBy(col(PID)).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .drop(CNT)
-    parted.join(broadcast(offsets), PID)
-      .withColumn(out,
-        row_number().over(Window.partitionBy(col(PID)).orderBy(keys: _*)).cast("long") + col(OFF))
-      .drop(PID, OFF)
-  }
+    * order). `bucketPrefix` — see [[withBucket]]. */
+  def globalRowNumber(df: DataFrame, keys: Seq[Column], out: String,
+                      bucketPrefix: Seq[Column] = Nil): DataFrame =
+    perKeyRowNumber(df, Nil, keys, out, bucketPrefix)
 
   /** Per-key arrival rank: a 1-based row number `out` within each
     * `keyCols` group ordered by `order` — the skew-safe replacement
@@ -270,120 +300,31 @@ object Ranks {
     * which hands EVERY row of one key to a single task's sort (fatal
     * when keys are low-cardinality "types": one hot key at 100 TB is
     * a multi-TB single-task sort). Buckets split on the FULL
-    * (key ++ order) tuple, so a hot key spreads over many buckets;
-    * per-(key, bucket) counts → per-key exclusive prefix sum over
-    * ≤ numPartitions rows per key (tiny, broadcast back); finish with
-    * a within-(key, bucket) row_number plus the offset. Every
-    * row-bearing stage is data-parallel. (key ++ order) must be a
-    * unique composite or ties land in bucket-dependent order. */
+    * (key ++ order) tuple, or on `bucketPrefix` when given, so a hot
+    * key spreads over many buckets; only the per-(key, bucket) counts
+    * converge. (key ++ order) must be a unique composite or ties land
+    * in bucket-dependent order. */
   def perKeyRowNumber(df: DataFrame, keyCols: Seq[String], order: Seq[Column],
-                      numPartitions: Int, out: String): DataFrame =
-    perKeyRowNumber(df, keyCols, order, numPartitions, out, None)
+                      out: String, bucketPrefix: Seq[Column] = Nil): DataFrame =
+    twoPhase(df, keyCols, order, bucketPrefix, None,
+      Seq((count(lit(1)), w => row_number().over(w).cast("long"), out)))
 
-  /** `bucketPrefix` — optional PREFIX of (keys ++ order) to bucket on
-    * (the [[globalRowNumber]] bucketKeys contract): the full tuple's
-    * boundary-comparison tree can exceed whole-stage codegen limits
-    * and run interpreted on every row; a high-cardinality prefix
-    * keeps it codegen-sized while rows tied on the prefix still land
-    * in one bucket (correct at any split). */
-  def perKeyRowNumber(df: DataFrame, keyCols: Seq[String], order: Seq[Column],
-                      numPartitions: Int, out: String,
-                      bucketPrefix: Option[Seq[Column]]): DataFrame = {
-    val keys = keyCols.map(col)
-    val parted = withBucket(df, bucketPrefix.getOrElse(keys ++ order),
-      numPartitions, PID)
-    val cnt = parted.groupBy(keys :+ col(PID): _*).agg(count(lit(1)).as(CNT))
-    val offsets = cnt.withColumn(OFF, coalesce(
-        sum(col(CNT)).over(
-          Window.partitionBy(keys: _*).orderBy(col(PID))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .drop(CNT)
-    parted.join(broadcast(offsets), keyCols :+ PID)
-      .withColumn(out,
-        row_number().over(
-          Window.partitionBy(keys :+ col(PID): _*).orderBy(order: _*))
-          .cast("long") + col(OFF))
-      .drop(PID, OFF)
-  }
-
-  def globalRunningSum(df: DataFrame, key: Column, value: Column,
-                       numPartitions: Int, out: String): DataFrame =
-    globalRunningSum(df, Seq(key), value, numPartitions, out)
-
-  /** Adds a global running sum `out` of `value` ordered by the `keys`
-    * tuple — same two-phase layout as [[globalRowNumber]]: per-bucket
-    * sums → exclusive prefix over numPartitions rows, broadcast the
-    * offsets back and finish with a within-bucket running sum. No
-    * row-bearing stage is ever a single partition. `keys` must be
-    * unique as a composite (ties would sum in bucket-dependent
-    * order). */
-  def globalRunningSum(df: DataFrame, keys: Seq[Column], value: Column,
-                       numPartitions: Int, out: String): DataFrame =
-    globalRunningSum(df, keys, value, numPartitions, out, df)
-
-  /** Several global running sums over ONE two-phase layout: each
-    * `(value, out)` pair gets its running sum ordered by `keys`, all
-    * sharing a single bucket assignment, one per-bucket offsets
-    * aggregate, and one within-bucket Window operator (identical
-    * window spec → Spark evaluates every frame in the same sort).
-    * Chaining N single-value [[globalRunningSum]] calls costs N
-    * boundary samples + N offset shuffles + N window passes for the
-    * same answer — the rank-test scaffold measured 2× faster through
-    * this. Semantics per column are exactly [[globalRunningSum]]. */
-  def globalRunningSums(df: DataFrame, keys: Seq[Column],
-                        values: Seq[(Column, String)],
-                        numPartitions: Int): DataFrame = {
-    val parted = df.withColumn(PID,
-      pidExpr(keys, sampleBounds(df, keys, numPartitions)))
-    val aggs = values.map { case (v, o) => sum(v).as(CNT + o) }
-    val offsets = parted.groupBy(col(PID))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col(PID) +: values.map { case (_, o) =>
-        coalesce(
-          sum(col(CNT + o)).over(
-            Window.orderBy(col(PID)).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)).as(OFF + o)
-      }: _*)
-    val w = Window.partitionBy(col(PID)).orderBy(keys: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    values.foldLeft(parted.join(broadcast(offsets), PID)) {
-      case (acc, (v, o)) => acc.withColumn(o, sum(v).over(w) + col(OFF + o))
-    }.drop(PID +: values.map { case (_, o) => OFF + o }: _*)
-  }
-
-  /** `boundsFrom` variant: sample the bucket boundaries from a CHEAPER
-    * frame with the same key columns (boundaries are just split
-    * points of the key space — they need not come from the ranked
-    * data itself). Lets a caller whose input is expensive to compute
-    * (a union over a sessionization, say) pay the two sampling scans
-    * on its cheap component instead. */
-  def globalRunningSum(df: DataFrame, keys: Seq[Column], value: Column,
-                       numPartitions: Int, out: String,
-                       boundsFrom: DataFrame): DataFrame =
-    globalRunningSum(df, keys, value, numPartitions, out, boundsFrom, keys)
-
-  /** `bucketKeys` — a PREFIX of the sum ordering, same contract as
-    * [[globalRowNumber]]'s: a deep lexicographic boundary tree (31
-    * boundaries × a 3-deep compare) falls out of whole-stage codegen
-    * and runs interpreted on every row of both the offsets and the
-    * main branch; a near-unique leading key alone keeps the
-    * comparison chain codegen-sized. */
-  def globalRunningSum(df: DataFrame, keys: Seq[Column], value: Column,
-                       numPartitions: Int, out: String,
-                       boundsFrom: DataFrame, bucketKeys: Seq[Column]): DataFrame = {
-    val parted = df.withColumn(PID,
-      pidExpr(bucketKeys, sampleBounds(boundsFrom, bucketKeys, numPartitions)))
-    val offsets = parted.groupBy(col(PID)).agg(sum(value).as(CNT))
-      .withColumn(OFF, coalesce(
-        sum(col(CNT)).over(
-          Window.orderBy(col(PID)).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .drop(CNT)
-    parted.join(broadcast(offsets), PID)
-      .withColumn(out,
-        sum(value).over(Window.partitionBy(col(PID)).orderBy(keys: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)) + col(OFF))
-      .drop(PID, OFF)
-  }
+  /** Global running sums over ONE layout: each `(value, out)` pair
+    * gets the running sum `out` of `value` ordered by the `keys`
+    * tuple, all sharing a single bucket assignment, one per-bucket
+    * offsets aggregate and one within-bucket Window operator
+    * (identical window spec → Spark evaluates every frame in the same
+    * sort; chaining single-value passes re-paid sampling, an offsets
+    * shuffle and a window pass per column — the rank-test scaffold
+    * measured 2× faster). `keys` must be unique as a composite (ties
+    * would sum in bucket-dependent order). `bucketPrefix` — see
+    * [[withBucket]]; `boundsFrom` samples the bucket bounds from a
+    * cheaper frame with the same key columns, so a caller whose input
+    * is expensive (a union over a sessionization, say) pays the
+    * sampling scans on its cheap component instead. */
+  def globalRunningSums(df: DataFrame, keys: Seq[Column], values: Seq[(Column, String)],
+                        bucketPrefix: Seq[Column] = Nil,
+                        boundsFrom: Option[DataFrame] = None): DataFrame =
+    twoPhase(df, Nil, keys, bucketPrefix, boundsFrom,
+      values.map { case (v, o) => (sum(v), (w: WindowSpec) => sum(v).over(w), o) })
 }

@@ -84,11 +84,10 @@ object Accumulator {
     import s.implicits._
     val ev = Tables.events(s, dir).select($"event_type", $"ts", $"event_id")
     graft.functions.Ranks.perKeyRowNumber(
-        ev, Seq("event_type"), Seq($"ts", $"event_id"),
-        graft.functions.Ranks.defaultPartitions(ev), "rn",
+        ev, Seq("event_type"), Seq($"ts", $"event_id"), "rn",
         // bucket on (type, ts): the full 3-deep boundary tree is too
         // wide for whole-stage codegen (Ranks bucketPrefix contract)
-        bucketPrefix = Some(Seq($"event_type", $"ts")))
+        bucketPrefix = Seq($"event_type", $"ts"))
       .withColumn("seq", expr(s"CAST((rn - 1) DIV $thresh AS BIGINT)"))
       .groupBy($"event_type", $"seq")
       .agg(count(lit(1)).as("item_count"),

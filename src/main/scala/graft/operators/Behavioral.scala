@@ -402,10 +402,9 @@ object Behavioral {
         |  'f', CAST(frequency AS DOUBLE),
         |  'm', monetary) AS (kind, value)""".stripMargin))
     val ranked = graft.functions.Ranks.perKeyRowNumber(
-        longForm, Seq("kind"), Seq($"value", $"o_custkey"),
-        graft.functions.Ranks.defaultPartitions(longForm), "rk",
+        longForm, Seq("kind"), Seq($"value", $"o_custkey"), "rk",
         // (kind, value) prefix: codegen-sized boundary tree
-        bucketPrefix = Some(Seq(col("kind"), $"value")))
+        bucketPrefix = Seq(col("kind"), $"value"))
       .withColumn("score", expr(s"((rk - 1L) * 5L) div ${n}L + 1L"))
     val scored = ranked.groupBy($"o_custkey")
       .agg(max(when($"kind" === "r", $"score")).as("r_score"),
@@ -1598,7 +1597,6 @@ object Behavioral {
     * arithmetic term for term (the `q_percentiles_dist` device). */
   def qPercentilesGrouped(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.Ranks
     val v = Tables.events(s, dir)
       .select($"event_type", to_date($"ts").as("day"), $"value".as("x"))
     // bucketed rank SELECTION (graft.functions.Quantiles): the
@@ -1608,9 +1606,8 @@ object Behavioral {
     // count and any skew.
     val picked = graft.functions.Quantiles.bracketed(v,
       Seq("event_type", "day"), "x", Seq(0.5, 0.95),
-      Ranks.defaultPartitions(v),
       // bucket on (type, x): the full 3-deep tree is codegen-too-wide
-      bucketCols = Some(Seq(col("event_type"), col("x"))))
+      bucketPrefix = Seq(col("event_type"), col("x")))
     picked.select($"event_type", $"day", $"p", $"n",
         when($"lower" === $"higher", $"vlo")
           .otherwise(($"higher" - $"pos") * $"vlo" + ($"pos" - $"lower") * $"vhi")
@@ -1886,8 +1883,7 @@ object Behavioral {
           lit(null).cast("double").as("p50_hours"),
           lit(null).cast("double").as("p90_hours"))
     }
-    val ranked = Ranks.globalRowNumber(durations, Seq($"dur_us", $"user_id"),
-      Ranks.defaultPartitions(durations), "rank")
+    val ranked = Ranks.globalRowNumber(durations, Seq($"dur_us", $"user_id"), "rank")
     val targets = Seq(0.5, 0.9).map { p =>
       val pos = p * (n - 1).toDouble
       (p, pos, math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)

@@ -359,17 +359,8 @@ object Bpe {
       .select($"doc_id", coalesce($"n", lit(0L)).as("n_tokens"))
   }
 
-  def docPackBpe(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = perDocPieces(s, dir)
-    graft.functions.Ranks.globalRunningSum(d, $"doc_id", $"n_tokens",
-        graft.functions.Ranks.defaultPartitions(d), "cum")
-      .withColumn("start_offset", $"cum" - $"n_tokens")
-      .select($"doc_id", $"n_tokens", $"start_offset",
-        expr(s"start_offset div ${Pipeline.packBudget}").as("bin_id"),
-        expr(s"start_offset % ${Pipeline.packBudget}").as("bin_pos"))
-      .orderBy($"doc_id")
-  }
+  def docPackBpe(s: SparkSession, dir: String): DataFrame =
+    Pipeline.packed(perDocPieces(s, dir))
 
   def docPackBpeSql(mergesGlob: String): String =
     s"""WITH ${pieceCountCtes(mergesGlob, "doc_id")},

@@ -893,7 +893,7 @@ object Experimentation {
     * user_id%2 assignment as [[qAbtest]]), collapsed to one row per
     * DISTINCT quantized value carrying per-arm counts and the three
     * cumulative counts. The cumulative device is
-    * [[graft.functions.Ranks.globalRunningSum]] — a per-value window
+    * [[graft.functions.Ranks.globalRunningSums]] — a per-value window
     * would be a single-task global sort, and the distinct-value
     * frame is NOT bounded at 100 TB (per-user sums take ~as many
     * values as users). The three running sums share ONE two-phase
@@ -915,8 +915,7 @@ object Experimentation {
     // three single-sum passes re-paid boundary sampling and a window
     // pass per column for the identical answer (measured ~2× slower)
     Ranks.globalRunningSums(v, Seq($"x_q"),
-      Seq(($"t", "cum_n"), ($"ca", "cum_a"), ($"cb", "cum_b")),
-      Ranks.defaultPartitions(v))
+      Seq(($"t", "cum_n"), ($"ca", "cum_a"), ($"cb", "cum_b")))
   }
 
   /** SQL twin of [[rankScaffold]] as WITH-clause CTEs ending in

@@ -29,8 +29,7 @@ object Iterators {
   val resumeCursor = 10000L
 
   private def chunked(df: DataFrame, key: String): DataFrame = {
-    Ranks.globalRowNumber(df.select(col(key)), col(key),
-        Ranks.defaultPartitions(df), "rn")
+    Ranks.globalRowNumber(df.select(col(key)), Seq(col(key)), "rn")
       .withColumn("batch_idx", expr(s"CAST((rn - 1) DIV $batchSize AS BIGINT)"))
       .groupBy(col("batch_idx"))
       .agg(count(lit(1)).as("item_count"),
@@ -57,7 +56,7 @@ object Iterators {
     * lib.ts:1073-1087). The chunked result is 1/batchSize of the
     * input — still 10⁸ rows for a 10¹¹-row table at batchSize=1000 —
     * so the cumulative sum uses the distributed two-phase prefix sum
-    * ([[Ranks.globalRunningSum]]), never a no-partition window. */
+    * ([[Ranks.globalRunningSums]]), never a no-partition window. */
   def iterProgress(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val b = chunked(Tables.orders(s, dir), "o_orderkey")
@@ -67,9 +66,8 @@ object Iterators {
     // frame itself would execute the whole upstream rank twice more
     val nBatches = (Tables.orders(s, dir).count() + batchSize - 1) / batchSize
     val boundsFrom = s.range(nBatches).select($"id".as("batch_idx"))
-    Ranks.globalRunningSum(
-        b, Seq(col("batch_idx")), col("item_count"),
-        Ranks.defaultPartitions(b), "processed_count", boundsFrom)
+    Ranks.globalRunningSums(b, Seq(col("batch_idx")),
+        Seq(col("item_count") -> "processed_count"), boundsFrom = Some(boundsFrom))
       .select($"batch_idx", $"item_count", $"cursor_key", $"processed_count")
       .orderBy($"batch_idx")
   }
@@ -211,7 +209,7 @@ final class TableIterator(
     * `pending` (reference JobStatus, client/index.ts:9, validator
     * lib.ts:893) — the first [[step]] transitions it to `running`. */
   def start(jobId: String): IterJobStatus = synchronized {
-    val ends = Ranks.chunkEnds(df, col(keyCol), batchSize, Ranks.defaultPartitions(df))
+    val ends = Ranks.chunkEnds(df, col(keyCol), batchSize)
     save(IterJobRow(jobId, "pending", 0, None, 0, 0, clock(), ends.map(_._1), ends.map(_._2)))
     status(jobId).get
   }

@@ -59,10 +59,10 @@ object Layout {
     // all of them are interchangeable, which a hash compare can't see
     Ranks.globalRowNumber(keyed,
         Seq($"zval", $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"),
-        Ranks.defaultPartitions(keyed), "position",
+        "position",
         // bucket on the leading z-value alone: monotone in the full
         // order, and a single-column boundary chain stays codegen'd
-        bucketKeys = Seq($"zval"))
+        bucketPrefix = Seq($"zval"))
       .select($"position", $"l_orderkey", $"l_linenumber",
         $"l_partkey", $"l_suppkey", $"zval")
       .orderBy($"position")
@@ -129,8 +129,7 @@ object Layout {
       .withColumn("hval", expr("graft_hilbert(l_partkey, l_suppkey)"))
     Ranks.globalRowNumber(keyed,
         Seq($"hval", $"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey"),
-        Ranks.defaultPartitions(keyed), "position",
-        bucketKeys = Seq($"hval"))
+        "position", bucketPrefix = Seq($"hval"))
       .select($"position", $"l_orderkey", $"l_linenumber",
         $"l_partkey", $"l_suppkey", $"hval")
       .orderBy($"position")
@@ -211,8 +210,7 @@ object Layout {
     val layoutName = element_at(
       array(layouts.map { case (n, _) => lit(n) }: _*), $"lidx" + 1)
     val stats = Ranks.perKeyRowNumber(tagged, Seq("lidx"),
-        (1 to 5).map(j => col(s"k$j")), Ranks.defaultPartitions(base), "pos",
-        bucketPrefix = Some(Seq($"lidx", $"k1")))
+        (1 to 5).map(j => col(s"k$j")), "pos", bucketPrefix = Seq($"lidx", $"k1"))
       .select($"lidx", expr(s"(pos - 1) div $pruneGroupRows").as("gid"),
         $"l_partkey", $"l_suppkey")
       .groupBy($"lidx", $"gid")
@@ -386,8 +384,7 @@ object Layout {
     val n = keyed.count()
     val ranked = Ranks.globalRowNumber(keyed,
       Seq($"l_partkey", $"l_orderkey", $"l_linenumber", $"l_suppkey"),
-      Ranks.defaultPartitions(keyed), "rank",
-      bucketKeys = Seq($"l_partkey"))
+      "rank", bucketPrefix = Seq($"l_partkey"))
     ranked
       .select(expr(s"(rank - 1) * $rangeBuckets div ${n}L").as("bucket"),
         $"l_partkey")

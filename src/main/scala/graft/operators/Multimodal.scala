@@ -456,7 +456,7 @@ object Multimodal {
     * the shard containing its START byte (boundary drift bounded by
     * one max payload — the classic tar-shard convention). The global
     * byte position is the two-phase distributed prefix sum
-    * ([[graft.functions.Ranks.globalRunningSum]], never a one-task
+    * ([[graft.functions.Ranks.globalRunningSums]], never a one-task
     * window), and the payload NEVER rides the shuffle — only
     * (asset_id, mime, n_bytes) rank; byte lengths come from the scan
     * row-locally. Writing the actual shard files is then an
@@ -512,8 +512,8 @@ object Multimodal {
     val assets = withPayload(s, dir)
       .select($"doc_id".as("asset_id"), $"mime",
         octet_length($"payload").cast("long").as("n_bytes"))
-    graft.functions.Ranks.globalRunningSum(assets, Seq($"asset_id"), $"n_bytes",
-        graft.functions.Ranks.defaultPartitions(assets), "cum_after")
+    graft.functions.Ranks.globalRunningSums(assets, Seq($"asset_id"),
+        Seq($"n_bytes" -> "cum_after"))
       .withColumn("cum_before", $"cum_after" - $"n_bytes")
       .select($"asset_id", $"mime", $"n_bytes",
         expr(s"cum_before div $shardBytes").as("shard_id"),

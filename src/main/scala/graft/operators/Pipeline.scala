@@ -447,26 +447,30 @@ object Pipeline {
   /** Token budget of one packed training sequence. */
   val packBudget = 2048L
 
-  /** Sequence packing: lay the corpus out as one contiguous token
-    * stream (deterministic doc_id order) and chunk it into
-    * fixed-budget bins — each document labelled with its start
-    * offset, bin, and position within the bin. The running offset is
-    * [[graft.functions.Ranks.globalRunningSum]]'s two-phase prefix
-    * sum (range partition → per-partition sums → broadcast offsets),
-    * so no row-bearing stage is single-partition — the same layout
-    * that makes `iter_progress` scale. */
-  def docPack(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.documents(s, dir)
-      .withColumn("toks", expr(TA.toksExpr))
-      .select($"doc_id", size($"toks").cast("long").as("n_tokens"))
-    graft.functions.Ranks.globalRunningSum(d, $"doc_id", $"n_tokens",
-        graft.functions.Ranks.defaultPartitions(d), "cum")
-      .withColumn("start_offset", $"cum" - $"n_tokens")
-      .select($"doc_id", $"n_tokens", $"start_offset",
+  /** Packs a `(doc_id, n_tokens)` frame: lays the documents out as
+    * one contiguous token stream (deterministic doc_id order) and
+    * chunks it into [[packBudget]]-token bins — each document labelled
+    * with its start offset, bin, and position within the bin. The
+    * running offset is [[graft.functions.Ranks.globalRunningSums]]'
+    * two-phase prefix sum (bucket → per-bucket sums → broadcast
+    * offsets), so no row-bearing stage is single-partition — the same
+    * layout that makes `iter_progress` scale. The one projection
+    * behind `doc_pack`, `doc_pack_bpe` and `doc_pack_unigram`, which
+    * differ only in how they count a document's tokens. */
+  private[operators] def packed(d: DataFrame): DataFrame =
+    graft.functions.Ranks.globalRunningSums(d, Seq(col("doc_id")), Seq(col("n_tokens") -> "cum"))
+      .withColumn("start_offset", col("cum") - col("n_tokens"))
+      .select(col("doc_id"), col("n_tokens"), col("start_offset"),
         expr(s"start_offset div $packBudget").as("bin_id"),
         expr(s"start_offset % $packBudget").as("bin_pos"))
-      .orderBy($"doc_id")
+      .orderBy(col("doc_id"))
+
+  /** Sequence packing in whitespace tokens ([[packed]]). */
+  def docPack(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    packed(Tables.documents(s, dir)
+      .withColumn("toks", expr(TA.toksExpr))
+      .select($"doc_id", size($"toks").cast("long").as("n_tokens")))
   }
 
   val docPackSql: String =
@@ -1242,14 +1246,12 @@ object Pipeline {
     val docs = Tables.documents(s, dir).select($"doc_id", $"source")
     val sizes = docs.groupBy($"source").agg(count(lit(1)).as("ns"))
     val ranked = graft.functions.Ranks.perKeyRowNumber(
-      docs, Seq("source"), Seq($"doc_id"),
-      graft.functions.Ranks.defaultPartitions(docs), "rn")
+      docs, Seq("source"), Seq($"doc_id"), "rn")
     val keyed = ranked.join(broadcast(sizes), "source")
       .withColumn("mix_key", expr(
         "CAST(floor(CAST(rn AS DOUBLE) / sqrt(CAST(ns AS DOUBLE)) * 1000000000.0 + CAST(0.5 AS DOUBLE)) AS BIGINT)"))
     graft.functions.Ranks.globalRowNumber(keyed,
-        Seq($"mix_key", $"source", $"doc_id"),
-        graft.functions.Ranks.defaultPartitions(keyed), "position")
+        Seq($"mix_key", $"source", $"doc_id"), "position")
       .select($"doc_id", $"source", $"mix_key", $"position")
       .orderBy($"position")
   }
@@ -1345,9 +1347,7 @@ object Pipeline {
         concat(
           md5(concat(lit(s"$shuffleSeed:"), $"doc_id".cast("string")).cast("binary")),
           lit("-"), lpad($"doc_id".cast("string"), 20, "0")))
-    graft.functions.Ranks
-      .globalRowNumber(keyed, $"shuffle_key",
-        graft.functions.Ranks.defaultPartitions(keyed), "position")
+    graft.functions.Ranks.globalRowNumber(keyed, Seq($"shuffle_key"), "position")
       .select($"position", $"doc_id", $"source")
       .orderBy($"position")
   }
@@ -1833,8 +1833,7 @@ object Pipeline {
       .groupBy($"tok").agg(count(lit(1)).as("c"))
       .localCheckpoint(true)
     val ranked = Ranks.globalRowNumber(
-      freq.withColumn("negc", -$"c"), Seq($"negc", $"tok"),
-      Ranks.defaultPartitions(freq), "rank")
+      freq.withColumn("negc", -$"c"), Seq($"negc", $"tok"), "rank")
     val terms = ranked.select(
       expr("CAST(floor(ln(CAST(rank AS DOUBLE)) * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("xq"),
       expr("CAST(floor(ln(CAST(c AS DOUBLE)) * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("yq"))

@@ -342,7 +342,7 @@ object Relational {
     * DuckDB oracle. The engine's plan is the sweep line instead:
     * sessions emit (+1 at start, −1 at end) markers, events emit
     * 0-weight probes, and one composite-key
-    * [[graft.functions.Ranks.globalRunningSum]] over
+    * [[graft.functions.Ranks.globalRunningSums]] over
     * (time, kind, id) — start < probe < end at equal timestamps, so
     * both interval endpoints are inclusive — yields each event's
     * active count. O(n log n) work, one range shuffle, every stage
@@ -376,11 +376,10 @@ object Relational {
     // bucket on the leading `us` alone (micro-timestamps, near-unique):
     // the full 3-key boundary tree is too wide for whole-stage codegen
     // and ran interpreted on every row of both two-phase branches
-    val swept = graft.functions.Ranks.globalRunningSum(
+    val swept = graft.functions.Ranks.globalRunningSums(
       sessionMarkers.union(probes),
-      Seq($"us", $"kind", $"id"), $"delta",
-      graft.functions.Ranks.defaultPartitions(probes), "n_active",
-      boundsFrom = probes, bucketKeys = Seq($"us"))
+      Seq($"us", $"kind", $"id"), Seq($"delta" -> "n_active"),
+      bucketPrefix = Seq($"us"), boundsFrom = Some(probes))
     swept.filter($"kind" === 1)
       .select($"id".as("event_id"), $"n_active")
       .orderBy($"event_id")
@@ -922,8 +921,7 @@ object Relational {
     // located buckets are sorted — the previous layout ranked every
     // row (full within-bucket sort + data-sized rank join) to keep 12
     // of them. Same bracketing values, same interpolation, bit-equal.
-    val picked = graft.functions.Quantiles.bracketed(v, Seq("flag"), "x",
-      Seq(0.5, 0.95), graft.functions.Ranks.defaultPartitions(v))
+    val picked = graft.functions.Quantiles.bracketed(v, Seq("flag"), "x", Seq(0.5, 0.95))
     picked.select($"flag", $"p", $"n",
         when($"lower" === $"higher", $"vlo")
           .otherwise(($"higher" - $"pos") * $"vlo" + ($"pos" - $"lower") * $"vhi")
@@ -1642,7 +1640,7 @@ object Relational {
     val rev = Tables.orders(s, dir)
       .groupBy($"o_custkey").agg(dsum($"o_totalprice").as("rev"))
     val ranked = graft.functions.Ranks.globalRowNumber(rev,
-      Seq($"rev", $"o_custkey"), graft.functions.Ranks.defaultPartitions(rev), "rk")
+      Seq($"rev", $"o_custkey"), "rk")
     ranked.agg(count(lit(1)).as("n"),
         dsum($"rev").as("sx"),
         dsum($"rk".cast("double") * $"rev").as("srx"))
@@ -1862,8 +1860,7 @@ object Relational {
     val n = pinned.count() // one scalar: the ranked population size
     val ranked = Ranks.globalRowNumber(
       pinned.withColumn("neg_rev", -$"rev_q"),
-      Seq($"neg_rev", $"o_custkey"),
-      Ranks.defaultPartitions(pinned), "rn")
+      Seq($"neg_rev", $"o_custkey"), "rn")
     ranked
       .withColumn("decile",
         (floor((($"rn" - 1L) * 10L).cast("double") / lit(n.toDouble)) + 1L).cast("int"))
@@ -2104,7 +2101,7 @@ object Relational {
     * Scale: sessions reduce the event stream first (the shared
     * [[sessionized]] aggregate); the sweep runs on the SESSION-sized
     * delta stream with the two-phase bucketed global running sum
-    * ([[graft.functions.Ranks.globalRunningSum]] — never a one-task
+    * ([[graft.functions.Ranks.globalRunningSums]] — never a one-task
     * ORDER BY window), and the per-day max partial-aggregates. */
   def qPeakConcurrency(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2117,9 +2114,8 @@ object Relational {
         $"user_id", $"session_id")
       .unionAll(se.select($"e_us".as("us"), lit(1).as("rev"), lit(-1L).as("delta"),
         $"user_id", $"session_id"))
-    Ranks.globalRunningSum(deltas,
-        Seq($"us", $"rev", $"user_id", $"session_id"), $"delta",
-        Ranks.defaultPartitions(deltas), "cur")
+    Ranks.globalRunningSums(deltas,
+        Seq($"us", $"rev", $"user_id", $"session_id"), Seq($"delta" -> "cur"))
       .groupBy(to_date(timestamp_micros($"us")).as("day"))
       .agg(max($"cur").as("peak_concurrency"))
       .orderBy($"day")

@@ -523,17 +523,8 @@ object Unigram {
     * families' fertility tables diverge). Same scale layout: staged
     * distinct-word lexicon join, then the two-phase bucketed global
     * running sum — no single-partition stage. */
-  def docPackUnigram(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = perDocUnigramPieces(s, dir)
-    graft.functions.Ranks.globalRunningSum(d, $"doc_id", $"n_tokens",
-        graft.functions.Ranks.defaultPartitions(d), "cum")
-      .withColumn("start_offset", $"cum" - $"n_tokens")
-      .select($"doc_id", $"n_tokens", $"start_offset",
-        expr(s"start_offset div ${Pipeline.packBudget}").as("bin_id"),
-        expr(s"start_offset % ${Pipeline.packBudget}").as("bin_pos"))
-      .orderBy($"doc_id")
-  }
+  def docPackUnigram(s: SparkSession, dir: String): DataFrame =
+    Pipeline.packed(perDocUnigramPieces(s, dir))
 
   /** Oracle: staged-lexicon piece counts + the 41' packing tail. */
   def docPackUnigramSql(segsGlob: String): String =

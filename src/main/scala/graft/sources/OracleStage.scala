@@ -36,7 +36,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object OracleStage {
   private lazy val root = Files.createTempDirectory("graft-oracle-stage").toString
-  private val last = TrieMap.empty[String, String] // key -> last staged path
+  /** key -> the path this JVM staged last, read when the oracle SQL
+    * is interpolated at dump time. Not a per-dataset [[Memo]] entry
+    * (the staged artifact itself is one): it keeps one path per key,
+    * whichever dataset staged it last, because the dump names a key,
+    * not a dataset. */
+  private val last = TrieMap.empty[String, String]
 
   private def memoName(key: String) = s"oracle.$key"
 

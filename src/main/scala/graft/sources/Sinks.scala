@@ -51,7 +51,10 @@ object Sinks {
     * pair ever built: a per-pair memo marks dir A "built" after dir B
     * overwrites the same table name, and a later consumer for A would
     * silently probe B's index (caught by review: DedupSpec iterates
-    * two datasets through one JVM). */
+    * two datasets through one JVM). Not a per-dataset
+    * [[Memo]] entry for the same reason: it tracks a TABLE's content,
+    * one value per table name, retargeted when another dataset
+    * overwrites the table. */
   private val current =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -104,6 +107,10 @@ object Sinks {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(path.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
 
+  /** The (table, dataset) deltas a catalog table currently holds.
+    * Not a per-dataset [[Memo]] entry: it records a TABLE's content,
+    * and [[writeBucketedOnce]] clears a table's entries when an
+    * overwrite discards its appended rows. */
   private val appended =
     scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
 

@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CI form of the [[KeyCheck]] audit: a shadowed registry key or a
+/** Registry audit: a shadowed query key (the merged
+  * `SparkEntry.queries` keeps the LAST binding, so a collision would
+  * hide an operator with no error anywhere), a lossy merge, or a
   * SURVEY §2 row drifting out of sync with `SparkEntry.queries` fails
-  * `sbt test`, not just whoever remembers to run the main. No Spark
-  * session needed — pure registry/inventory introspection. */
+  * `sbt test`. No Spark session needed — pure registry/inventory
+  * introspection. */
 class KeyCheckSpec extends AnyFunSuite {
 
   test("no module shadows another's query key and the merge is lossless") {

@@ -19,12 +19,14 @@ class QuantilesSpec extends SparkSpec {
     // that correctness never depends on the hint firing).
     val df = (0 until 1500).map(i => (i % 500, (i * 2654435761L % 997).toDouble))
       .toDF("g", "x")
-    val got = Quantiles.bracketed(df, Seq("g"), "x", Seq(0.5), 8)
-      .select($"g", $"lower", $"higher", $"pos", $"vlo", $"vhi")
-      .collect()
-      .map(r => r.getInt(0) ->
-        interp(r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-      .toMap
+    val got = withShufflePartitions(8) {
+      Quantiles.bracketed(df, Seq("g"), "x", Seq(0.5))
+        .select($"g", $"lower", $"higher", $"pos", $"vlo", $"vhi")
+        .collect()
+        .map(r => r.getInt(0) ->
+          interp(r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+        .toMap
+    }
     val want = df.groupBy($"g")
       .agg(expr("percentile(x, 0.5)").as("m"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
@@ -38,11 +40,13 @@ class QuantilesSpec extends SparkSpec {
     val df = Seq[(Int, java.lang.Double)](
       (0, 1.0), (0, null), (0, 3.0), (0, null), (0, 2.0),
       (1, null), (1, 10.0)).toDF("g", "x")
-    val got = Quantiles.bracketed(df, Seq("g"), "x", Seq(0.5), 4)
-      .collect()
-      .map(r => r.getInt(0) ->
-        interp(r.getLong(3), r.getLong(4), r.getDouble(2), r.getDouble(6), r.getDouble(7)))
-      .toMap
+    val got = withShufflePartitions(4) {
+      Quantiles.bracketed(df, Seq("g"), "x", Seq(0.5))
+        .collect()
+        .map(r => r.getInt(0) ->
+          interp(r.getLong(3), r.getLong(4), r.getDouble(2), r.getDouble(6), r.getDouble(7)))
+        .toMap
+    }
     val want = df.groupBy($"g")
       .agg(expr("percentile(x, 0.5)").as("m"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap

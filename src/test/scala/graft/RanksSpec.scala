@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,16 +18,15 @@ class RanksSpec extends SparkSpec {
     // buckets and still produce the exact dense 1..n arrival rank.
     val n = 100000L
     val df = s.range(n).select(lit("hot").as("k"), $"id".as("ord"))
-    val parts = graft.functions.Ranks.defaultPartitions(df)
     val ranked = graft.functions.Ranks.perKeyRowNumber(
-      df, Seq("k"), Seq(col("ord")), parts, "rn")
+      df, Seq("k"), Seq(col("ord")), "rn")
     // bucket balance: the internal pid is dropped, so measure through
     // the public contract — within-bucket work equals within-bucket
     // count; check the largest contiguous rank run assigned to one
     // bucket by re-deriving the bucket split from rank jumps is not
     // observable here, so assert balance on the bucketed frame itself
     val bucketed = graft.functions.Ranks.withBucket(
-      df, Seq(col("k"), col("ord")), parts, "pid")
+      df, Seq(col("k"), col("ord")), "pid")
     val sizes = bucketed.groupBy($"pid").count().collect().map(_.getLong(1))
     assert(sizes.length > 1, s"hot key stayed in one bucket: ${sizes.toSeq}")
     assert(sizes.max < n, s"one bucket holds everything: ${sizes.toSeq}")
@@ -41,8 +42,10 @@ class RanksSpec extends SparkSpec {
     val expected = df
       .withColumn("rn", row_number().over(Window.orderBy($"o_orderkey")).cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = Ranks.globalRowNumber(df, $"o_orderkey", 7, "rn")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = withShufflePartitions(7) {
+      Ranks.globalRowNumber(df, Seq($"o_orderkey"), "rn")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(got.size == expected.size)
     assert(got == expected)
   }
@@ -54,8 +57,10 @@ class RanksSpec extends SparkSpec {
       .withColumn("run", sum($"o_custkey").over(Window.orderBy($"o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = Ranks.globalRunningSum(df, $"o_orderkey", $"o_custkey", 7, "run")
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val got = withShufflePartitions(7) {
+      Ranks.globalRunningSums(df, Seq($"o_orderkey"), Seq($"o_custkey" -> "run"))
+        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    }
     assert(got.size == expected.size)
     assert(got == expected)
   }
@@ -72,10 +77,12 @@ class RanksSpec extends SparkSpec {
       .withColumn("r2", sum($"v2").over(w))
       .withColumn("r3", sum($"one").over(w))
       .collect().map(r => r.getLong(0) -> (r.getLong(4), r.getLong(5), r.getLong(6))).toMap
-    val got = Ranks.globalRunningSums(df, Seq($"o_orderkey"),
-        Seq(($"o_custkey", "r1"), ($"v2", "r2"), ($"one", "r3")), 7)
-      .select($"o_orderkey", $"r1", $"r2", $"r3")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val got = withShufflePartitions(7) {
+      Ranks.globalRunningSums(df, Seq($"o_orderkey"),
+          Seq(($"o_custkey", "r1"), ($"v2", "r2"), ($"one", "r3")))
+        .select($"o_orderkey", $"r1", $"r2", $"r3")
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    }
     assert(got.size == expected.size)
     assert(got == expected)
   }
@@ -87,8 +94,10 @@ class RanksSpec extends SparkSpec {
       .withColumn("rn", row_number().over(
         Window.partitionBy($"event_type").orderBy($"ts", $"event_id")).cast("long"))
       .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
-    val got = Ranks.perKeyRowNumber(df, Seq("event_type"), Seq($"ts", $"event_id"), 7, "rn")
-      .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
+    val got = withShufflePartitions(7) {
+      Ranks.perKeyRowNumber(df, Seq("event_type"), Seq($"ts", $"event_id"), "rn")
+        .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
+    }
     assert(got.size == expected.size)
     assert(got == expected)
   }
@@ -102,13 +111,13 @@ class RanksSpec extends SparkSpec {
       ($"id" % 2).as("g"))
     def kOf(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
       if (r.isNullAt(i)) None else Some(r.getLong(i))
-    for (parts <- Seq(4, 7)) {
+    for (parts <- Seq(4, 7)) withShufflePartitions(parts) {
       // one key: ties make the row order inside a key arbitrary, so
       // compare the (key, rank) pairs
       val oneExpected = df
         .withColumn("rn", row_number().over(Window.orderBy($"k".asc_nulls_first)).cast("long"))
         .collect().map(r => (kOf(r, 1), r.getLong(3))).sortBy(_._2).toSeq
-      val oneGot = Ranks.globalRowNumber(df, $"k", parts, "rn")
+      val oneGot = Ranks.globalRowNumber(df, Seq($"k"), "rn")
         .collect().map(r => (kOf(r, 1), r.getLong(3))).sortBy(_._2).toSeq
       assert(oneGot == oneExpected, s"[one key, parts=$parts]")
       // two keys, unique as a composite: the exact rank per row
@@ -117,21 +126,21 @@ class RanksSpec extends SparkSpec {
         .withColumn("rn", row_number().over(twoW).cast("long"))
         .withColumn("run", sum($"id").over(twoW.rowsBetween(Window.unboundedPreceding, 0)))
         .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4))).toMap
-      val twoGot = Ranks.globalRunningSum(
-          Ranks.globalRowNumber(df, Seq($"k", $"id"), parts, "rn"),
-          Seq($"k", $"id"), $"id", parts, "run")
+      val twoGot = Ranks.globalRunningSums(
+          Ranks.globalRowNumber(df, Seq($"k", $"id"), "rn"),
+          Seq($"k", $"id"), Seq($"id" -> "run"))
         .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4))).toMap
       assert(twoGot == twoExpected, s"[two keys, parts=$parts]")
       // a null bound splits the null keys by id instead of emptying a
       // bucket: every bucket holds rows, and the id stays monotone
-      val pids = Ranks.withBucket(df, Seq($"k", $"id"), parts, "pid")
+      val pids = Ranks.withBucket(df, Seq($"k", $"id"), "pid")
         .orderBy($"k".asc_nulls_first, $"id").select($"pid").as[Int].collect().toSeq
       assert(pids.distinct.size == parts && pids == pids.sorted, s"[buckets, parts=$parts]")
       val perKeyExpected = df
         .withColumn("rn", row_number().over(
           Window.partitionBy($"g").orderBy($"k".asc_nulls_first, $"id")).cast("long"))
         .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-      val perKeyGot = Ranks.perKeyRowNumber(df, Seq("g"), Seq($"k", $"id"), parts, "rn")
+      val perKeyGot = Ranks.perKeyRowNumber(df, Seq("g"), Seq($"k", $"id"), "rn")
         .select($"id", $"rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(perKeyGot == perKeyExpected, s"[per key, parts=$parts]")
     }
@@ -140,8 +149,10 @@ class RanksSpec extends SparkSpec {
   test("globalRowNumber survives partition counts larger than the data") {
     val s = spark; import s.implicits._
     val df = Seq(5L, 1L, 9L, 3L).toDF("k")
-    val got = Ranks.globalRowNumber(df, $"k", 16, "rn")
-      .orderBy($"rn").collect().map(r => (r.getLong(0), r.getLong(1))).toList
+    val got = withShufflePartitions(16) {
+      Ranks.globalRowNumber(df, Seq($"k"), "rn")
+        .orderBy($"rn").collect().map(r => (r.getLong(0), r.getLong(1))).toList
+    }
     assert(got == List((1L, 1L), (3L, 2L), (5L, 3L), (9L, 4L)))
   }
 
@@ -164,7 +175,7 @@ class RanksSpec extends SparkSpec {
         (rnd.nextLong() % 1000L, rnd.nextLong() % 50L)),
       "singleton"  -> Seq((5L, 9L))
     )
-    for ((name, data) <- shapes; parts <- Seq(1, 2, 7, 32)) {
+    for ((name, data) <- shapes; parts <- Seq(1, 2, 7, 32)) withShufflePartitions(parts) {
       val df = data.zipWithIndex
         .map { case ((k, v), id) => (k, v, id.toLong) }
         .toDF("k", "v", "id")
@@ -174,9 +185,9 @@ class RanksSpec extends SparkSpec {
         .withColumn("run", sum($"v").over(
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .collect().map(r => r.getLong(2) -> (r.getLong(3), r.getLong(4))).toMap
-      val gotRn = Ranks.globalRowNumber(df, Seq($"k", $"id"), parts, "rn")
+      val gotRn = Ranks.globalRowNumber(df, Seq($"k", $"id"), "rn")
         .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
-      val gotRun = Ranks.globalRunningSum(df, Seq($"k", $"id"), $"v", parts, "run")
+      val gotRun = Ranks.globalRunningSums(df, Seq($"k", $"id"), Seq($"v" -> "run"))
         .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
       refRows.foreach { case (id, (rn, run)) =>
         assert(gotRn(id) == rn,
@@ -213,8 +224,55 @@ class RanksSpec extends SparkSpec {
       "all-null"     -> Seq.fill(10)(None))
     for ((name, keys) <- shapes; parts <- Seq(1, 7, 32); every <- Seq(1L, 7L, 1000L, 100000L)) {
       val df = keys.toDF("k")
-      val got = Ranks.chunkEnds(df, $"k", every, parts)
+      val got = withShufflePartitions(parts)(Ranks.chunkEnds(df, $"k", every))
       assert(got == sortAndPick(keys, every), s"[$name parts=$parts every=$every]")
+    }
+  }
+
+  test("the bucket count is the session's spark.sql.shuffle.partitions") {
+    val s = spark; import s.implicits._
+    val df = s.range(5000).select(($"id" * 7919 % 5000).as("k"))
+    for (n <- Seq(1, 7, 32)) withShufflePartitions(n) {
+      val pids = Ranks.withBucket(df, Seq($"k"), "pid")
+        .select($"pid").distinct().as[Int].collect().sorted.toSeq
+      assert(pids.forall(p => p >= 0 && p < n), s"[n=$n] bucket ids outside [0, $n): $pids")
+      if (n > 1) assert(pids.size > 1, s"[n=$n] every row in one bucket: $pids")
+    }
+  }
+
+  private def text(f: File): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
+  /** Name and parameter lists of every `def` in `src` not marked
+    * `private` or `protected`. */
+  private def publicDefs(src: String): Seq[(String, String)] =
+    """(?m)^[ \t]*((?:private|protected)\S*\s+)?def\s+(\w+)""".r.findAllMatchIn(src)
+      .filter(_.group(1) == null).map { m =>
+        var i = m.end
+        var depth = 0
+        while (i < src.length && (depth > 0 || src(i) == '(' || src(i) == '[')) {
+          if (src(i) == '(' || src(i) == '[') depth += 1
+          else if (src(i) == ')' || src(i) == ']') depth -= 1
+          i += 1
+        }
+        m.group(2) -> src.substring(m.end, i)
+      }.toSeq
+
+  test("functions/ has one exclusive prefix window, and no public Ranks or Quantiles def takes numPartitions") {
+    val root = new File("src/main/scala/graft/functions")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    val prefix = "rowsBetween(Window.unboundedPreceding, -1)"
+    val sites = root.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      .map(f => f.getName -> text(f).sliding(prefix.length).count(_ == prefix))
+      .filter(_._2 > 0)
+    assert(sites.map(_._2).sum == 1,
+      s"a second exclusive prefix (build it on Ranks.bucketOffsets): ${sites.mkString(", ")}")
+    for (name <- Seq("Ranks.scala", "Quantiles.scala")) {
+      val offenders = publicDefs(text(new File(root, name))).filter(_._2.contains("numPartitions"))
+      assert(offenders.isEmpty,
+        s"$name: public defs take a bucket count (read the session's instead): ${offenders.map(_._1)}")
     }
   }
 }

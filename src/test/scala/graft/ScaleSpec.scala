@@ -141,7 +141,7 @@ class ScaleSpec extends SparkSpec {
   test("two-phase layouts are invariant to the shuffle-partition setting") {
     val s = spark
     // the range-partition counts derive from spark.sql.shuffle.partitions
-    // (Ranks.defaultPartitions); the layouts claim the result does not
+    // (Ranks' bucket count); the layouts claim the result does not
     // depend on how many range partitions the rank spreads over
     val key = "spark.sql.shuffle.partitions"
     val orig = s.conf.get(key)

@@ -12,4 +12,13 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` (the bucket count
+    * of `Ranks`' layouts) set to `n`, then restores the previous value. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
 }
