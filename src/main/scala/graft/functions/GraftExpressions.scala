@@ -118,7 +118,6 @@ object GraftExpressions {
       (es: Seq[Expression]) =>
         new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
   }
 
   private[functions] def isDoubleArray(t: DataType): Boolean = t match {

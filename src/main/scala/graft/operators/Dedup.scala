@@ -1127,12 +1127,32 @@ object Dedup {
     val edges = s.table(embedClusterIndexTable)
     val labels = edges.select($"src".as("doc_id")).distinct()
       .withColumn("label", $"doc_id").localCheckpoint(true)
-    def hop(l: DataFrame): DataFrame = {
-      val prop = edges.join(l.withColumnRenamed("doc_id", "src"), "src")
-        .select($"dst".as("doc_id"), $"label")
-      l.union(prop).groupBy($"doc_id").agg(min($"label").as("label"))
-    }
-    val minned = hop(labels)
+    clusterRound(edges, labels)
+  }
+
+  /** One propagation round of [[clustersOfEdges]] over a bidirectional
+    * `src, dst` edge frame: a neighbor-min hop, then a pointer jump. */
+  private def clusterRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val s = labels.sparkSession
+    import s.implicits._
+    // One neighbor-min hop: label := min(label, labels of in-neighbors).
+    // Pointwise non-increasing (the union contains the input).
+    val prop = edges.join(labels.withColumnRenamed("doc_id", "src"), "src")
+      .select($"dst".as("doc_id"), $"label")
+    val minned = labels.union(prop).groupBy($"doc_id").agg(min($"label").as("label"))
+    // Pointer-jump (path halving): label := label(label). Labels are
+    // always edge-vertex ids (they start as vertex ids and only ever
+    // take values other vertices hold), so the self-join is total.
+    // Plain neighbor-min needs O(component diameter) rounds — a
+    // diameter-16 chain in the sf0.1 embedding graph took 17 — and a
+    // 100 TB near-dup graph can chain far deeper; halving the
+    // pointer depth each round makes it O(log diameter). Labels stay
+    // component minima-bounded (jump composes two non-increasing
+    // maps), and a fixed point of hop-hop-jump is a fixed point of
+    // the min step alone (next ≤ minned ≤ prev pointwise), so the
+    // convergence proof — labels constant per component, component
+    // min labels itself — is unchanged. The extra join is on the
+    // vertex-sized label frame, cheap next to the edge join.
     minned.join(
         minned.select($"doc_id".as("label"), $"label".as("jump")), Seq("label"))
       .select($"doc_id", $"jump".as("label"))
@@ -1189,13 +1209,6 @@ object Dedup {
     var prevSig = sig(labels)
     var changed = true
     var rounds = 0
-    // One neighbor-min hop: label := min(label, labels of in-neighbors).
-    // Pointwise non-increasing (the union contains the input).
-    def hop(l: DataFrame): DataFrame = {
-      val prop = edges.join(l.withColumnRenamed("doc_id", "src"), "src")
-        .select($"dst".as("doc_id"), $"label")
-      l.union(prop).groupBy($"doc_id").agg(min($"label").as("label"))
-    }
     while (changed && rounds < maxIters) {
       val prev = labels
       // ONE hop per round. Two hops per round were tried this round
@@ -1206,23 +1219,7 @@ object Dedup {
       // doubled — the A/B mini-bench read +0.3–0.9 s per cluster key.
       // Checkpointing the inner hop would re-add the second per-round
       // action the sig probe just removed.
-      val minned = hop(prev)
-      // Pointer-jump (path halving): label := label(label). Labels are
-      // always edge-vertex ids (they start as vertex ids and only ever
-      // take values other vertices hold), so the self-join is total.
-      // Plain neighbor-min needs O(component diameter) rounds — a
-      // diameter-16 chain in the sf0.1 embedding graph took 17 — and a
-      // 100 TB near-dup graph can chain far deeper; halving the
-      // pointer depth each round makes it O(log diameter). Labels stay
-      // component minima-bounded (jump composes two non-increasing
-      // maps), and a fixed point of hop-hop-jump is a fixed point of
-      // the min step alone (next ≤ minned ≤ prev pointwise), so the
-      // convergence proof — labels constant per component, component
-      // min labels itself — is unchanged. The extra join is on the
-      // vertex-sized label frame, cheap next to the edge join.
-      val jumped = minned.join(
-          minned.select($"doc_id".as("label"), $"label".as("jump")), Seq("label"))
-        .select($"doc_id", $"jump".as("label"))
+      val jumped = clusterRound(edges, prev)
       // lazy checkpoint: the sig aggregate below is the round's one
       // materializing job (an eager checkpoint + separate count was
       // two)

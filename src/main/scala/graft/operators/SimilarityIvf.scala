@@ -52,6 +52,16 @@ object SimilarityIvf {
             |  array_min(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)))
             |) - 1""".stripMargin).cast("int")
 
+  /** The `n` nearest centroids' ids per row, nearest first, over the
+    * same |c|² − 2·v·c score as [[cidExpr]] (reads `cents` and `v`).
+    * Every IVF probe path shares this one expression, so a quantizer
+    * change can never desync one probe list from another. */
+  private def probeList(n: Int): Column =
+    expr(s"""transform(slice(array_sort(
+            |  transform(sequence(0, ${nlist - 1}), i -> named_struct(
+            |    's', element_at(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)), i + 1),
+            |    'c', i))), 1, $n), p -> p.c)""".stripMargin)
+
   /** Deterministic k-means: init = first nlist vectors by vec_id;
     * fixed iteration count; exact-decimal per-dim means. Returns the
     * final centroids and the corpus assignment (vec_id, cid, v, nrm). */
@@ -133,11 +143,7 @@ object SimilarityIvf {
     val probes = vectors(s, dir)
       .filter($"vec_id" < Similarity.nQueries)
       .withColumn("cents", typedLit(cents))
-      .withColumn("probes",
-        expr(s"""transform(slice(array_sort(
-                |  transform(sequence(0, ${nlist - 1}), i -> named_struct(
-                |    's', element_at(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)), i + 1),
-                |    'c', i))), 1, $nprobe), p -> p.c)""".stripMargin))
+      .withColumn("probes", probeList(nprobe))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
         explode($"probes").as("cid"))
       // bounded driver collect (nQueries × nprobe rows ≤ 40), the same
@@ -187,11 +193,7 @@ object SimilarityIvf {
     val s = q.sparkSession
     import s.implicits._
     q.withColumn("cents", typedLit(cents))
-      .withColumn("probes",
-        expr(s"""transform(slice(array_sort(
-                |  transform(sequence(0, ${nlist - 1}), i -> named_struct(
-                |    's', element_at(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)), i + 1),
-                |    'c', i))), 1, $nprobe), p -> p.c)""".stripMargin))
+      .withColumn("probes", probeList(nprobe))
       .select($"vec_id".as("query_id"), explode($"probes").as("cid"))
   }
 
@@ -241,11 +243,7 @@ object SimilarityIvf {
     val probes = vectors(s, dir)
       .filter($"vec_id" < Similarity.nQueries)
       .withColumn("cents", typedLit(cents))
-      .withColumn("probes",
-        expr(s"""transform(slice(array_sort(
-                |  transform(sequence(0, ${nlist - 1}), i -> named_struct(
-                |    's', element_at(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)), i + 1),
-                |    'c', i))), 1, $nprobe), p -> p.c)""".stripMargin))
+      .withColumn("probes", probeList(nprobe))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
         explode($"probes").as("cid"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), r.getInt(3)))
@@ -451,11 +449,7 @@ object SimilarityIvf {
     val probes = vectors(s, dir)
       .filter($"vec_id" < Similarity.nQueries)
       .withColumn("cents", typedLit(cents))
-      .withColumn("probes",
-        expr(s"""transform(slice(array_sort(
-                |  transform(sequence(0, ${nlist - 1}), i -> named_struct(
-                |    's', element_at(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)), i + 1),
-                |    'c', i))), 1, $maxP), p -> p.c)""".stripMargin))
+      .withColumn("probes", probeList(maxP))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
         posexplode($"probes").as(Seq("prank", "cid")))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2),
@@ -727,11 +721,7 @@ object SimilarityIvf {
       .filter($"vec_id" < Similarity.nQueries &&
         $"vec_id" % HybridSearch.retractMod =!= HybridSearch.retractRem)
       .withColumn("cents", typedLit(cents))
-      .withColumn("probes",
-        expr(s"""transform(slice(array_sort(
-                |  transform(sequence(0, ${nlist - 1}), i -> named_struct(
-                |    's', element_at(transform(cents, c -> graft_dot(c, c) - CAST(2 AS DOUBLE) * graft_dot(v, c)), i + 1),
-                |    'c', i))), 1, $nprobe), p -> p.c)""".stripMargin))
+      .withColumn("probes", probeList(nprobe))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
         explode($"probes").as("cid"))
       // bounded driver collect (≤ nQueries × nprobe rows) — the

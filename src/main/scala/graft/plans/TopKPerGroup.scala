@@ -13,21 +13,6 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
-/** Ranking semantics of the top-k operator: how ties in the order key
-  * map to ranks, mirroring the three window functions the optimizer
-  * rule accepts. */
-sealed trait RankMode
-object RankMode {
-  /** Arbitrary-but-deterministic tiebreak, exactly k rows per group. */
-  case object RowNumber extends RankMode
-  /** Ties share a rank, next rank skips (1,1,3); the k-th rank's ties
-    * all survive, so a group can return more than k rows. */
-  case object Rank extends RankMode
-  /** Ties share a rank, no gaps (1,1,2); rows from the k best distinct
-    * order keys survive. */
-  case object DenseRank extends RankMode
-}
-
 /** Whole-operator top-k-per-group (SURVEY §4 path (c): custom
   * LogicalPlan + Strategy + SparkPlan via SparkSessionExtensions).
   *
@@ -38,12 +23,12 @@ object RankMode {
   * bounded k-row heap per group: a partial pass per input partition
   * (before the shuffle — only ≤ k·groups rows ever enter the
   * exchange), then a final pass per hash partition. Memory is
-  * O(groups·k) per task, no sort, no spill. [[RankMode.Rank]] /
-  * [[RankMode.DenseRank]] keep order-key tie groups together (state
-  * grows only with the size of the surviving tie groups — output-
-  * bounded, still never the whole partition).
+  * O(groups·k) per task, no sort, no spill. Ranks are row numbers:
+  * ties in the order key break arbitrarily but deterministically, so
+  * a group returns exactly min(k, size) rows.
   *
-  * `groupExprs` must be non-empty: a global top-k is an
+  * [[TopK.perGroup]] is the one way to build this node; it requires
+  * non-empty `groupExprs`, since a global top-k is an
   * `orderBy(...).limit(k)` (TakeOrderedAndProject), not this operator.
   */
 case class TopKPerGroupNode(
@@ -51,10 +36,7 @@ case class TopKPerGroupNode(
     order: Seq[SortOrder],
     k: Int,
     rankAttr: Attribute,
-    mode: RankMode,
     child: LogicalPlan) extends UnaryNode {
-  require(groupExprs.nonEmpty,
-    "TopKPerGroup needs at least one group column; use orderBy(...).limit(k) for a global top-k")
   override def output: Seq[Attribute] = child.output :+ rankAttr
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(rankAttr)
@@ -68,7 +50,6 @@ case class TopKPerGroupExec(
     k: Int,
     partial: Boolean,
     rankAttr: Attribute,
-    mode: RankMode,
     child: SparkPlan) extends UnaryExecNode {
 
   override def output: Seq[Attribute] =
@@ -84,13 +65,8 @@ case class TopKPerGroupExec(
     if (partial) Seq(UnspecifiedDistribution)
     else Seq(ClusteredDistribution(groupExprs))
 
-  override protected def doExecute(): RDD[InternalRow] = mode match {
-    case RankMode.RowNumber => executeRowNumber()
-    case _ => executeTieAware()
-  }
-
-  /** row_number: bounded k-row heap per group. */
-  private def executeRowNumber(): RDD[InternalRow] = {
+  /** Bounded k-row heap per group. */
+  override protected def doExecute(): RDD[InternalRow] = {
     val (groupE, orderE, kk, isPartial) = (groupExprs, order, k, partial)
     val childOutput = child.output
     val rank = rankAttr
@@ -128,81 +104,13 @@ case class TopKPerGroupExec(
     }
   }
 
-  /** rank / dense_rank: per-group TreeMap of order-key tie groups.
-    * Eviction drops whole worst tie groups the moment they can no
-    * longer rank ≤ k, so retained state is exactly the surviving
-    * rows (plus nothing): for rank, worst group goes once the better
-    * rows already number ≥ k; for dense_rank, once there are k better
-    * distinct keys. */
-  private def executeTieAware(): RDD[InternalRow] = {
-    val (groupE, orderE, kk, isPartial) = (groupExprs, order, k, partial)
-    val childOutput = child.output
-    val rank = rankAttr
-    val dense = mode == RankMode.DenseRank
-    child.execute().mapPartitions { it =>
-      val keyProj = UnsafeProjection.create(groupE, childOutput)
-      val ord: Ordering[InternalRow] =
-        GenerateOrdering.generate(orderE, childOutput)
-      val cmp = new java.util.Comparator[InternalRow] {
-        override def compare(a: InternalRow, b: InternalRow): Int = ord.compare(a, b)
-      }
-      final class Group {
-        val tiers = new java.util.TreeMap[InternalRow, mutable.ArrayBuffer[InternalRow]](cmp)
-        var total = 0L
-        def add(row: InternalRow): Unit = {
-          val buf = tiers.get(row)
-          if (buf == null) {
-            val copy = row.copy()
-            tiers.put(copy, mutable.ArrayBuffer(copy))
-          } else buf += row.copy()
-          total += 1
-          if (dense) {
-            if (tiers.size > kk) total -= tiers.pollLastEntry().getValue.size
-          } else {
-            var worst = tiers.lastEntry()
-            while (tiers.size > 1 && total - worst.getValue.size >= kk) {
-              tiers.pollLastEntry()
-              total -= worst.getValue.size
-              worst = tiers.lastEntry()
-            }
-          }
-        }
-      }
-      val groups = new java.util.LinkedHashMap[UnsafeRow, Group]()
-      while (it.hasNext) {
-        val row = it.next()
-        val key = keyProj(row)
-        var g = groups.get(key)
-        if (g == null) { g = new Group; groups.put(key.copy(), g) }
-        g.add(row)
-      }
-      if (isPartial) {
-        groups.values().iterator().asScala.flatMap(_.tiers.values().iterator().asScala.flatten)
-      } else {
-        val emit = emitter(childOutput, rank)
-        groups.values().iterator().asScala.flatMap { g =>
-          var pos = 0L
-          var denseRank = 0L
-          g.tiers.entrySet().iterator().asScala.flatMap { e =>
-            denseRank += 1
-            val rk = if (dense) denseRank else pos + 1
-            pos += e.getValue.size
-            if (rk <= kk) e.getValue.iterator.map(emit(_, rk)) else Iterator.empty
-          }
-        }
-      }
-    }
-  }
-
-  /** Appends the rank column (Int when substituted for a window
-    * function, Long from TopK.perGroup) and projects to unsafe. */
+  /** Appends the Long rank column and projects to unsafe. */
   private def emitter(childOutput: Seq[Attribute], rank: Attribute): (InternalRow, Long) => InternalRow = {
     val join = new JoinedRow
     val rankRow = new GenericInternalRow(1)
-    val intRank = rank.dataType == org.apache.spark.sql.types.IntegerType
     val outProj = UnsafeProjection.create(childOutput :+ rank, childOutput :+ rank)
     (r, rk) => {
-      rankRow.update(0, if (intRank) rk.toInt else rk)
+      rankRow.update(0, rk)
       outProj(join(r, rankRow)).copy()
     }
   }
@@ -215,9 +123,9 @@ case class TopKPerGroupExec(
   * inserted by EnsureRequirements) → final. */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerGroupNode(g, o, k, rank, mode, child) =>
-      val part = TopKPerGroupExec(g, o, k, partial = true, rank, mode, planLater(child))
-      TopKPerGroupExec(g, o, k, partial = false, rank, mode, part) :: Nil
+    case TopKPerGroupNode(g, o, k, rank, child) =>
+      val part = TopKPerGroupExec(g, o, k, partial = true, rank, planLater(child))
+      TopKPerGroupExec(g, o, k, partial = false, rank, part) :: Nil
     case _ => Nil
   }
 }
@@ -227,21 +135,25 @@ object TopK {
   /** Top `k` rows per group, ranked 1..k by `sortCols`
     * ((name, descending)); appends `rankName`. `groupCols` must be
     * non-empty — for a global top-k use orderBy + limit, which Spark
-    * already plans as TakeOrderedAndProject. */
+    * already plans as TakeOrderedAndProject. Names resolve as
+    * `df.col` would: by the session's case sensitivity, and an
+    * ambiguous name throws Spark's AMBIGUOUS_REFERENCE. */
   def perGroup(df: DataFrame, groupCols: Seq[String],
       sortCols: Seq[(String, Boolean)], k: Int,
-      rankName: String = "rank",
-      mode: RankMode = RankMode.RowNumber): DataFrame = {
+      rankName: String = "rank"): DataFrame = {
     require(groupCols.nonEmpty,
       "TopK.perGroup needs at least one group column; use df.orderBy(...).limit(k) for a global top-k")
     val analyzed = df.queryExecution.analyzed
-    def attr(n: String): Attribute = analyzed.output.find(_.name == n)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no column '$n' in ${analyzed.output.map(_.name).mkString(", ")}"))
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    def attr(n: String): Attribute = analyzed.resolveQuoted(n, resolver) match {
+      case Some(a: Attribute) => a
+      case _ => throw new IllegalArgumentException(
+        s"no column '$n' in ${analyzed.output.map(_.name).mkString(", ")}")
+    }
     val so = sortCols.map { case (n, desc) =>
       SortOrder(attr(n), if (desc) Descending else Ascending) }
     val rank = AttributeReference(rankName, LongType, nullable = false)()
     org.apache.spark.sql.classic.GraftPlans.ofRows(df.sparkSession,
-      TopKPerGroupNode(groupCols.map(attr), so, k, rank, mode, analyzed))
+      TopKPerGroupNode(groupCols.map(attr), so, k, rank, analyzed))
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.io.File
+
+import scala.io.Source
+
 import graft.operators.Relational
 import graft.plans.TopK
 import graft.sources.Tables
@@ -43,31 +47,6 @@ class TopKPlanSpec extends SparkSpec {
     }
   }
 
-  test("opt-in rule rewrites a window top-k into the heap operator, same rows") {
-    val s = spark; import s.implicits._
-    val window = Relational.qTopkPerGroup(s, sfDir)
-    val before = window.collect().map(_.toSeq).toList
-    s.conf.set(graft.plans.RewriteWindowTopK.confKey, "true")
-    try {
-      val rewritten = Relational.qTopkPerGroup(s, sfDir)
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKPerGroup"), plan)
-      assert(!plan.contains("Window"), s"window must be rewritten away:\n$plan")
-      assert(rewritten.collect().map(_.toSeq).toList == before)
-    } finally s.conf.unset(graft.plans.RewriteWindowTopK.confKey)
-  }
-
-  test("rule leaves non-top-k windows untouched even when enabled") {
-    val s = spark
-    s.conf.set(graft.plans.RewriteWindowTopK.confKey, "true")
-    try {
-      val plan = Relational.qWindowRunning(s, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("Window"), plan) // running sums are not top-k
-      assert(!plan.contains("TopKPerGroup"), plan)
-    } finally s.conf.unset(graft.plans.RewriteWindowTopK.confKey)
-  }
-
   test("ties and duplicate sort values rank deterministically via the tiebreak") {
     val s = spark; import s.implicits._
     val df = Seq(("g", 1.0, 1L), ("g", 1.0, 2L), ("g", 1.0, 3L), ("g", 2.0, 4L))
@@ -77,85 +56,6 @@ class TopKPlanSpec extends SparkSpec {
     assert(got == List((1L, 4L), (2L, 1L), (3L, 2L)))
   }
 
-  /** A tie-rich parquet-backed frame (events has heavy duplicate
-    * user_id counts per type) for rank-semantics equivalence. */
-  private def tieFrame = Tables.events(spark, sfDir)
-    .groupBy("event_type", "user_id")
-    .agg(org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("n"))
-
-  private def withRewrite[A](body: => A): A = {
-    spark.conf.set(graft.plans.RewriteWindowTopK.confKey, "true")
-    try body finally spark.conf.unset(graft.plans.RewriteWindowTopK.confKey)
-  }
-
-  test("rule rewrites rank() heads and keeps tie semantics exactly") {
-    val df = tieFrame
-    df.createOrReplaceTempView("tie_src")
-    val q = """SELECT * FROM (
-              |  SELECT event_type, user_id, n,
-              |    rank() OVER (PARTITION BY event_type ORDER BY n DESC) AS rk
-              |  FROM tie_src) WHERE rk <= 5""".stripMargin
-    val before = spark.sql(q).collect().map(_.toSeq).toSet
-    withRewrite {
-      val rewritten = spark.sql(q)
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKPerGroup"), plan)
-      assert(!plan.contains("Window"), s"rank window must be rewritten:\n$plan")
-      assert(rewritten.collect().map(_.toSeq).toSet == before)
-      // with ties at the k-th rank the output may exceed k per group —
-      // the tie-aware mode must reproduce that, not truncate at k
-      assert(before.size >= 5)
-    }
-  }
-
-  test("rule rewrites dense_rank() heads and keeps tie semantics exactly") {
-    val df = tieFrame
-    df.createOrReplaceTempView("tie_src_dense")
-    val q = """SELECT * FROM (
-              |  SELECT event_type, user_id, n,
-              |    dense_rank() OVER (PARTITION BY event_type ORDER BY n DESC) AS rk
-              |  FROM tie_src_dense) WHERE rk <= 3""".stripMargin
-    val before = spark.sql(q).collect().map(_.toSeq).toSet
-    withRewrite {
-      val rewritten = spark.sql(q)
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKPerGroup"), plan)
-      assert(!plan.contains("Window"), s"dense_rank window must be rewritten:\n$plan")
-      assert(rewritten.collect().map(_.toSeq).toSet == before)
-    }
-  }
-
-  test("rule accepts a Long literal k through the promotion cast") {
-    val s = spark; import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    withRewrite {
-      val w = Window.partitionBy($"p_brand").orderBy($"p_retailprice".desc, $"p_partkey")
-      val df = Tables.part(s, sfDir)
-        .withColumn("rk", row_number().over(w))
-        .filter($"rk" <= 3L) // long literal: promotion casts the int rank
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKPerGroup"), plan)
-      assert(!plan.contains("Window "), plan)
-      assert(df.count() == Relational.qTopkPerGroup(s, sfDir).count())
-    }
-  }
-
-  test("rule leaves a global (no partitionBy) top-k window untouched") {
-    val df = tieFrame
-    df.createOrReplaceTempView("tie_src_global")
-    withRewrite {
-      val plan = spark.sql(
-        """SELECT * FROM (
-          |  SELECT user_id, n, row_number() OVER (ORDER BY n DESC) AS rk
-          |  FROM tie_src_global) WHERE rk <= 5""".stripMargin)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("TopKPerGroup"), plan)
-      assert(plan.contains("Window"), plan)
-    }
-  }
-
   test("TopK.perGroup rejects empty group columns with a clear error") {
     val e = intercept[IllegalArgumentException] {
       TopK.perGroup(Tables.part(spark, sfDir), Seq.empty, Seq(("p_retailprice", true)), 3)
@@ -163,23 +63,40 @@ class TopKPlanSpec extends SparkSpec {
     assert(e.getMessage.contains("orderBy"))
   }
 
-  test("native rank modes match the window functions on tie-rich data") {
+  test("an ambiguous column name throws AMBIGUOUS_REFERENCE, as orderBy does") {
     val s = spark; import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val df = tieFrame
-    val w = Window.partitionBy($"event_type").orderBy($"n".desc)
-    def normalize(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val wantRank = normalize(df.withColumn("rk", rank().over(w).cast("long"))
-      .filter($"rk" <= 4).collect())
-    val gotRank = normalize(graft.plans.TopK.perGroup(df, Seq("event_type"),
-        Seq(("n", true)), 4, "rk", graft.plans.RankMode.Rank).collect())
-    assert(gotRank == wantRank)
-    val wantDense = normalize(df.withColumn("rk", dense_rank().over(w).cast("long"))
-      .filter($"rk" <= 4).collect())
-    val gotDense = normalize(graft.plans.TopK.perGroup(df, Seq("event_type"),
-        Seq(("n", true)), 4, "rk", graft.plans.RankMode.DenseRank).collect())
-    assert(gotDense == wantDense)
+    val a = Seq(("g", 1L, 0.5)).toDF("grp", "id", "score")
+    val b = Seq((1L, 0.9)).toDF("id", "score")
+    val joined = a.join(b, "id") // two `score` columns
+    intercept[org.apache.spark.sql.AnalysisException](joined.orderBy("score"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      TopK.perGroup(joined, Seq("grp"), Seq(("score", true)), 1, "rk")
+    }
+    assert(e.getMessage.contains("AMBIGUOUS_REFERENCE"), e.getMessage)
+  }
+
+  test("column names resolve by the session's case sensitivity") {
+    assert(!spark.conf.get("spark.sql.caseSensitive").toBoolean)
+    def ranked(group: String, price: String) = TopK.perGroup(Tables.part(spark, sfDir),
+        Seq(group), Seq((price, true), ("p_partkey", false)), 3, "rk")
+      .collect().map(_.toSeq).toSet
+    val want = ranked("p_brand", "p_retailprice")
+    assert(want.nonEmpty)
+    assert(ranked("P_BRAND", "P_RetailPrice") == want)
+  }
+
+  test("src/main installs no optimizer rule and reads no spark.graft.* conf key") {
+    val root = new File("src/main")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala) else Seq(f).filter(_.getName.endsWith(".scala"))
+    def offenders(needle: String) = scala(root).filter { f =>
+      val src = Source.fromFile(f, "UTF-8")
+      try src.mkString.contains(needle) finally src.close()
+    }
+    assert(offenders("injectOptimizerRule").isEmpty,
+      s"optimizer rule installed in: ${offenders("injectOptimizerRule").mkString(", ")}")
+    assert(offenders("\"spark.graft.").isEmpty,
+      s"engine conf key read in: ${offenders("\"spark.graft.").mkString(", ")}")
   }
 }
