@@ -644,10 +644,7 @@ object Dedup {
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     buildMinhashIndex(s, dir)
-    val probe = bandedSigs(minhashSignatures(s, dir).filter(isIncoming))
-    val idx = s.table(incrementalIndexTable)
-    idx.as("i").join(probe.as("p"),
-        $"i.band" === $"p.band" && $"i.bucket" === $"p.bucket")
+    incrementalProbePlan(s, dir)
       .select($"i.doc_id".as("corpus_id"), $"p.doc_id".as("new_id"),
         $"i.sig".as("sig1"), $"p.sig".as("sig2"))
       .dropDuplicates("corpus_id", "new_id")
@@ -727,9 +724,9 @@ object Dedup {
        |          JOIN sigs s2 ON cand.new_id = s2.doc_id
        |ORDER BY new_id, corpus_id""".stripMargin
 
-  /** The probe join alone (pre-distinct), exposed so the plan spec can
-    * assert the index side is exchange-free. Requires the index table
-    * to exist. */
+  /** [[dedupIncremental]]'s probe join (pre-distinct), which the plan
+    * spec asserts exchange-free on the index side. Requires the index
+    * table to exist. */
   private[graft] def incrementalProbePlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val probe = bandedSigs(minhashSignatures(s, dir).filter(isIncoming))

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{TermWeights => TW}
+import graft.operators.{TextAnalysis => TA}
 import graft.sources.Tables
 
 /** §2.5/§2.6 bridge — HYBRID retrieval: lexical BM25 and the IVF
@@ -69,35 +71,6 @@ object HybridSearch {
         Seq("term"), bm25IndexBuckets)(
       bm25PostingsOf(s, Tables.documents(s, dir)))
 
-  /** (doc_id, term, tf) of an arbitrary documents frame. */
-  private def bm25Tf(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    import graft.operators.{TextAnalysis => TA}
-    docs.select($"doc_id", explode(expr(TA.toksExpr)).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-  }
-
-  /** Corpus term statistics of an arbitrary documents frame:
-    * (term, idf, avgdl) — the SNAPSHOT the streaming ingest path
-    * freezes (weights for arriving docs use these until the periodic
-    * index rebuild, the same staleness contract as IVF centroids). */
-  private[graft] def bm25IdfOf(s: SparkSession, docs: DataFrame,
-                               tf0: Option[DataFrame] = None): DataFrame = {
-    import s.implicits._
-    import graft.functions.Agg.rnd
-    val tf = tf0.getOrElse(bm25Tf(s, docs))
-    val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-    val n = docs.agg(count(lit(1)).as("n"))
-    val stats = dl.agg(sum($"dl").as("tot")).crossJoin(broadcast(n))
-      .select(($"tot".cast("double") / $"n".cast("double")).as("avgdl"), $"n")
-    tf.groupBy($"term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(stats))
-      .select($"term",
-        rnd(log(lit(1.0) + ($"n" - $"df" + lit(0.5)) / ($"df" + lit(0.5))), 6)
-          .as("idf"),
-        $"avgdl")
-  }
-
   /** The full postings frame (term, doc_id, w) of an arbitrary
     * documents frame — tf, dl and the corpus statistics all derive
     * from `docs`, so an index built on a RETAINED corpus (post-
@@ -105,17 +78,11 @@ object HybridSearch {
   private[graft] def bm25PostingsOf(s: SparkSession, docs: DataFrame,
                                     tf0: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
-    import graft.functions.Agg.rnd
-    import graft.operators.{TextAnalysis => TA}
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
-    val tf = tf0.getOrElse(bm25Tf(s, docs))
-    val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-    tf.join(dl, "doc_id").join(bm25IdfOf(s, docs, Some(tf)), "term")
-      .select($"term", $"doc_id",
-        rnd($"idf" * (($"tf" * lit(k1p1)) /
-          ($"tf" + lit(TA.bm25K1) * (lit(oneMinusB) +
-            lit(TA.bm25B) * ($"dl".cast("double") / $"avgdl")))), 6).as("w"))
+    val tf = tf0.getOrElse(TA.docTermCounts(docs))
+    val dl = TW.unitLengths(tf, "doc_id")
+    val idf = TW.bm25Idf(TW.docFreqs(tf), TA.bm25DocStats(docs, dl))
+    tf.join(dl, "doc_id").join(idf, "term")
+      .select($"term", $"doc_id", TW.bm25Weight($"tf", $"dl", $"idf", $"avgdl").as("w"))
   }
 
   /** The text-side score frame, probing the persisted index: the
@@ -248,30 +215,12 @@ object HybridSearch {
   private def hybridSqlOf(vranksSub: String, keepCte: String,
                           keepJoin: String): String = {
     import graft.functions.Agg.{dsumSql, rndSql}
-    import graft.operators.{TextAnalysis => TA}
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
-    s"""WITH tf AS (
-       |  SELECT doc_id, t AS term, count(*) AS tf
-       |  FROM (SELECT doc_id, unnest(${TA.duckToks}) AS t FROM documents)
-       |  GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-       |stats AS (
-       |  SELECT (SELECT CAST(sum(dl) AS DOUBLE) FROM dl) /
-       |         (SELECT CAST(count(*) AS DOUBLE) FROM documents) AS avgdl,
-       |         (SELECT count(*) FROM documents) AS n),
-       |idf AS (
-       |  SELECT term,
-       |    ${rndSql("ln(1.0 + (n - df + 0.5) / (df + 0.5))", 6)} AS idf,
-       |    avgdl
-       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), stats),
+    s"""WITH ${TA.bm25CtesSql},
        |q AS (
        |  SELECT DISTINCT doc_id AS query_id, term FROM tf
        |  WHERE doc_id < ${Similarity.nQueries}),
        |${keepCte}weighted AS (
-       |  SELECT q.query_id, tf.doc_id,
-       |    ${rndSql(s"idf.idf * ((tf.tf * $k1p1) / (tf.tf + ${TA.bm25K1} * " +
-                     s"($oneMinusB + ${TA.bm25B} * (CAST(dl.dl AS DOUBLE) / idf.avgdl))))", 6)} AS w
+       |  SELECT q.query_id, tf.doc_id, ${TA.bm25WeightSql} AS w
        |  FROM tf JOIN dl USING (doc_id) JOIN q USING (term)
        |    JOIN idf USING (term)$keepJoin
        |  WHERE tf.doc_id <> q.query_id),
@@ -324,7 +273,6 @@ object HybridSearch {
     * corpus_chunk already pays, nothing more. */
   private def chunkTermRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.operators.{Pipeline, TextAnalysis => TA}
     val (c0, s0) = (Pipeline.chunkSize, Pipeline.chunkStride)
     Tables.documents(s, dir)
       .withColumn("toks", expr(s"coalesce(filter(${TA.toksExpr}, t -> t <> ''), array())"))
@@ -342,32 +290,22 @@ object HybridSearch {
   }
 
   /** Build the persisted chunk postings (once per session/dataset). */
-  def buildBm25ChunkIndex(s: SparkSession, dir: String): Unit = {
-    import s.implicits._
-    import graft.functions.Agg.rnd
-    import graft.operators.{TextAnalysis => TA}
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
+  def buildBm25ChunkIndex(s: SparkSession, dir: String): Unit =
     graft.sources.Sinks.writeBucketedOnce(dir, bm25ChunkTable,
-        Seq("term"), bm25IndexBuckets) {
-      val tf = chunkTermRows(s, dir)
-        .groupBy($"doc_id", $"chunk_idx", $"term").agg(count(lit(1)).as("tf"))
-      val dl = tf.groupBy($"doc_id", $"chunk_idx").agg(sum($"tf").as("dl"))
-      val stats = dl.agg(
-          (sum($"dl").cast("double") / count(lit(1)).cast("double")).as("avgdl"),
-          count(lit(1)).as("n"))
-      val idf = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(stats))
-        .select($"term",
-          rnd(log(lit(1.0) + ($"n" - $"df" + lit(0.5)) / ($"df" + lit(0.5))), 6)
-            .as("idf"),
-          $"avgdl")
-      tf.join(dl, Seq("doc_id", "chunk_idx")).join(idf, "term")
-        .select($"term", $"doc_id", $"chunk_idx",
-          rnd($"idf" * (($"tf" * lit(k1p1)) /
-            ($"tf" + lit(TA.bm25K1) * (lit(oneMinusB) +
-              lit(TA.bm25B) * ($"dl".cast("double") / $"avgdl")))), 6).as("w"))
-    }
+        Seq("term"), bm25IndexBuckets)(bm25ChunkPostingsOf(s, dir))
+
+  /** The chunk postings frame (term, doc_id, chunk_idx, w), its
+    * statistics over the chunk corpus. */
+  private[graft] def bm25ChunkPostingsOf(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val tf = TW.termCounts(chunkTermRows(s, dir), "doc_id", "chunk_idx")
+    val dl = TW.unitLengths(tf, "doc_id", "chunk_idx")
+    val stats = dl.agg(
+        (sum($"dl").cast("double") / count(lit(1)).cast("double")).as("avgdl"),
+        count(lit(1)).as("n"))
+    tf.join(dl, Seq("doc_id", "chunk_idx")).join(TW.bm25Idf(TW.docFreqs(tf), stats), "term")
+      .select($"term", $"doc_id", $"chunk_idx",
+        TW.bm25Weight($"tf", $"dl", $"idf", $"avgdl").as("w"))
   }
 
   /** §2.5/§2.6 — CHUNK-granular hybrid retrieval: production RAG
@@ -425,10 +363,7 @@ object HybridSearch {
     * subquery and the fusion, all replayed in DuckDB. */
   def searchChunkHybridSql(centGlob: String): String = {
     import graft.functions.Agg.{dsumSql, rndSql}
-    import graft.operators.{Pipeline, TextAnalysis => TA}
     val (c0, s0) = (Pipeline.chunkSize, Pipeline.chunkStride)
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
     s"""WITH t AS (
        |  SELECT doc_id, list_filter(${TA.duckToks}, t -> t <> '') AS toks
        |  FROM documents),
@@ -452,17 +387,14 @@ object HybridSearch {
        |         (SELECT CAST(count(*) AS DOUBLE) FROM cdl) AS avgdl,
        |         (SELECT count(*) FROM cdl) AS n),
        |cidf AS (
-       |  SELECT term,
-       |    ${rndSql("ln(1.0 + (n - df + 0.5) / (df + 0.5))", 6)} AS idf,
-       |    avgdl
+       |  SELECT term, ${TW.bm25IdfSql("n", "df")} AS idf, avgdl
        |  FROM (SELECT term, count(*) AS df FROM ctf GROUP BY 1), cstats),
        |q AS (
        |  SELECT DISTINCT doc_id AS query_id, term FROM ctf
        |  WHERE doc_id < ${Similarity.nQueries}),
        |weighted AS (
        |  SELECT q.query_id, ctf.doc_id, ctf.chunk_idx,
-       |    ${rndSql(s"cidf.idf * ((ctf.tf * $k1p1) / (ctf.tf + ${TA.bm25K1} * " +
-                     s"($oneMinusB + ${TA.bm25B} * (CAST(cdl.dl AS DOUBLE) / cidf.avgdl))))", 6)} AS w
+       |    ${TW.bm25WeightSql("ctf.tf", "cdl.dl", "cidf.idf", "cidf.avgdl")} AS w
        |  FROM ctf JOIN cdl USING (doc_id, chunk_idx) JOIN q USING (term)
        |    JOIN cidf USING (term)
        |  WHERE ctf.doc_id <> q.query_id),
@@ -612,32 +544,14 @@ object HybridSearch {
     * holds), with tombstoned docs excluded both as candidates and as
     * query-term sources — exactly the probe's semantics. */
   def bm25RetractSql: String = {
-    import graft.functions.Agg.{dsumSql, rndSql}
-    import graft.operators.{TextAnalysis => TA}
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
-    s"""WITH tf AS (
-       |  SELECT doc_id, t AS term, count(*) AS tf
-       |  FROM (SELECT doc_id, unnest(${TA.duckToks}) AS t FROM documents)
-       |  GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-       |stats AS (
-       |  SELECT (SELECT CAST(sum(dl) AS DOUBLE) FROM dl) /
-       |         (SELECT CAST(count(*) AS DOUBLE) FROM documents) AS avgdl,
-       |         (SELECT count(*) FROM documents) AS n),
-       |idf AS (
-       |  SELECT term,
-       |    ${rndSql("ln(1.0 + (n - df + 0.5) / (df + 0.5))", 6)} AS idf,
-       |    avgdl
-       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), stats),
+    import graft.functions.Agg.dsumSql
+    s"""WITH ${TA.bm25CtesSql},
        |q AS (
        |  SELECT DISTINCT doc_id AS query_id, term FROM tf
        |  WHERE doc_id < ${Similarity.nQueries}
        |    AND doc_id % $retractMod <> $retractRem),
        |weighted AS (
-       |  SELECT q.query_id, tf.doc_id,
-       |    ${rndSql(s"idf.idf * ((tf.tf * $k1p1) / (tf.tf + ${TA.bm25K1} * " +
-                     s"($oneMinusB + ${TA.bm25B} * (CAST(dl.dl AS DOUBLE) / idf.avgdl))))", 6)} AS w
+       |  SELECT q.query_id, tf.doc_id, ${TA.bm25WeightSql} AS w
        |  FROM tf JOIN dl USING (doc_id) JOIN q USING (term)
        |    JOIN idf USING (term)
        |  WHERE tf.doc_id <> q.query_id
@@ -676,49 +590,44 @@ object HybridSearch {
     * UNCONDITIONAL overwrite (the [[SimilarityIvf.rebuildIvfStreamBase]]
     * contract: every run of the gate is self-contained; re-running
     * rebuilds the base and appends the shard exactly once). Returns
-    * the frozen snapshot statistics (term → idf, avgdl; plus the
-    * unseen-term default) the stream's router prices arriving
-    * postings with: df/avgdl/N are corpus statistics, so arriving
-    * docs CANNOT update them row-locally — they stay snapshot values
+    * the frozen snapshot statistics the stream's router prices
+    * arriving postings with: the (term, idf) frame and the one row
+    * (avgdl, unseen-term idf). df/avgdl/N are corpus statistics, so
+    * arriving docs CANNOT update them row-locally — they stay snapshot values
     * until the periodic rebuild, exactly the IVF-centroid staleness
     * contract, and the documented delta vs a batch rebuild on the
     * union. */
+  private[graft] def rebuildBm25StreamBase(s: SparkSession, dir: String): (DataFrame, Row) = {
+    val (tf, idf, snap) = bm25StreamStats(s, dir)
+    graft.sources.Sinks.writeBucketed(
+      bm25PostingsOf(s, bm25CorpusDocs(s, dir), Some(tf)),
+      bm25StreamTable, Seq("term"), bm25IndexBuckets)
+    (idf, snap)
+  }
+
   /** Corpus token statistics behind the stream rebuild, memoized per
-    * (documents-dir FINGERPRINT, session): tf and the idf/avgdl
-    * snapshot are pure functions of the corpus file, so repeated gate
+    * (documents-dir FINGERPRINT, session): tf, the (term, idf)
+    * snapshot and its (avgdl, unseen) row, read from the one-row
+    * statistics frame, which exists even when the corpus has no term
+    * (avgdl is then NULL). A term the snapshot never saw takes the
+    * df = 0 idf. All three are pure functions of the corpus file, so
+    * repeated gate
     * runs in one session reuse the checkpointed frames instead of
     * re-tokenizing the corpus — while the fingerprint key (file
     * count/bytes/mtime, the buildSpanIndex device) makes a documents
     * dir that GAINS files between runs recompute instead of serving a
-    * stale snapshot. The TABLE rewrite below stays unconditional:
+    * stale snapshot. The TABLE rewrite in [[rebuildBm25StreamBase]]
+    * stays unconditional:
     * that is the run-scoped contract (rebuild + append exactly once),
     * not a statistic. */
-  private def bm25StreamStats(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private def bm25StreamStats(s: SparkSession, dir: String): (DataFrame, DataFrame, Row) =
     graft.sources.Memo("hybrid.bm25_stats",
         graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s) {
       val corpus = bm25CorpusDocs(s, dir)
-      val tf = bm25Tf(s, corpus).localCheckpoint(true)
-      (tf, bm25IdfOf(s, corpus, Some(tf)).localCheckpoint(true))
-    }
-
-  private[graft] def rebuildBm25StreamBase(s: SparkSession, dir: String): DataFrame = {
-    val (tf, idf) = bm25StreamStats(s, dir)
-    graft.sources.Sinks.writeBucketed(
-      bm25PostingsOf(s, bm25CorpusDocs(s, dir), Some(tf)),
-      bm25StreamTable, Seq("term"), bm25IndexBuckets)
-    idf
-  }
-
-  /** The unseen-term idf default: a term the corpus snapshot never saw
-    * has df = 0 → idf = rnd(ln(1 + (n + 0.5) / 0.5)) with n = corpus
-    * doc count — the same formula, continuously. */
-  private[graft] def bm25UnseenIdf(s: SparkSession, dir: String): Double =
-    graft.sources.Memo("hybrid.bm25_unseen_idf",
-        graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s) {
-      import graft.functions.Agg.rndSql
-      bm25CorpusDocs(s, dir).agg(count(lit(1)).as("n"))
-        .select(expr(rndSql("ln(1.0 + (CAST(n AS DOUBLE) + 0.5) / 0.5)", 6)))
-        .collect()(0).getDouble(0)
+      val tf = TA.docTermCounts(corpus).localCheckpoint(true)
+      val stats = TA.bm25DocStats(corpus, TW.unitLengths(tf, "doc_id"))
+      (tf, TW.bm25Idf(TW.docFreqs(tf), stats).localCheckpoint(true),
+        stats.select(col("avgdl"), TW.bm25Idf(col("n"), lit(0L))).head())
     }
 
   /** The post-ingest probe: the standard BM25 search over the GROWN
@@ -748,10 +657,7 @@ object HybridSearch {
     * stale-stats pricing for shard rows; then the standard search over
     * the union. */
   def streamBm25IngestSql: String = {
-    import graft.functions.Agg.{dsumSql, rndSql}
-    import graft.operators.{TextAnalysis => TA}
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
+    import graft.functions.Agg.dsumSql
     val (mod, rem) = (Dedup.incrementalShardMod, Dedup.incrementalShardRem)
     s"""WITH tf AS (
        |  SELECT doc_id, t AS term, count(*) AS tf
@@ -766,15 +672,12 @@ object HybridSearch {
        |         (SELECT count(*) FROM documents
        |          WHERE doc_id % $mod <> $rem) AS n),
        |cidf AS (
-       |  SELECT term,
-       |    ${rndSql("ln(1.0 + (n - df + 0.5) / (df + 0.5))", 6)} AS idf
+       |  SELECT term, ${TW.bm25IdfSql("n", "df")} AS idf
        |  FROM (SELECT term, count(*) AS df FROM ctf GROUP BY 1), cstats),
        |weighted AS (
        |  SELECT tf.term, tf.doc_id,
-       |    ${rndSql(
-             s"coalesce(cidf.idf, ${rndSql("ln(1.0 + (CAST(cstats.n AS DOUBLE) + 0.5) / 0.5)", 6)})" +
-             s" * ((tf.tf * $k1p1) / (tf.tf + ${TA.bm25K1} * " +
-             s"($oneMinusB + ${TA.bm25B} * (CAST(dl.dl AS DOUBLE) / cstats.avgdl))))", 6)} AS w
+       |    ${TW.bm25WeightSql("tf.tf", "dl.dl",
+             s"coalesce(cidf.idf, ${TW.bm25IdfSql("cstats.n", "0")})", "cstats.avgdl")} AS w
        |  FROM tf JOIN dl USING (doc_id)
        |    LEFT JOIN cidf ON cidf.term = tf.term, cstats),
        |q AS (
@@ -822,7 +725,6 @@ object HybridSearch {
   def ragContextPack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    import graft.operators.{Pipeline, TextAnalysis => TA}
     val (c0, s0) = (Pipeline.chunkSize, Pipeline.chunkStride)
     // the retrieval stage reads through Memo (the ragPipelineE2e
     // rule): context assembly is a CONSUMER of the chunk-hybrid
@@ -854,7 +756,6 @@ object HybridSearch {
     * the passage-length arithmetic replayed off the doc token counts,
     * and the same running-sum prefix cut. */
   def ragContextPackSql(centGlob: String): String = {
-    import graft.operators.{Pipeline, TextAnalysis => TA}
     val (c0, s0) = (Pipeline.chunkSize, Pipeline.chunkStride)
     s"""WITH fusedq AS MATERIALIZED (
        |  SELECT query_id, rank, doc_id,
@@ -1119,29 +1020,11 @@ object HybridSearch {
     * fixed-point sums and tie orders. */
   def searchPrfRm3Sql: String = {
     import graft.functions.Agg.{dsumSql, rndSql}
-    import graft.operators.{TextAnalysis => TA}
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
     val al = prfAlpha
     val oma = 1.0 - prfAlpha
-    s"""WITH tf AS (
-       |  SELECT doc_id, t AS term, count(*) AS tf
-       |  FROM (SELECT doc_id, unnest(${TA.duckToks}) AS t FROM documents)
-       |  GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-       |stats AS (
-       |  SELECT (SELECT CAST(sum(dl) AS DOUBLE) FROM dl) /
-       |         (SELECT CAST(count(*) AS DOUBLE) FROM documents) AS avgdl,
-       |         (SELECT count(*) FROM documents) AS n),
-       |idf AS (
-       |  SELECT term,
-       |    ${rndSql("ln(1.0 + (n - df + 0.5) / (df + 0.5))", 6)} AS idf,
-       |    avgdl
-       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), stats),
+    s"""WITH ${TA.bm25CtesSql},
        |wfull AS MATERIALIZED (
-       |  SELECT tf.doc_id, tf.term,
-       |    ${rndSql(s"idf.idf * ((tf.tf * $k1p1) / (tf.tf + ${TA.bm25K1} * " +
-                 s"($oneMinusB + ${TA.bm25B} * (CAST(dl.dl AS DOUBLE) / idf.avgdl))))", 6)} AS w
+       |  SELECT tf.doc_id, tf.term, ${TA.bm25WeightSql} AS w
        |  FROM tf JOIN dl USING (doc_id) JOIN idf USING (term)),
        |q AS (
        |  SELECT DISTINCT doc_id AS query_id, term FROM tf
@@ -1348,8 +1231,9 @@ object HybridSearch {
     SimilarityKnn.buildKnnEdges(s, dir)
     def row(tier: String, df: DataFrame,
             dead: org.apache.spark.sql.Column): DataFrame =
+      // an empty index sums to NULL; it has 0 tombstoned entries
       df.agg(count(lit(1)).as("entries_total"),
-          sum(when(dead, 1L).otherwise(0L)).as("entries_tombstoned"))
+          coalesce(sum(when(dead, 1L).otherwise(0L)), lit(0L)).as("entries_tombstoned"))
         .select(lit(tier).as("tier"), $"entries_total",
           $"entries_tombstoned",
           ($"entries_total" - $"entries_tombstoned").as("entries_live"),
@@ -1515,7 +1399,6 @@ object HybridSearch {
     * rerank cut. */
   def searchRerankSql(centGlob: String): String = {
     import graft.functions.Agg.rndSql
-    import graft.operators.{TextAnalysis => TA}
     s"""WITH fusedr AS MATERIALIZED (
        |  SELECT query_id, rank AS prev_rank, doc_id
        |  FROM (${searchHybridRrfSql(centGlob)})),
@@ -1560,7 +1443,6 @@ object HybridSearch {
   def ragPipelineE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    import graft.operators.{Pipeline, TextAnalysis => TA}
     val fusedc = fusedCached(s, dir)
       .groupBy($"query_id").agg(count(lit(1)).as("n_retrieved"))
     val rr = graft.sources.Memo.cached("search_rerank", dir, s)(
@@ -1595,7 +1477,6 @@ object HybridSearch {
     * arithmetic + the running-sum prefix cut, replayed stage for
     * stage. */
   def ragPipelineE2eSql(centGlob: String): String = {
-    import graft.operators.{Pipeline, TextAnalysis => TA}
     s"""WITH rrk AS MATERIALIZED (${searchRerankSql(centGlob)}),
        |fusedc AS (
        |  SELECT query_id, CAST(count(*) AS BIGINT) AS n_retrieved

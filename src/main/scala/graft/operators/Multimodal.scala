@@ -1090,13 +1090,19 @@ object Multimodal {
        |GROUP BY tier ORDER BY tier""".stripMargin
   }
 
-  /** The stream's probe join in batch shape — exposed for PlanSpec's
-    * exchange-free assertion (the index side must never reshuffle).
+  /** The near-dup stream's probe join in batch shape, which PlanSpec
+    * asserts exchange-free (the index side must never reshuffle).
     * Requires [[buildMmNearIndex]] to have run. */
-  private[graft] def mmNearProbePlan(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def mmNearProbePlan(s: SparkSession, dir: String): DataFrame =
+    mmNearProbeOf(s, Tables.documents(s, dir))
+
+  /** The arrival shard of `docs`, signed and banded, joined to the
+    * persisted band index within the same mime: the probe of
+    * `StreamOps.mmNearDupStream` over a stream and of
+    * [[mmNearProbePlan]] over the batch table. */
+  private[graft] def mmNearProbeOf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    val probe = assetsOf(Tables.documents(s, dir)
-        .filter($"doc_id" % mmNearShardMod === mmNearShardRem))
+    val probe = assetsOf(docs.filter($"doc_id" % mmNearShardMod === mmNearShardRem))
       .mapPartitions(_.map(phashOne))
       .toDF("new_id", "new_mime", "new_phash")
       .select($"new_id", $"new_mime", $"new_phash",

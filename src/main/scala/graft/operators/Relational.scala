@@ -1182,20 +1182,18 @@ object Relational {
     * to the storage layout. */
   def qBucketedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    stageBucketedFacts(s, dir)
-    // merge hint, never broadcast: both sides are FACTS at scale —
-    // AQE would happily broadcast orders at test SF and that plan
-    // (a full broadcast of a 10-TB table) dies at 100 TB; SMJ reads
-    // both bucket layouts exchange-free and sort-free
-    s.table("graft_orders_bkt").hint("merge")
-      .join(s.table("graft_lineitem_bkt"), $"o_orderkey" === $"l_orderkey")
+    bucketedJoinPlan(s, dir)
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_items"),
         dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
       .orderBy($"o_orderpriority")
   }
 
-  /** The join alone, exposed for PlanSpec's no-Exchange assertion. */
+  /** [[qBucketedJoin]]'s join, which PlanSpec asserts exchange-free.
+    * Merge hint, never broadcast: both sides are FACTS at scale — AQE
+    * would happily broadcast orders at test SF and that plan (a full
+    * broadcast of a 10-TB table) dies at 100 TB; SMJ reads both bucket
+    * layouts exchange-free and sort-free. */
   private[graft] def bucketedJoinPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     stageBucketedFacts(s, dir)
@@ -1688,13 +1686,7 @@ object Relational {
     * the oracle is the plain unsalted join. */
   def qSkewJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ev = Tables.events(s, dir)
-    val prof = ev.groupBy($"user_id").agg(count(lit(1)).as("n_user"))
-      .withColumn("salt", explode(lit((0 until skewSaltBuckets).toArray)))
-    ev.select($"event_type", $"user_id",
-        pmod(xxhash64($"event_id"), lit(skewSaltBuckets.toLong)).cast("int").as("salt"))
-      .hint("shuffle_hash")
-      .join(prof, Seq("user_id", "salt"))
+    skewJoinPlan(s, dir)
       .withColumn("tier",
         when($"n_user" >= 75, "heavy").when($"n_user" >= 60, "mid").otherwise("light"))
       .groupBy($"event_type", $"tier")
@@ -1702,8 +1694,8 @@ object Relational {
       .orderBy($"event_type", $"tier")
   }
 
-  /** The salted join alone, exposed for PlanSpec (join keys must
-    * include the salt; build side must carry the ×S Generate). */
+  /** [[qSkewJoin]]'s salted join, which PlanSpec checks (join keys
+    * must include the salt; build side must carry the ×S Generate). */
   private[graft] def skewJoinPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{TermWeights => TW}
 import graft.sources.Tables
 
 /** §2.6 Text analysis over the `documents` table — the per-document
@@ -352,13 +353,36 @@ object TextAnalysis {
     7L -> "filter sort group", 8L -> "line order data")
   val searchK = 10
 
+  /** (doc_id, term, tf) of a documents frame under [[toksExpr]]. */
+  private[graft] def docTermCounts(docs: DataFrame): DataFrame =
+    TW.termCounts(docs.select(col("doc_id"), explode(expr(toksExpr)).as("term")), "doc_id")
+
+  /** The corpus's term counts and smoothed TF-IDF idf: (doc_id, term,
+    * tf) and (term, idf), the idf over n = all documents. */
+  private def tfidfOf(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val tf = docTermCounts(Tables.documents(s, dir))
+    val n = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
+    (tf, TW.tfidfIdf(TW.docFreqs(tf), n))
+  }
+
+  /** Oracle CTEs `tf`, `n` and `idf` of [[tfidfOf]]. */
+  private val tfidfCtesSql: String =
+    s"""tf AS (
+       |  SELECT doc_id, t AS term, count(*) AS tf
+       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM documents)
+       |  GROUP BY 1, 2),
+       |n AS (SELECT count(*) AS n FROM documents),
+       |idf AS (
+       |  SELECT term, ${TW.tfidfIdfSql("n.n", "df")} AS idf
+       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), n)""".stripMargin
+
   /** Full-text relevance search: TF-IDF scored top-k documents per
     * keyword query — the "find me training docs about X" primitive.
     *
     * Layout: term frequencies are one partial-aggregated shuffle on
     * (doc, term) — the inverted index; document frequencies reuse
-    * that frame with a second partial agg on the term; idf
-    * (smooth: ln((N+1)/(df+1)) + 1, rounded 1e-6) joins back; the
+    * that frame with a second partial agg on the term; the smoothed
+    * idf ([[graft.functions.TermWeights.tfidfIdf]]) joins back; the
     * bounded query set broadcasts so the posting side never
     * reshuffles for it; per-(query, doc) scores are an exact
     * fixed-point [[graft.functions.Agg.dsum]] (order-independent —
@@ -368,15 +392,8 @@ object TextAnalysis {
     * k rows per partition to the final stage, never the corpus. */
   def textSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.Agg.{dsum, rnd}
-    val tf = Tables.documents(s, dir)
-      .select($"doc_id", explode(expr(toksExpr)).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val n = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
-    val idf = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(n))
-      .select($"term",
-        rnd(log(($"n" + lit(1.0)) / ($"df" + lit(1.0))) + lit(1.0), 6).as("idf"))
+    import graft.functions.Agg.dsum
+    val (tf, idf) = tfidfOf(s, dir)
     val q = broadcast(searchQueries.toDF("query_id", "terms")
       .select($"query_id", explode(split($"terms", " ")).as("term")))
     val scores = tf.join(q, "term").join(idf, "term")
@@ -399,22 +416,15 @@ object TextAnalysis {
     * is the exact double product tf·idf that [[textSearch]] sums, so
     * the indexed path is bit-identical to the from-scratch path. */
   def buildPostingsIndex(s: SparkSession, dir: String,
-                         table: String = searchIndexTable): Unit = {
-    import s.implicits._
-    import graft.functions.Agg.rnd
+                         table: String = searchIndexTable): Unit =
     graft.sources.Sinks.writeBucketedOnce(dir, table,
-        Seq("term"), searchIndexBuckets) {
-      val tf = Tables.documents(s, dir)
-        .select($"doc_id", explode(expr(toksExpr)).as("term"))
-        .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      val n = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
-      val idf = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(n))
-        .select($"term",
-          rnd(log(($"n" + lit(1.0)) / ($"df" + lit(1.0))) + lit(1.0), 6).as("idf"))
-      tf.join(idf, "term")
-        .select($"term", $"doc_id", ($"tf" * $"idf").as("w"))
-    }
+        Seq("term"), searchIndexBuckets)(postingsOf(s, dir))
+
+  /** The postings frame (term, doc_id, w) of [[buildPostingsIndex]]. */
+  private[graft] def postingsOf(s: SparkSession, dir: String): DataFrame = {
+    val (tf, idf) = tfidfOf(s, dir)
+    tf.join(idf, "term")
+      .select(col("term"), col("doc_id"), (col("tf") * col("idf")).as("w"))
   }
 
   /** Query-time search against the persisted index: the term filter
@@ -441,20 +451,16 @@ object TextAnalysis {
       .orderBy($"query_id", $"rank")
   }
 
-  val textSearchSql: String = {
-    import graft.functions.Agg.{dsumSql, rndSql}
-    val qVals = searchQueries.flatMap { case (id, terms) =>
+  /** `VALUES` rows of [[searchQueries]], one per (query, term). */
+  private def searchQueryValuesSql: String =
+    searchQueries.flatMap { case (id, terms) =>
       terms.split(" ").map(t => s"($id, '$t')")
     }.mkString(", ")
-    s"""WITH tf AS (
-       |  SELECT doc_id, t AS term, count(*) AS tf
-       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM documents)
-       |  GROUP BY 1, 2),
-       |n AS (SELECT count(*) AS n FROM documents),
-       |idf AS (
-       |  SELECT term, ${rndSql("ln((n.n + 1.0) / (df + 1.0)) + 1.0", 6)} AS idf
-       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), n),
-       |q(query_id, term) AS (VALUES $qVals),
+
+  val textSearchSql: String = {
+    import graft.functions.Agg.dsumSql
+    s"""WITH $tfidfCtesSql,
+       |q(query_id, term) AS (VALUES $searchQueryValuesSql),
        |scores AS (
        |  SELECT q.query_id, tf.doc_id, ${dsumSql("tf.tf * idf.idf")} AS score
        |  FROM tf JOIN q USING (term) JOIN idf USING (term)
@@ -468,70 +474,21 @@ object TextAnalysis {
        |WHERE rank <= $searchK ORDER BY query_id, rank""".stripMargin
   }
 
-  /** BM25 parameters — the universal defaults (k1 term-frequency
-    * saturation, b length normalization). */
-  val bm25K1 = 1.2
-  val bm25B = 0.75
-
-  /** §2.6 — BM25 relevance search: the production-default ranking
-    * function (what Lucene/Elasticsearch score with) next to 35d's
-    * plain TF-IDF. Same layout as [[textSearch]] — ONE (doc, term)
-    * partial-agg shuffle builds the postings; doc length and the
-    * corpus avgdl derive from that frame (dl is a doc-keyed partial
-    * agg; avgdl is total_tokens/n_docs, an exact integer ratio
-    * broadcast as a scalar); the bounded query set broadcasts. The
-    * BM25 weight idf·(tf·(k1+1))/(tf + k1·(1−b+b·dl/avgdl)) is
-    * written from one shared template on both engines: idf is
-    * 1e-6-quantized after ln (the transcendental), the full weight
-    * 1e-6-quantized before the exact fixed-point sum, so scores are
-    * bit-stable at any parallelism. Top-k per query runs on the
-    * native bounded-heap TopKPerGroup — a query matching the whole
-    * corpus ships k rows per partition, never the corpus. */
-  def textBm25Search(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.Agg.{dsum, rnd}
-    val k1p1 = bm25K1 + 1.0
-    val oneMinusB = 1.0 - bm25B
-    val tf = Tables.documents(s, dir)
-      .select($"doc_id", explode(expr(toksExpr)).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-    val n = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
-    // avgdl = total tokens / total docs: one exact integer division in
-    // double space, identical on both engines (docs with zero tokens
-    // still count in n — BM25's avgdl is corpus-wide)
-    val stats = dl.agg(sum($"dl").as("tot")).crossJoin(broadcast(n))
-      .select(($"tot".cast("double") / $"n".cast("double")).as("avgdl"),
-        $"n")
-    val idf = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(stats))
-      .select($"term",
-        rnd(log(lit(1.0) + ($"n" - $"df" + lit(0.5)) / ($"df" + lit(0.5))), 6)
-          .as("idf"),
-        $"avgdl")
-    val q = broadcast(searchQueries.toDF("query_id", "terms")
-      .select($"query_id", explode(split($"terms", " ")).as("term")))
-    val weighted = tf.join(dl, "doc_id").join(q, "term").join(idf, "term")
-      .select($"query_id", $"doc_id",
-        rnd($"idf" * (($"tf" * lit(k1p1)) /
-          ($"tf" + lit(bm25K1) * (lit(oneMinusB) +
-            lit(bm25B) * ($"dl".cast("double") / $"avgdl")))), 6).as("w"))
-    val scores = weighted.groupBy($"query_id", $"doc_id")
-      .agg(dsum($"w").as("score"))
-    graft.plans.TopK.perGroup(scores, Seq("query_id"),
-        Seq("score" -> true, "doc_id" -> false), searchK)
-      .select($"query_id", $"rank", $"doc_id", $"score")
-      .orderBy($"query_id", $"rank")
+  /** One-row (avgdl, n) BM25 statistics of a documents frame: avgdl =
+    * total tokens / total docs, one exact integer division in double
+    * space, identical on both engines (docs with zero tokens still
+    * count in n — BM25's avgdl is corpus-wide). avgdl is NULL when
+    * the corpus has no term. */
+  private[graft] def bm25DocStats(docs: DataFrame, dl: DataFrame): DataFrame = {
+    val n = docs.agg(count(lit(1)).as("n"))
+    dl.agg(sum(col("dl")).as("tot")).crossJoin(broadcast(n))
+      .select((col("tot").cast("double") / col("n").cast("double")).as("avgdl"), col("n"))
   }
 
-  val textBm25SearchSql: String = {
-    import graft.functions.Agg.{dsumSql, rndSql}
-    val k1p1 = bm25K1 + 1.0
-    val oneMinusB = 1.0 - bm25B
-    val qVals = searchQueries.flatMap { case (id, terms) =>
-      terms.split(" ").map(t => s"($id, '$t')")
-    }.mkString(", ")
-    s"""WITH tf AS (
+  /** Oracle CTEs `tf`, `dl`, `stats` and `idf` of the document-level
+    * BM25 chain over the whole corpus. */
+  private[operators] val bm25CtesSql: String =
+    s"""tf AS (
        |  SELECT doc_id, t AS term, count(*) AS tf
        |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM documents)
        |  GROUP BY 1, 2),
@@ -541,15 +498,50 @@ object TextAnalysis {
        |         (SELECT CAST(count(*) AS DOUBLE) FROM documents) AS avgdl,
        |         (SELECT count(*) FROM documents) AS n),
        |idf AS (
-       |  SELECT term,
-       |    ${rndSql("ln(1.0 + (n - df + 0.5) / (df + 0.5))", 6)} AS idf,
-       |    avgdl
-       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), stats),
-       |q(query_id, term) AS (VALUES $qVals),
+       |  SELECT term, ${TW.bm25IdfSql("n", "df")} AS idf, avgdl
+       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), stats)""".stripMargin
+
+  /** The BM25 weight of the [[bm25CtesSql]] row `tf JOIN dl JOIN idf`. */
+  private[operators] val bm25WeightSql: String =
+    TW.bm25WeightSql("tf.tf", "dl.dl", "idf.idf", "idf.avgdl")
+
+  /** §2.6 — BM25 relevance search: the production-default ranking
+    * function (what Lucene/Elasticsearch score with) next to 35d's
+    * plain TF-IDF. Same layout as [[textSearch]] — ONE (doc, term)
+    * partial-agg shuffle builds the postings; doc length and the
+    * corpus avgdl derive from that frame (dl is a doc-keyed partial
+    * agg; avgdl is total_tokens/n_docs, an exact integer ratio
+    * broadcast as a scalar); the bounded query set broadcasts. The
+    * weight is [[graft.functions.TermWeights.bm25Weight]], quantized
+    * before the exact fixed-point sum, so scores are bit-stable at any
+    * parallelism. Top-k per query runs on the native bounded-heap
+    * TopKPerGroup — a query matching the whole corpus ships k rows per
+    * partition, never the corpus. */
+  def textBm25Search(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import graft.functions.Agg.dsum
+    val tf = docTermCounts(Tables.documents(s, dir))
+    val dl = TW.unitLengths(tf, "doc_id")
+    val idf = TW.bm25Idf(TW.docFreqs(tf), bm25DocStats(Tables.documents(s, dir), dl))
+    val q = broadcast(searchQueries.toDF("query_id", "terms")
+      .select($"query_id", explode(split($"terms", " ")).as("term")))
+    val weighted = tf.join(dl, "doc_id").join(q, "term").join(idf, "term")
+      .select($"query_id", $"doc_id",
+        TW.bm25Weight($"tf", $"dl", $"idf", $"avgdl").as("w"))
+    val scores = weighted.groupBy($"query_id", $"doc_id")
+      .agg(dsum($"w").as("score"))
+    graft.plans.TopK.perGroup(scores, Seq("query_id"),
+        Seq("score" -> true, "doc_id" -> false), searchK)
+      .select($"query_id", $"rank", $"doc_id", $"score")
+      .orderBy($"query_id", $"rank")
+  }
+
+  val textBm25SearchSql: String = {
+    import graft.functions.Agg.dsumSql
+    s"""WITH $bm25CtesSql,
+       |q(query_id, term) AS (VALUES $searchQueryValuesSql),
        |weighted AS (
-       |  SELECT q.query_id, tf.doc_id,
-       |    ${rndSql(s"idf.idf * ((tf.tf * $k1p1) / (tf.tf + $bm25K1 * " +
-                     s"($oneMinusB + $bm25B * (CAST(dl.dl AS DOUBLE) / idf.avgdl))))", 6)} AS w
+       |  SELECT q.query_id, tf.doc_id, $bm25WeightSql AS w
        |  FROM tf JOIN dl USING (doc_id) JOIN q USING (term)
        |    JOIN idf USING (term)),
        |scores AS (
@@ -581,14 +573,7 @@ object TextAnalysis {
   def corpusKeywords(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Agg.rnd
-    val tf = Tables.documents(s, dir)
-      .select($"doc_id", explode(expr(toksExpr)).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val n = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
-    val idf = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(n))
-      .select($"term",
-        rnd(log(($"n" + lit(1.0)) / ($"df" + lit(1.0))) + lit(1.0), 6).as("idf"))
+    val (tf, idf) = tfidfOf(s, dir)
     val scored = tf.join(idf, "term")
       .select($"doc_id", $"term", rnd($"tf" * $"idf", 6).as("score"))
     graft.plans.TopK.perGroup(scored, Seq("doc_id"),
@@ -599,14 +584,7 @@ object TextAnalysis {
 
   val corpusKeywordsSql: String = {
     import graft.functions.Agg.rndSql
-    s"""WITH tf AS (
-       |  SELECT doc_id, t AS term, count(*) AS tf
-       |  FROM (SELECT doc_id, unnest($duckToks) AS t FROM documents)
-       |  GROUP BY 1, 2),
-       |n AS (SELECT count(*) AS n FROM documents),
-       |idf AS (
-       |  SELECT term, ${rndSql("ln((n.n + 1.0) / (df + 1.0)) + 1.0", 6)} AS idf
-       |  FROM (SELECT term, count(*) AS df FROM tf GROUP BY 1), n),
+    s"""WITH $tfidfCtesSql,
        |scored AS (
        |  SELECT doc_id, term, ${rndSql("tf.tf * idf.idf", 6)} AS score
        |  FROM tf JOIN idf USING (term)),
@@ -759,17 +737,13 @@ object TextAnalysis {
     * total-order tiebreak. */
   def textCosinePairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.Agg.{quantize, rnd, rndSql}
+    import graft.functions.Agg.{quantize, rndSql}
     val ex = Tables.documents(s, dir)
       .withColumn("toks", expr(toksExpr))
       .filter(size($"toks") >= 3)
       .select($"doc_id", explode(expr("graft_shingles(toks)")).as("term"))
     val n = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
-    val idf = ex.groupBy($"term").agg(count(lit(1)).as("df"))
-      .filter($"df" <= cosineDfCap)
-      .crossJoin(broadcast(n))
-      .select($"term",
-        rnd(log(($"n" + lit(1.0)) / ($"df" + lit(1.0))) + lit(1.0), 6).as("idf"))
+    val idf = TW.tfidfIdf(TW.docFreqs(ex).filter($"df" <= cosineDfCap), n)
     val w = ex.join(idf, "term")
     val norms = w.groupBy($"doc_id")
       .agg(sqrt(sum(quantize($"idf" * $"idf", 4).cast("long")).cast("double") / lit(10000.0))
@@ -799,7 +773,7 @@ object TextAnalysis {
        |ex AS (SELECT doc_id, unnest(shingles) AS term FROM sh),
        |n AS (SELECT count(*) AS n FROM documents),
        |idf AS (
-       |  SELECT term, ${rndSql("ln((n.n + 1.0) / (df + 1.0)) + 1.0", 6)} AS idf
+       |  SELECT term, ${TW.tfidfIdfSql("n.n", "df")} AS idf
        |  FROM (SELECT term, count(*) AS df FROM ex GROUP BY 1
        |        HAVING count(*) <= $cosineDfCap), n),
        |w AS (SELECT ex.doc_id, ex.term, idf.idf FROM ex JOIN idf USING (term)),

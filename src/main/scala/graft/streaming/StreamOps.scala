@@ -562,17 +562,7 @@ object StreamOps {
     import s.implicits._
     import graft.operators.Multimodal
     Multimodal.buildMmNearIndex(s, dir)
-    val incoming = Multimodal.assetsOf(
-        StreamAcc.fileStream(s, dir, "documents")
-          .filter($"doc_id" % Multimodal.mmNearShardMod === Multimodal.mmNearShardRem))
-      .mapPartitions(_.map(Multimodal.phashOne))
-      .toDF("new_id", "new_mime", "new_phash")
-    val probe = incoming.select($"new_id", $"new_mime", $"new_phash",
-        posexplode(expr(s"transform(sequence(0, ${Multimodal.mmNearBands - 1}), b -> (new_phash >> (b * 16)) & 65535L)")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    s.table(Multimodal.mmNearIndexTable).as("i").join(probe.as("p"),
-        $"i.band" === $"p.band" && $"i.bucket" === $"p.bucket" &&
-          $"i.mime" === $"p.new_mime")
+    Multimodal.mmNearProbeOf(s, StreamAcc.fileStream(s, dir, "documents"))
       .select($"i.asset_id".as("corpus_id"), $"p.new_id".as("new_id"),
         $"i.mime".as("mime"),
         bit_count($"i.phash".bitwiseXOR($"p.new_phash")).cast("long").as("hamming"))
@@ -1480,13 +1470,11 @@ object StreamOps {
     * hash-checked. */
   def runBm25IngestToCompletion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.Agg.rnd
+    import graft.functions.{TermWeights => TW}
     import graft.operators.{Dedup, HybridSearch => HS, TextAnalysis => TA}
-    val idfSnap = HS.rebuildBm25StreamBase(s, dir)
-    val avgdl = idfSnap.select($"avgdl").limit(1).collect()(0).getDouble(0)
-    val unseen = HS.bm25UnseenIdf(s, dir)
-    val k1p1 = TA.bm25K1 + 1.0
-    val oneMinusB = 1.0 - TA.bm25B
+    val (idfSnap, snap) = HS.rebuildBm25StreamBase(s, dir)
+    // the snapshot's avgdl (NULL when the corpus has no term) and df = 0 idf
+    val (avgdl, unseen) = (lit(snap.get(0)), lit(snap.get(1)))
     val idfBc = broadcast(idfSnap.select($"term", $"idf"))
     val arriving = StreamAcc.fileStream(s, dir, "documents")
       .filter($"doc_id" % Dedup.incrementalShardMod === Dedup.incrementalShardRem)
@@ -1495,17 +1483,11 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // a document is ONE arriving row, so its tf/dl are complete
         // within whatever micro-batch carries it — no cross-batch state
-        val tf = batch
-          .select($"doc_id", explode(expr(TA.toksExpr)).as("term"))
-          .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-        val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-        tf.join(dl, "doc_id")
+        val tf = TA.docTermCounts(batch)
+        tf.join(TW.unitLengths(tf, "doc_id"), "doc_id")
           .join(idfBc, Seq("term"), "left")
           .select($"term", $"doc_id",
-            rnd(coalesce($"idf", lit(unseen)) * (($"tf" * lit(k1p1)) /
-              ($"tf" + lit(TA.bm25K1) * (lit(oneMinusB) +
-                lit(TA.bm25B) * ($"dl".cast("double") / lit(avgdl))))), 6)
-              .as("w"))
+            TW.bm25Weight($"tf", $"dl", coalesce($"idf", unseen), avgdl).as("w"))
           .write
           .bucketBy(HS.bm25IndexBuckets, "term")
           .sortBy("term")

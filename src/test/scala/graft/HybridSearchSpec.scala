@@ -339,6 +339,19 @@ class HybridSearchSpec extends SparkSpec {
     assert(rows("minhash_bands")._1 == sigs * graft.operators.Dedup.bands)
   }
 
+  test("lifecycle report over empty indexes counts 0 tombstoned and 0 live entries") {
+    val s = spark
+    val d = java.nio.file.Files.createTempDirectory("graft-lifecycle-empty").toString
+    graft.sources.Tables.documents(s, sfDir).limit(0).write.parquet(s"$d/documents.parquet")
+    graft.sources.Tables.embeddings(s, sfDir).limit(0).write.parquet(s"$d/embeddings.parquet")
+    val rows = HybridSearch.indexLifecycleReport(s, d).collect()
+    assert(rows.length == 4)
+    rows.foreach { r =>
+      assert((1 to 4).forall(i => !r.isNullAt(i)), s"NULL in $r")
+      assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)) == ((0L, 0L, 0L, 0.0)), s"$r")
+    }
+  }
+
   private def retractModStr = HybridSearch.retractMod.toString
 
   test("rerank: subset of the fused pool, scores recomputed independently, batched forward passes") {

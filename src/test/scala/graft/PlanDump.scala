@@ -4,13 +4,15 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: dump `.explain("formatted")` for named queries to
   * plans/<tag>/<name>_<suffix>.txt (the optimization-round evidence
   * files). Usage:
-  *   sbt "Test/runMain graft.PlanDump <tag> <suffix> <query> [query...]"
+  *   sbt "Test/runMain graft.PlanDump <tag> <suffix> [query...]"
+  * (no query: every key in `SparkEntry.queries`).
   * e.g. `Test/runMain graft.PlanDump r13 before graph_pagerank`.
   * Data dir from SPARK_GRAFT_SF_DIR (default sf0.1) so the plan is the
   * bench-scale plan. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val tag = args(0); val suffix = args(1); val names = args.drop(2).toSeq
+    val tag = args(0); val suffix = args(1)
+    val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.tune(SparkSession.builder().master("local[8]"), 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -18,7 +18,6 @@ object StageDump {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)
-    import org.apache.spark.sql.functions._
     def stage(n: String): DataFrame = n match {
       case "dedup_jaccard_prefix_cand" =>
         // the candidate stage, built over the pinned doc-array frame
@@ -30,27 +29,16 @@ object StageDump {
         // clustersOfEdges loop builds it (requires the index build)
         graft.operators.Dedup.buildEmbedClusterIndex(spark, dir)
         graft.operators.Dedup.clusterRoundPlan(spark)
-      case "cluster_round_r13" =>
-        // the round-13 loop body verbatim (edge⋈label join, union-min,
-        // pointer jump, prev-join changed flag) over the persisted
-        // embed-cluster edge index — kept inline so the before-plan can
-        // be dumped against any tree
-        graft.operators.Dedup.buildEmbedClusterIndex(spark, dir)
-        val edges = spark.table(graft.operators.Dedup.embedClusterIndexTable)
-        val labels = edges.select(col("src").as("doc_id")).distinct()
-          .withColumn("label", col("doc_id")).localCheckpoint(true)
-        val prop = edges.join(labels.withColumnRenamed("doc_id", "src"), "src")
-          .select(col("dst").as("doc_id"), col("label"))
-        val minned = labels.union(prop).groupBy(col("doc_id"))
-          .agg(min(col("label")).as("label"))
-        val jumped = minned.join(
-            minned.select(col("doc_id").as("label"), col("label").as("jump")),
-            Seq("label"))
-          .select(col("doc_id"), col("jump").as("label"))
-        jumped
-          .join(labels.select(col("doc_id"), col("label").as("prev_label")), "doc_id")
-          .withColumn("chg", col("label") =!= col("prev_label"))
-          .select(col("doc_id"), col("label"), col("chg"))
+      case "tfidf_postings" =>
+        // the TF-IDF postings text_search_indexed persists
+        graft.operators.TextAnalysis.postingsOf(spark, dir)
+      case "bm25_postings" =>
+        // the BM25 postings the hybrid keys persist
+        graft.operators.HybridSearch.bm25PostingsOf(spark,
+          graft.sources.Tables.documents(spark, dir))
+      case "bm25_chunk_postings" =>
+        // the chunk postings search_chunk_hybrid persists
+        graft.operators.HybridSearch.bm25ChunkPostingsOf(spark, dir)
       case other =>
         // fall back to a registered query's surface plan
         SparkEntry.queries(other)(spark, dir)

@@ -723,4 +723,19 @@ class StreamOpsSpec extends SparkSpec {
     // unchanged users never see the synthetic segment
     assert(out.filter(_._2 % 7 != 3).forall(_._4 != "MACHINERY-2"))
   }
+
+  test("stream bm25 ingest over a corpus with no term returns the oracle's empty answer") {
+    val s = spark
+    import org.apache.spark.sql.functions.lit
+    val docs = graft.sources.Tables.documents(s, sfDir)
+    def probeRows(rows: org.apache.spark.sql.DataFrame): Long = {
+      val d = java.nio.file.Files.createTempDirectory("graft-bm25-noterm").toString
+      rows.coalesce(1).write.parquet(s"$d/documents.parquet")
+      StreamOps.runBm25IngestToCompletion(s, d).count()
+    }
+    // streamBm25IngestSql has no tf row in either case, so no result row
+    assert(probeRows(docs.limit(0)) == 0, "empty documents table")
+    assert(probeRows(docs.limit(20).withColumn("text", lit(null).cast("string"))) == 0,
+      "documents whose text yields no token")
+  }
 }
