@@ -593,10 +593,10 @@ object HybridSearch {
     * the frozen snapshot statistics the stream's router prices
     * arriving postings with: the (term, idf) frame and the one row
     * (avgdl, unseen-term idf). df/avgdl/N are corpus statistics, so
-    * arriving docs CANNOT update them row-locally — they stay snapshot values
-    * until the periodic rebuild, exactly the IVF-centroid staleness
-    * contract, and the documented delta vs a batch rebuild on the
-    * union. */
+    * arriving docs CANNOT update them row-locally — they stay
+    * snapshot values until the periodic rebuild, exactly the
+    * IVF-centroid staleness contract, and the documented delta vs a
+    * batch rebuild on the union. */
   private[graft] def rebuildBm25StreamBase(s: SparkSession, dir: String): (DataFrame, Row) = {
     val (tf, idf, snap) = bm25StreamStats(s, dir)
     graft.sources.Sinks.writeBucketed(
@@ -611,15 +611,14 @@ object HybridSearch {
     * statistics frame, which exists even when the corpus has no term
     * (avgdl is then NULL). A term the snapshot never saw takes the
     * df = 0 idf. All three are pure functions of the corpus file, so
-    * repeated gate
-    * runs in one session reuse the checkpointed frames instead of
-    * re-tokenizing the corpus — while the fingerprint key (file
-    * count/bytes/mtime, the buildSpanIndex device) makes a documents
-    * dir that GAINS files between runs recompute instead of serving a
-    * stale snapshot. The TABLE rewrite in [[rebuildBm25StreamBase]]
-    * stays unconditional:
-    * that is the run-scoped contract (rebuild + append exactly once),
-    * not a statistic. */
+    * repeated gate runs in one session reuse the checkpointed frames
+    * instead of re-tokenizing the corpus — while the fingerprint key
+    * (file count/bytes/mtime, the buildSpanIndex device) makes a
+    * documents dir that GAINS files between runs recompute instead of
+    * serving a stale snapshot. The TABLE rewrite in
+    * [[rebuildBm25StreamBase]] stays unconditional: that is the
+    * run-scoped contract (rebuild + append exactly once), not a
+    * statistic. */
   private def bm25StreamStats(s: SparkSession, dir: String): (DataFrame, DataFrame, Row) =
     graft.sources.Memo("hybrid.bm25_stats",
         graft.sources.Sinks.dirFingerprint(s"$dir/documents.parquet"), s) {

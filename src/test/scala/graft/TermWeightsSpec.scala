@@ -13,8 +13,8 @@ class TermWeightsSpec extends SparkSpec {
 
   test("engine and SQL forms give the same weights, and the policy's values") {
     val s = spark; import s.implicits._
-    val rows = Seq((10L, 3L, 2L, 7L, 5.5), (10L, 0L, 1L, 1L, 5.5), (1L, 1L, 4L, 9L, 2.25))
-      .toDF("n", "df", "tf", "dl", "avgdl")
+    val cases = Seq((10L, 3L, 2L, 7L, 5.5), (10L, 0L, 1L, 1L, 5.5), (1L, 1L, 4L, 9L, 2.25))
+    val rows = cases.toDF("n", "df", "tf", "dl", "avgdl")
       .select(
         TW.bm25Idf($"n", $"df").as("idf_col"),
         expr(TW.bm25IdfSql("n", "df")).as("idf_sql"),
@@ -25,8 +25,7 @@ class TermWeightsSpec extends SparkSpec {
     val tfidfCol = TW.tfidfIdf(Seq(("a", 3L), ("b", 0L), ("c", 1L)).toDF("term", "df"),
         Seq(10L).toDF("n"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val expect = Seq((10L, 3L, 2L, 7L, 5.5), (10L, 0L, 1L, 1L, 5.5), (1L, 1L, 4L, 9L, 2.25))
-    rows.zip(expect).foreach { case (r, (n, df, tf, dl, avgdl)) =>
+    rows.zip(cases).foreach { case (r, (n, df, tf, dl, avgdl)) =>
       val idf = q6(StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5)))
       val w = q6(idf * ((tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * (dl.toDouble / avgdl)))))
       assert(r.getDouble(0) == idf && r.getDouble(1) == idf)
